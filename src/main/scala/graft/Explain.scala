@@ -40,9 +40,9 @@ object Explain {
     dotDir.foreach(d => println(s"=== UCT DOT tree snapshots written under $d ==="))
     // runtime switching only shows itself on execution (AQE stage
     // boundaries), so run the query and report any mid-query re-order
-    graft.plans.RuntimeOrderSwitchRule.lastSwitch = None
+    graft.plans.RuntimeOrderSwitchRule.clearLog()
     df.queryExecution.toRdd.foreach(_ => ())
-    graft.plans.RuntimeOrderSwitchRule.lastSwitch match {
+    graft.plans.RuntimeOrderSwitchRule.recentSwitches.lastOption match {
       case Some(s) =>
         println(s"=== runtime switch: ${s.nrRelations} relations re-ordered " +
           s"mid-query to ${s.order.mkString("[", ",", "]")} " +

@@ -148,29 +148,19 @@ object Rank {
       GraftShims.expression(struct(sorts.map(_.child): _*)), bucketer))
   }
 
-  /** `keyFrame`, when non-null, is a caller-persisted NARROW projection of
-    * `df` carrying exactly the order-key columns (same names, same row
-    * multiset): the boundary sample and the bucket counts then read the
-    * cached blocks instead of re-running the key-pruned lineage twice —
-    * the final rank still runs the full lineage once. Evaluated for
-    * VERDICT r15 #8 (DebugScale rankpersist); the caller owns persist()
-    * and unpersist(), keeping the operator itself free of CacheManager
-    * entries. */
   def atScale(df: DataFrame, orderCols: Seq[Column], out: String = "r",
-              totalOut: String = "", partitions: Int = 0,
-              keyFrame: DataFrame = null): DataFrame = {
+              totalOut: String = "", partitions: Int = 0): DataFrame = {
     require(orderCols.nonEmpty, "rank needs at least one order column")
     val p = if (partitions > 0) partitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
     val sorts = keysOf(orderCols)
-    val keySource = if (keyFrame != null) keyFrame else df
-    val bucket = bucketCol(keySource, sorts, p)
+    val bucket = bucketCol(df, sorts, p)
     val bucketed = df.withColumn("__pid", bucket)
     // prefix offsets: ≤ overFactor·p rows, so the global cumulative window
     // runs over a BOUNDED axis (the plan-hygiene contract for global
     // windows); empty buckets simply have no row and contribute 0. The
     // aggregate runs map-side partial over the key-pruned lineage.
-    val counts = keySource.withColumn("__pid", bucket)
+    val counts = bucketed
       .groupBy("__pid").agg(count(lit(1)).as("__cnt"))
     val offsets = counts
       .withColumn("__off", coalesce(sum(col("__cnt")).over(

@@ -323,18 +323,14 @@ object Leapfrog {
     * partitions (SampleStore's estimator): a hot value clustered into the
     * LAST partitions of a sorted layout still reaches the sample because
     * the partition subset is chosen uniformly at random, not as a prefix.
-    * The scan itself is bounded to `spark.graft.uct.samplePartitions`
-    * partitions (default 64), so the visibility guarantee is probabilistic
-    * past that: a hitter confined to a FEW of many partitions can be
-    * missed — the residual risk any bounded probe carries, priced against
-    * flat plan-time IO. Where it matters, widen the scan via that knob or
-    * disable routing for the query (`spark.graft.wcoj.enabled=false`). */
-  private def sampleRows(df: DataFrame, n: Int): Array[Row] = {
-    val maxParts = df.sparkSession.conf
-      .get("spark.graft.uct.samplePartitions", "64").toInt
-    SampleStore.interleavedSample(df.rdd, n, seed = 727L, head = false,
-      maxParts = maxParts)
-  }
+    * The scan itself is bounded to `SampleStore.maxSamplePartitions` (64)
+    * partitions, so the visibility guarantee is probabilistic past that: a
+    * hitter confined to a FEW of many partitions can be missed — the
+    * residual risk any bounded probe carries, priced against flat plan-time
+    * IO. Where it matters, disable routing for the query
+    * (`spark.graft.wcoj.enabled=false`). */
+  private def sampleRows(df: DataFrame, n: Int): Array[Row] =
+    SampleStore.interleavedSample(df.rdd, n, seed = 727L, head = false)
 
   /** Type-general entry point: variables of ANY orderable Spark type.
     * Integral variables run through `join` directly; every other type

@@ -16,8 +16,8 @@ import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
   * leaves carrying EXACT observed statistics. This rule is injected into
   * that re-optimization (`injectRuntimeOptimizerRule`): when the observed
   * sizes show the not-yet-executed join prefix is misordered by at least
-  * `spark.graft.uct.runtimeSwitchFactor` (default 4×), it rebuilds the
-  * remaining joins smallest-connected-first — measured cardinality replaces
+  * `switchFactor` (4×), it rebuilds the remaining joins
+  * smallest-connected-first — measured cardinality replaces
   * the sample-based estimate the moment it exists, which is strictly better
   * information than another search episode.
   *
@@ -33,17 +33,8 @@ final class RuntimeOrderSwitchRule(spark: SparkSession)
   private def enabled: Boolean =
     spark.conf.get("spark.graft.uct.runtimeSwitch", "true").toBoolean
 
-  private def factor: Double =
-    spark.conf.get("spark.graft.uct.runtimeSwitchFactor", "4.0").toDouble
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
-    if (spark.conf.get("spark.graft.uct.runtimeSwitchDebug", "false").toBoolean) {
-      val joins = plan.collect { case j: Join => j }.size
-      val stages = plan.collect { case q: LogicalQueryStage => q }.size
-      System.err.println(s"RULE apply joins=$joins stages=$stages\n" +
-        plan.treeString.linesIterator.map(_.take(140)).take(40).mkString("\n"))
-    }
     plan.transformDown {
       case j: Join if j.resolved =>
         try switch(j).getOrElse(j)
@@ -105,14 +96,12 @@ final class RuntimeOrderSwitchRule(spark: SparkSession)
       // of individually-sub-threshold misplacements whose product is a
       // disaster must still switch. The authored (possibly UCT-learned)
       // order is abandoned only when the greedy order's cumulative
-      // prefix-product advantage exceeds `factor`.
-      if (!RuntimeOrderSwitchRule.shouldSwitch(identity, greedy, sizes, factor)) {
+      // prefix-product advantage exceeds `switchFactor`.
+      if (!shouldSwitch(identity, greedy, sizes, switchFactor)) {
         probe("below-factor"); return None
       }
       probe("fired")
-      lastSwitch = Some(SwitchStats(graph.leaves.size, greedy,
-        sizes.map(_.toLong)))
-      record(lastSwitch.get)
+      record(SwitchStats(graph.leaves.size, greedy, sizes.map(_.toLong)))
       logInfo(s"graft runtime order switch over ${graph.leaves.size} leaves: " +
         s"$greedy (observed sizes ${sizes.mkString(", ")})")
       Some(Project(graph.originalOutput, graph.buildLeftDeep(greedy)))
@@ -121,6 +110,11 @@ final class RuntimeOrderSwitchRule(spark: SparkSession)
 }
 
 object RuntimeOrderSwitchRule {
+
+  /** Minimum cumulative advantage (see [[shouldSwitch]]) the greedy order
+    * needs over the authored, possibly UCT-learned, order before the rule
+    * abandons it; smaller advantages keep the authored order. */
+  private val switchFactor = 4.0
 
   /** Greedy smallest-connected-first order over observed/estimated sizes —
     * the reference's intuition (start from the most selective relation)
@@ -186,7 +180,6 @@ object RuntimeOrderSwitchRule {
     logScore(authored, sizes) - logScore(greedy, sizes) >= math.log(factor)
 
   final case class SwitchStats(nrRelations: Int, order: Seq[Int], sizes: Seq[Long])
-  @volatile var lastSwitch: Option[SwitchStats] = None
 
   /** One rule evaluation over an extracted join graph: width, how many
     * leaves are already AQE stages, and the decision taken. Bounded log,
@@ -205,11 +198,11 @@ object RuntimeOrderSwitchRule {
     probeLog.asScala.toSeq
   }
 
-  /** Bounded log of recent switches. A single execution can legitimately
-    * switch several times — AQE folds each finished join into a stage leaf,
-    * so later re-optimizations see progressively NARROWER graphs and
-    * lastSwitch alone only remembers the final (narrowest) fire. Gates that
-    * assert a wide switch read the log. */
+  /** Bounded log of recent switches, cleared with [[clearLog]]. A single
+    * execution can legitimately switch several times — AQE folds each
+    * finished join into a stage leaf, so later re-optimizations see
+    * progressively NARROWER graphs; `recentSwitches.lastOption` is the final
+    * (narrowest) fire, and gates that assert a wide switch scan the log. */
   private val log =
     new java.util.concurrent.ConcurrentLinkedQueue[SwitchStats]()
 

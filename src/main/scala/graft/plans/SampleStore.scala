@@ -31,9 +31,9 @@ final case class LeafSample(
   * measuring real-data progress (OldJoin.java:92-106). The reservoir pass
   * reads its whole (already filter-pushed, column-pruned) partition but
   * collects only perPart rows per partition to the driver, and the SCAN
-  * itself is bounded too: at most `spark.graft.uct.samplePartitions`
-  * (default 64) seeded-randomly-chosen partitions are ever scheduled, so
-  * plan-time IO stays flat however large the leaf is. Set
+  * itself is bounded too: at most `maxSamplePartitions` (64) seeded-
+  * randomly-chosen partitions are ever scheduled, so plan-time IO stays
+  * flat however large the leaf is. Set
   * `spark.graft.uct.sampleMode=head` to opt back into the cheap prefix
   * take when plan-time scan cost matters more than sample fidelity.
   * Samples stay deterministic in both modes: the seed is fixed per
@@ -58,25 +58,28 @@ object SampleStore {
 
   /** Bounded LRU: canonicalized-plan keys embed filter literals, so unbounded
     * growth (sampleSize rows + retained plan per entry) would leak driver
-    * memory across a long session of distinct constants. Seed, mode, and
-    * the partition bound are part of the key — switching
-    * `spark.graft.uct.sampleMode` or `…samplePartitions` mid-session must
-    * not silently serve samples taken under the other setting.
+    * memory across a long session of distinct constants. Seed and mode are
+    * part of the key — switching `spark.graft.uct.sampleMode` mid-session
+    * must not silently serve samples taken under the other setting.
     *
     * Sizing: the r10 judge measured ~1,000+ distinct (filtered-leaf, attrs)
     * keys across the 113-query JOB sweep — far past the old 256-entry bound,
     * so the sweep evicted its own working set and pass2 re-scanned leaves
-    * pass1 had already sampled. Default is now 2048 (an entry is ~100–200 KB
+    * pass1 had already sampled. Hence 2048 entries (an entry is ~100–200 KB
     * at sampleSize 1024: worst case ~400 MB driver memory, acceptable on any
-    * driver sized for a 113-query analytical session), tunable via
-    * `spark.graft.uct.sampleCacheEntries`. */
-  @volatile private var maxEntries = 2048
+    * driver sized for a 113-query analytical session). */
+  private val maxEntries = 2048
   private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(LogicalPlan, Long, String, Int), PosSample](64, 0.75f, true) {
+    new java.util.LinkedHashMap[(LogicalPlan, Long, String), PosSample](64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(LogicalPlan, Long, String, Int), PosSample]): Boolean =
+          e: java.util.Map.Entry[(LogicalPlan, Long, String), PosSample]): Boolean =
         this.size() > maxEntries
     })
+
+  /** Upper bound on the partitions one sample scan schedules (see
+    * [[interleavedSample]]): plan-time IO stays flat however large the
+    * leaf. Shared with `Leapfrog`'s skew sampler. */
+  private[plans] val maxSamplePartitions = 64
 
   /** Striped locks making the miss path atomic PER KEY: UctJoinReorderRule
     * samples leaves from concurrent Futures, and without the stripe two
@@ -87,7 +90,7 @@ object SampleStore {
     * scans, never corrupt); one stripe per key would pin the retained
     * canonical plans the LRU bound exists to cap. */
   private val lockStripes = Array.fill(64)(new Object)
-  private def stripeFor(key: (LogicalPlan, Long, String, Int)): Object =
+  private def stripeFor(key: (LogicalPlan, Long, String)): Object =
     lockStripes(math.floorMod(key.hashCode, lockStripes.length))
 
   /** Plan-time sampling telemetry (driver-side, test/bench attribution): how
@@ -188,11 +191,13 @@ object SampleStore {
       Some(digests.mkString("|"))
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** The payload includes the partition bound, so entries written under a
+    * different bound never match. */
   private def diskKey(leaf: LogicalPlan, seed: Long, mode: String,
-      maxParts: Int, sampleSize: Int, fp: String): String = {
+      sampleSize: Int, fp: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val payload = Seq(diskFormatVersion, leaf.canonicalized.toString,
-      seed, mode, maxParts, sampleSize, fp).mkString("\u0000")
+      seed, mode, maxSamplePartitions, sampleSize, fp).mkString("\u0000")
     val key = md.digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString
     if (sys.env.contains("SPARK_GRAFT_SAMPLE_DEBUG"))
       try java.nio.file.Files.writeString(
@@ -278,28 +283,27 @@ object SampleStore {
     */
   private[plans] def interleavedSample(
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-      n: Int, seed: Long, head: Boolean,
-      maxParts: Int = 64): Array[org.apache.spark.sql.Row] = {
+      n: Int, seed: Long, head: Boolean): Array[org.apache.spark.sql.Row] = {
     val allParts = math.max(rdd.getNumPartitions, 1)
     // bound the plan-time SCAN, not just the collect: the reservoir pass
     // consumes its whole partition iterator, so over a 100 TB leaf an
     // unpruned pass would read every filtered partition before the query
-    // even starts. Sample a SEEDED RANDOM SUBSET of ≤maxParts partitions
-    // (PartitionPruningRDD — unselected partitions are never scheduled,
+    // even starts. Sample a SEEDED RANDOM SUBSET of ≤maxSamplePartitions
+    // partitions (PartitionPruningRDD — unselected ones are never scheduled,
     // capping plan-time IO) and reservoir within those; a random subset
     // keeps cross-range coverage on sorted/clustered layouts, unlike a
     // prefix of partitions which would reinstate the head bias one level
     // up.
     // Trade-off stated plainly: with a uniform subset, a value confined to
-    // k of P partitions is missed with probability ~(1-maxParts/P)^k — a
+    // k of P partitions is missed with probability ~(1-64/P)^k — a
     // hitter SPREAD across partitions (the common hot-key layout) is
     // essentially always seen, one hidden in a single fat partition may
-    // not be. Raising maxParts buys certainty with plan-time IO.
+    // not be. Raising the bound buys certainty with plan-time IO.
     val sampled =
-      if (allParts <= maxParts) rdd
+      if (allParts <= maxSamplePartitions) rdd
       else {
         val keep = new scala.util.Random(seed)
-          .shuffle((0 until allParts).toVector).take(maxParts).toSet
+          .shuffle((0 until allParts).toVector).take(maxSamplePartitions).toSet
         org.apache.spark.rdd.PartitionPruningRDD.create(rdd, keep.contains)
       }
     val nParts = math.max(sampled.getNumPartitions, 1)
@@ -346,11 +350,7 @@ object SampleStore {
   def sample(spark: SparkSession, leaf: LogicalPlan,
              attrs: Seq[AttributeReference], sampleSize: Int,
              seed: Long = 42L, mode: String = "reservoir"): LeafSample = {
-    val maxParts = spark.conf
-      .get("spark.graft.uct.samplePartitions", "64").toInt
-    maxEntries = spark.conf
-      .get("spark.graft.uct.sampleCacheEntries", "2048").toInt
-    val key = (leaf.canonicalized, seed, mode, maxParts)
+    val key = (leaf.canonicalized, seed, mode)
     val wanted: Seq[Attribute] =
       if (attrs.nonEmpty) attrs else leaf.output.take(1)
     val wantedPos = wanted.map(a => leaf.output.indexWhere(_.exprId == a.exprId))
@@ -383,7 +383,7 @@ object SampleStore {
       val diskCtx: Option[(java.nio.file.Path, String)] = for {
         dir <- resolveDiskDir(spark)
         fp <- fileFingerprint(leaf)
-      } yield (dir, diskKey(leaf, seed, mode, maxParts, sampleSize, fp))
+      } yield (dir, diskKey(leaf, seed, mode, sampleSize, fp))
       // partial memory entry ⇒ skip the load (the rescan below widens and
       // rewrites the disk entry anyway)
       val diskCached: Option[PosSample] =
@@ -435,7 +435,7 @@ object SampleStore {
         .ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.Project(projAttrs, leaf))
       val t0 = System.nanoTime()
       val rows =
-        interleavedSample(proj.rdd, sampleSize, seed, mode == "head", maxParts)
+        interleavedSample(proj.rdd, sampleSize, seed, mode == "head")
       scanCountA.incrementAndGet()
       scanNanosA.addAndGet(System.nanoTime() - t0)
       val cols = allPos.zipWithIndex.map { case (p, i) =>

@@ -37,7 +37,7 @@ final class UctJoinOrder(
     var rewardSum = 0.0
     val children = mutable.Map.empty[Int, Node]
   }
-  private var root = new Node
+  private val root = new Node
   var nodesCreated = 1
   var episodes = 0
   private val orderRewards = mutable.Map.empty[List[Int], (Double, Int)]
@@ -49,30 +49,16 @@ final class UctJoinOrder(
     if (conn.nonEmpty) conn else unbound // Cartesian only as a last resort
   }
 
-  /** Exploration-policy selection among fully-expanded children — the
-    * reference's policy menu (SelectionPolicy.java:1-17, chosen via
-    * JoinConfig.DEFAULT_SELECTION, /root/reference/src/config/JoinConfig
-    * .java:28-49): UCB1 (default), epsilon-greedy, pure exploitation (max),
-    * uniform random.
-    */
-  private def select(parent: Node, cand: Seq[Int]): Int = {
-    val unvisited = cand.filterNot(parent.children.contains)
-    if (unvisited.nonEmpty) return unvisited(rnd.nextInt(unvisited.length))
-    def mean(c: Int): Double = {
-      val ch = parent.children(c); ch.rewardSum / ch.visits
+  /** UCB1 selection among fully-expanded children — the reference's default
+    * selection policy (JoinConfig.DEFAULT_SELECTION). Only UCB1 is built:
+    * the reference's epsilon-greedy/max/random menu and its tree forgetting
+    * are a documented deviation (docs/COVERAGE.md). */
+  private def select(parent: Node, cand: Seq[Int]): Int =
+    cand.maxBy { c =>
+      val ch = parent.children(c)
+      ch.rewardSum / ch.visits + conf.explorationWeight *
+        math.sqrt(math.log(parent.visits.toDouble) / ch.visits)
     }
-    conf.policy match {
-      case "random" => cand(rnd.nextInt(cand.length))
-      case "max" => cand.maxBy(mean)
-      case "epsilon-greedy" =>
-        if (rnd.nextDouble() < conf.epsilon) cand(rnd.nextInt(cand.length))
-        else cand.maxBy(mean)
-      case _ => cand.maxBy { c =>
-        mean(c) + conf.explorationWeight *
-          math.sqrt(math.log(parent.visits.toDouble) / parent.children(c).visits)
-      }
-    }
-  }
 
   /** One episode: walk the tree by UCB1, expand one node, complete the order
     * with a random connected playout, execute the budgeted sample join,
@@ -186,26 +172,6 @@ final class UctJoinOrder(
     var sinceImproved = 0
     var bestMean = Double.NegativeInfinity
     while (episodes < maxEpisodes && sinceImproved < window) {
-      // tree forgetting (the reference's FORGET switch, /root/reference/src/
-      // joining/JoinProcessor.java:135-138, rebuilt at rounds 1, 10, 100, …):
-      // periodically discard the UCT tree so stale early estimates cannot
-      // lock the search into one branch; accumulated per-order rewards are
-      // kept — forgetting only resets the exploration state, not the answer.
-      // forgetInterval > 0: every N episodes; -1: the reference's
-      // exponential schedule (powers of 10); 0: never.
-      val forgetNow =
-        if (conf.forgetInterval > 0) episodes > 0 && episodes % conf.forgetInterval == 0
-        else if (conf.forgetInterval == -1)
-          episodes > 0 && { // episodes == 10^k for some k
-            var p = 1L
-            while (p < episodes) p *= 10
-            p == episodes
-          }
-        else false
-      if (forgetNow) {
-        root = new Node
-        nodesCreated += 1
-      }
       episode()
       // periodic during-search tree rendering — the reference's
       // `explain <dir> <bound> <freq>` console mode, which dumps a
@@ -305,9 +271,6 @@ final case class UctConf(
     explorationWeight: Double,
     sampleSize: Int,
     seed: Long,
-    policy: String = "ucb1",       // ucb1 | epsilon-greedy | max | random
-    epsilon: Double = 0.1,
-    forgetInterval: Int = 0,       // 0 = never forget the tree
     explainDir: String = "",       // non-empty: dump DOT tree snapshots here
     explainFreq: Int = 0,          // every N episodes (0 = off)
     sampleMode: String = "reservoir") // reservoir | head (see SampleStore)

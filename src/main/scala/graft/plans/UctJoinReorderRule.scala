@@ -22,17 +22,12 @@ final class UctJoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] wi
 
   import UctJoinReorderRule._
 
+  /** `UctConf.default` plus the three settings a session may change: DOT
+    * tree snapshots (`explainDir`/`explainFreq`) and the leaf sample mode
+    * (`sampleMode=head` is the cheap, head-biased prefix take). */
   private def uctConf: UctConf = {
     val c = spark.conf
-    UctConf(
-      episodes = c.get("spark.graft.uct.episodes", "200").toInt,
-      budgetPerEpisode = c.get("spark.graft.uct.budget", "500").toInt,
-      explorationWeight = c.get("spark.graft.uct.explorationWeight", "0.7").toDouble,
-      sampleSize = c.get("spark.graft.uct.sampleSize", "1024").toInt,
-      seed = c.get("spark.graft.uct.seed", "42").toLong,
-      policy = c.get("spark.graft.uct.policy", "ucb1"),
-      epsilon = c.get("spark.graft.uct.epsilon", "0.1").toDouble,
-      forgetInterval = c.get("spark.graft.uct.forgetInterval", "0").toInt,
+    UctConf.default.copy(
       explainDir = c.get("spark.graft.uct.explainDir", ""),
       explainFreq = c.get("spark.graft.uct.explainFreq", "0").toInt,
       sampleMode = c.get("spark.graft.uct.sampleMode", "reservoir"))

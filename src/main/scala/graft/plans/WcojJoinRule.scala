@@ -89,15 +89,15 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * input fragments as in-memory flat arrays, so the grid must be fine
   * enough that Σ_R |R| / Π_{v∈vars(R)} share(v) fits a per-cell budget
   * (`spark.graft.wcoj.cellBudgetBytes`): the rule grows the cell count
-  * from `maxCells` up to `maxCellsHard` until the budget holds, and
-  * DECLINES the route (keeping the spill-capable binary plan) when even
-  * the hard cap cannot. The heavy-hitter probe runs BEFORE any leaf is
-  * planned or checkpointed, on the bounded per-leaf samples `SampleStore`
-  * caches for the UCT rule (self-join roles share one sample; a declined
-  * route therefore costs only cached sample scans): a variable whose top
-  * value exceeds `spark.graft.wcoj.skewThreshold` of its sample is pinned
-  * to share 1 so the cell budget is spent on dimensions that actually
-  * spread load.
+  * from `maxCells` (32) up to `maxCellsHard` (1024) until the budget
+  * holds, and DECLINES the route (keeping the spill-capable binary plan)
+  * when even the hard cap cannot. The heavy-hitter probe runs BEFORE any
+  * leaf is planned or checkpointed, on the bounded per-leaf samples
+  * `SampleStore` caches for the UCT rule (self-join roles share one
+  * sample; a declined route therefore costs only cached sample scans): a
+  * variable whose top value exceeds `skewThreshold` (20%) of its sample is
+  * pinned to share 1 so the cell budget is spent on dimensions that
+  * actually spread load.
   *
   * Disable with `spark.graft.wcoj.enabled=false`.
   */
@@ -108,15 +108,6 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
   private def enabled: Boolean =
     spark.conf.get("spark.graft.wcoj.enabled", "true").toBoolean
 
-  private def maxCells: Int =
-    spark.conf.get("spark.graft.wcoj.maxCells", "32").toInt
-
-  /** Upper bound for the budget-driven grid growth. At cluster scale set
-    * this near the total core count; the discrete `autoShares` enumeration
-    * stays sub-second through ~4096 cells at realistic variable counts. */
-  private def maxCellsHard: Int =
-    spark.conf.get("spark.graft.wcoj.maxCellsHard", "1024").toInt
-
   /** Per-cell INPUT byte budget. A cell receives Σ_R |R| / Π_{v∈vars(R)}
     * share(v) bytes (Catalyst estimates) and buffers them as flat arrays,
     * so this must sit comfortably inside one executor task's memory. When
@@ -125,37 +116,6 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
   private def cellBudgetBytes: Long =
     spark.conf.get("spark.graft.wcoj.cellBudgetBytes",
       (512L << 20).toString).toLong
-
-  private def maxVars: Int =
-    spark.conf.get("spark.graft.wcoj.maxVars", "8").toInt
-
-  /** Cores whose total estimated input is below this stay on their binary
-    * plans. Default 0 = route every qualifying core: the fixed overhead on
-    * a tiny core is sub-second, and a deterministic rewrite is worth more
-    * than a heuristic skip at the gate scales this repo tests. Production
-    * sessions running many micro motif queries can set a floor (bytes) so
-    * those keep their codegen broadcast-hash plans. */
-  private def minCoreBytes: Long =
-    spark.conf.get("spark.graft.wcoj.minCoreBytes", "0").toLong
-
-  /** Ceiling on a VARIABLE's estimated source bytes — the sum of the sizes
-    * of every core relation carrying it, since its dictionary unions the
-    * distinct values across all of them — for that variable's encode/decode
-    * joins to carry a broadcast hint. Beyond it the dictionary joins fall
-    * back to shuffle equi-joins instead of risking an executor-breaking
-    * broadcast of a huge domain. */
-  private def broadcastDictMaxBytes: Long =
-    spark.conf.get("spark.graft.wcoj.broadcastDictMaxBytes",
-      (64L << 20).toString).toLong
-
-  /** Heavy-hitter pin threshold for the sampled skew probe (fraction of a
-    * variable's sampled non-null values owned by its top value). Set >1 to
-    * disable the probe. */
-  private def skewThreshold: Double =
-    spark.conf.get("spark.graft.wcoj.skewThreshold", "0.2").toDouble
-
-  private def skewSampleSize: Int =
-    spark.conf.get("spark.graft.wcoj.skewSampleSize", "1024").toInt
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
@@ -178,7 +138,7 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
       relSizes: Seq[(Seq[String], Long)],
       vars: Seq[String]): Option[(Map[String, Int], Long, Int)] = {
     val restricted = relSizes.map { case (vs, sz) => (vs.filter(vars.contains), sz) }
-    var cells = math.min(maxCells, maxCellsHard)
+    var cells = maxCells
     while (true) {
       val sh = Leapfrog.autoShares(restricted, vars, cells)
       val load = restricted.map { case (vs, sz) =>
@@ -391,16 +351,17 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
       orderedClasses.zipWithIndex.map { case (c, i) => c -> s"__wcoj_v$i" }.toMap
     val classVarOrder = orderedClasses.map(varName)
 
-    // sizes, floor, skew probe, and grid feasibility all run BEFORE any
-    // leaf is planned or checkpointed, so a declined route costs at most
-    // the bounded (and SampleStore-cached) sample scans — no nested
-    // planning, no registered checkpoint frames
+    // sizes, skew probe, and grid feasibility all run BEFORE any leaf is
+    // planned or checkpointed, so a declined route costs at most the
+    // bounded (and SampleStore-cached) sample scans — no nested planning,
+    // no registered checkpoint frames. There is no minimum core size: the
+    // fixed overhead on a tiny core is sub-second, and a deterministic
+    // rewrite is worth more than a heuristic skip.
     val relSizes: Seq[(Seq[String], Long)] = coreSeq.map { i =>
       val sz = graph.leaves(i).stats.sizeInBytes
       (coveredClasses(i).map(varName),
         if (sz > BigInt(Long.MaxValue)) Long.MaxValue else sz.toLong.max(1L))
     }
-    if (relSizes.map(_._2).sum < minCoreBytes) return None
 
     // SAMPLED m:n PROBE — the deferred fallback for the structural growth
     // check's documented false negatives: a same-position symmetric motif
@@ -413,11 +374,11 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
     // key–FK loop always carries a unique-key side (multiplicity ~1.0) —
     // TPC-H q05's c_custkey, the q85 nation pair's n_name — so those
     // decline; a sample diluted by a huge domain reads ~1 and errs toward
-    // declining too. Running HERE (after every structural guard and the
-    // byte floor, right before the skew probe that samples the same
-    // (leaf, covered-attrs) pairs) means a structurally-declined core never
-    // pays a scan, and an admitted one shares its samples with the skew
-    // probe through the SampleStore cache.
+    // declining too. Running HERE (after every structural guard, right
+    // before the skew probe that samples the same (leaf, covered-attrs)
+    // pairs) means a structurally-declined core never pays a scan, and an
+    // admitted one shares its samples with the skew probe through the
+    // SampleStore cache.
     if (mnProbePending) {
       val mnGrowth = try {
         coreSeq.forall { i =>
@@ -455,8 +416,7 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
     // errs toward pinning (spending a grid dimension), never toward
     // missing a hitter the sample saw.
     val pinned: Seq[String] =
-      if (skewThreshold > 1.0) Nil
-      else try {
+      try {
         val ratios = mutable.HashMap.empty[String, Double]
         coreSeq.foreach { i =>
           val attrs = coveredOf(i).collect { case a: AttributeReference => a }
@@ -804,6 +764,34 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
 
 object WcojJoinRule {
   private[plans] val PROCESSED = TreeNodeTag[Boolean]("graft.wcoj.processed")
+
+  /** Cell count the budget-driven grid growth starts from. */
+  private val maxCells = 32
+
+  /** Upper bound for the budget-driven grid growth. At cluster scale this
+    * belongs near the total core count; the discrete `autoShares`
+    * enumeration stays sub-second through ~4096 cells at realistic variable
+    * counts. */
+  private val maxCellsHard = 1024
+
+  /** Cores with more join variables than this keep their binary plans. */
+  private val maxVars = 8
+
+  /** Ceiling on a VARIABLE's estimated source bytes — the sum of the sizes
+    * of every core relation carrying it, since its dictionary unions the
+    * distinct values across all of them — for that variable's encode/decode
+    * joins to carry a broadcast hint. Beyond it the dictionary joins fall
+    * back to shuffle equi-joins instead of risking an executor-breaking
+    * broadcast of a huge domain. */
+  private val broadcastDictMaxBytes = 64L << 20
+
+  /** Heavy-hitter pin threshold for the sampled skew probe (fraction of a
+    * variable's sampled non-null values owned by its top value). */
+  private val skewThreshold = 0.2
+
+  /** Rows in the bounded per-leaf sample the m:n, skew and join-back
+    * probes read (through SampleStore, so they share one cached sample). */
+  private val skewSampleSize = 1024
 
   /** What the most recent route decided — the gate/spec observability
     * surface (same pattern as UctJoinReorderRule.RuleStats). nrRelations

@@ -298,7 +298,7 @@ object OperatorGates {
         val prevUct = s.conf.get("spark.graft.uct.enabled", "true")
         s.conf.set("spark.graft.uct.enabled", "false")
         s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        graft.plans.RuntimeOrderSwitchRule.lastSwitch = None
+        graft.plans.RuntimeOrderSwitchRule.clearLog()
         // execute INSIDE the conf sandwich (localCheckpoint is eager): AQE
         // reads the conf at execution, and the result frame the driver
         // writes must not replan under restored settings
@@ -313,8 +313,7 @@ object OperatorGates {
             s.conf.set("spark.graft.uct.enabled", prevUct)
             s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
           }
-        val switch = graft.plans.RuntimeOrderSwitchRule.lastSwitch
-        require(switch.nonEmpty,
+        require(graft.plans.RuntimeOrderSwitchRule.recentSwitches.nonEmpty,
           "runtime order switch did not fire on the misordered self-join")
         result
       }),

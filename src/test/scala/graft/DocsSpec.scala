@@ -31,6 +31,34 @@ class DocsSpec extends AnyFunSuite {
     }
   }
 
+  test("README's knob paragraph lists exactly the spark.graft.* keys the source reads") {
+    import scala.jdk.CollectionConverters._
+    val literal = "\"(spark\\.graft\\.[A-Za-z.]+)\"".r
+    val read: Set[String] = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.flatMap { f =>
+      literal.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1))
+    }.toSet
+    // the knob paragraph spells keys as spark.graft.<ns>.<key> or
+    // spark.graft.<ns>.{k1,k2,...}, a brace group possibly wrapped over lines
+    val paragraph = java.nio.file.Files.readString(java.nio.file.Paths.get("README.md"))
+      .split("\n\\s*\n").filter(_.contains("Config knobs:")).toSeq
+    assert(paragraph.size == 1, "README.md needs exactly one 'Config knobs:' paragraph")
+    val keyRe = """spark\.graft\.([A-Za-z]+)\.(?:\{([^}]*)\}|([A-Za-z]+))""".r
+    val listed: Set[String] = keyRe.findAllMatchIn(paragraph.head).flatMap { m =>
+      val names = Option(m.group(2)).map(_.split(",").map(_.trim).toSeq)
+        .getOrElse(Seq(m.group(3)))
+      names.map(n => s"spark.graft.${m.group(1)}.$n")
+    }.toSet
+    assert(read.nonEmpty, "found no spark.graft.* literal under src/main/scala")
+    assert((read -- listed).isEmpty,
+      s"keys read in src/main but missing from README's knob paragraph: ${(read -- listed).toSeq.sorted}")
+    assert((listed -- read).isEmpty,
+      s"README's knob paragraph lists keys no source reads: ${(listed -- read).toSeq.sorted}")
+  }
+
   test("registry names are unique and every query has oracle coverage recorded") {
     val names = SparkEntry.registry.map(_.name)
     assert(names.distinct.size == names.size, "duplicate registry query names")

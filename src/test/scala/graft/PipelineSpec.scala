@@ -179,29 +179,34 @@ class PipelineSpec extends SparkSpec {
     assert(sumSq == samples.map(s => s.toLong * s).sum)
   }
 
+  private def assertRegistered(names: Seq[String]): Unit =
+    names.foreach { n =>
+      assert(SparkEntry.queries.contains(n), s"$n missing from registry")
+      assert(SparkEntry.oracleSql.contains(n), s"$n missing oracle SQL")
+      assert(run(n).count() > 0, s"$n returned no rows")
+    }
+
   test("new gates are registered with oracle SQL") {
-    val names = Seq("q97_orc_source", "q98_hash_split", "q99_regex_scrub",
+    assertRegistered(Seq("q97_orc_source", "q98_hash_split", "q99_regex_scrub",
       "q100_repetition_ratio", "q101_stratified_sample",
       "q102_length_histogram", "q103_bucketed_join", "q104_partitioned_scan",
       "q105_semantic_clusters", "q106_sequence_pack", "q107_contamination",
       "q108_image_features", "q109_audio_features", "q110_job_wide17",
-      "q111_e2e_pipeline", "q112_frame_sample", "q113_dedup_latest")
-    names.foreach { n =>
-      assert(SparkEntry.queries.contains(n), s"$n missing from registry")
-      assert(SparkEntry.oracleSql.contains(n), s"$n missing oracle SQL")
-      assert(run(n).count() > 0, s"$n returned no rows")
-    }
+      "q111_e2e_pipeline", "q112_frame_sample", "q113_dedup_latest"))
   }
 
   test("round-4 gates are registered with oracle SQL and return rows") {
-    val names = Seq("q114_sequence_pack_sharded", "q115_console_ddl_into",
-      "q116_runtime_switch", "q117_imdb_06d", "q118_imdb_10a",
-      "q119_imdb_17a", "q120_imdb_33c")
-    names.foreach { n =>
-      assert(SparkEntry.queries.contains(n), s"$n missing from registry")
-      assert(SparkEntry.oracleSql.contains(n), s"$n missing oracle SQL")
-      assert(run(n).count() > 0, s"$n returned no rows")
-    }
+    assertRegistered(Seq("q114_sequence_pack_sharded", "q115_console_ddl_into",
+      "q116_runtime_switch"))
+  }
+
+  test("round-4 IMDB reference entries are registered with oracle SQL and return rows") {
+    // q117-q120 run the reference's JOB SQL files, which ImdbQueries only
+    // registers when the reference workload is present
+    assume(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get(graft.sources.Imdb.queriesDir)))
+    assertRegistered(Seq("q117_imdb_06d", "q118_imdb_10a", "q119_imdb_17a",
+      "q120_imdb_33c"))
   }
 
   test("sharded sequence packing: every window is partitioned (no global sort)") {

@@ -97,9 +97,6 @@ object DebugScale {
     if (args.length > 1 && args(1) == "rankcmp") {
       rankCmpDecade(spark, sfDir); spark.stop(); return
     }
-    if (args.length > 1 && args(1) == "rankpersist") {
-      rankPersistDecade(spark, sfDir); spark.stop(); return
-    }
 
     val docs1 = Db(spark, sfDir).documents
       .select("doc_id", "text").localCheckpoint(true)
@@ -1252,55 +1249,6 @@ object DebugScale {
     * #2). The old implementation is inlined verbatim from the r14
     * operators/Rank.scala. Run:
     * `tools/run.sh graft.DebugScale /root/testdata/sf0.1 rankcmp`. */
-  /** VERDICT r15 #8: evaluate a KEYS-ONLY persist of the rank input's
-    * key projection (sample + counts read the cached narrow rows; the
-    * final rank still runs the full lineage once) against the shipped
-    * 3-lineage-run Rank.atScale, on the q260 shape at 10× and 100×.
-    * Run: `tools/run.sh graft.DebugScale /root/testdata/sf0.1 rankpersist`. */
-  private def rankPersistDecade(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): Unit = {
-    import graft.operators.Rank
-    def exec(df: DataFrame): Long = df.queryExecution.toRdd.count()
-    val ev1 = Db(spark, sfDir).events
-      .select("user_id", "value").localCheckpoint(true)
-    def evX(copies: Int): DataFrame = (0 until copies).map { i =>
-      ev1.select((col("user_id") + lit(i.toLong * 100000000L)).as("user_id"),
-        col("value"))
-    }.reduce(_ union _).repartition(32).localCheckpoint(true)
-    val ev10 = evX(10); val ev100 = evX(100)
-    println(s"SCALE events: ${ev10.count()} -> ${ev100.count()}")
-    def spOf(d: DataFrame): DataFrame = d.groupBy("user_id")
-      .agg(sum(floor(col("value")).cast("long")).as("a"))
-      .where(col("a") > 0)
-    def shipped(d: DataFrame): Long = exec(Rank.atScale(spOf(d),
-      Seq(col("a"), col("user_id")), out = "r", totalOut = "n"))
-    def persisted(d: DataFrame): Long = {
-      val df = spOf(d)
-      val keyed = df.select(col("a"), col("user_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // boundaries + counts from the cached narrow frame: ONE lineage
-        // run materializes it (the sample job), the counts aggregate and
-        // offsets read blocks; the final rank runs the full lineage once
-        val r = Rank.atScale(df, Seq(col("a"), col("user_id")),
-          out = "r", totalOut = "n", keyFrame = keyed)
-        exec(r)
-      } finally keyed.unpersist(false)
-    }
-    val results = collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
-    results += (("SHIPPED 3-run rank",
-      bestOf2("shipped @10x")(shipped(ev10)),
-      bestOf2("shipped @100x")(shipped(ev100))))
-    results += (("KEYS-PERSIST rank",
-      bestOf2("persist @10x")(persisted(ev10)),
-      bestOf2("persist @100x")(persisted(ev100))))
-    println("SCALE ===== keys-persist rank evaluation =====")
-    results.foreach { case (name, t1, t10) =>
-      val exp = math.log10(t10 / t1)
-      println(f"SCALE $name%-28s ${t1}%7.2f s -> ${t10}%7.2f s  exponent=$exp%.2f")
-    }
-  }
-
   private def rankCmpDecade(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Unit = {
     import graft.operators.Rank

@@ -28,10 +28,10 @@ object DebugSwitch {
     }
     for (enabled <- Seq("true", "false", "true", "false", "true", "false")) {
       spark.conf.set("spark.graft.uct.runtimeSwitch", enabled)
-      graft.plans.RuntimeOrderSwitchRule.lastSwitch = None
+      graft.plans.RuntimeOrderSwitchRule.clearLog()
       val ms = run()
       println(s"runtimeSwitch=$enabled ${ms} ms " +
-        s"fired=${graft.plans.RuntimeOrderSwitchRule.lastSwitch.nonEmpty}")
+        s"fired=${graft.plans.RuntimeOrderSwitchRule.recentSwitches.nonEmpty}")
     }
     spark.stop()
   }

@@ -18,8 +18,6 @@ object StressSwitch {
     val db = Db(spark, sfDir)
     Db.tableNames.foreach { nm => if (nm == "events") db.events else db.table(nm) }
     queries.OperatorGates.ensureFixtures(spark, sfDir)
-    if (sys.env.get("STRESS_DEBUG").contains("1"))
-      spark.conf.set("spark.graft.uct.runtimeSwitchDebug", "true")
     var failures = 0
     (1 to n).foreach { i =>
       val t0 = System.nanoTime()
