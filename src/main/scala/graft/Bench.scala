@@ -5,293 +5,70 @@ package graft
   * analog of the reference's `bench` command
   * (/root/reference/src/console/SkinnerCmd.java:67-99).
   *
-  * The JSON line is kept compact — short `qNN` keys, 3-decimal timings — so
-  * the whole line fits well inside a 2000-character output-tail capture; the
-  * full-name per-query breakdown goes to stderr.
+  * Each query runs twice after a warm-up and reports the faster pass; the
+  * per-pass telemetry goes to a CSV and the full-precision per-query map
+  * to a lossless sidecar, so the JSON line only has to fit a
+  * 2000-character output-tail capture.
   *
-  * The capture ADJUDICATES ITSELF ([[contaminatedCapture]] — four
-  * signatures since round 15: cpu/query, loadavg, steal%, and the
-  * history-banded wall/query rate that closes the pure-wall-inflation
-  * blind spot BENCH_r14.json shipped through) and, since
-  * round 14, ACTS on its own verdict: a contaminated sf0.1 attempt settles
-  * (bounded wait for the host to go quiet) and RERUNS, up to
-  * [[maxAttempts]] total sweeps, emitting the minimum-wall clean
-  * attempt's JSON line — flagged honestly if none is clean. Since round
-  * 15 the full-precision per-query map also lands in a committed
-  * `BENCH_rNN_full.json` sidecar (the 2000-char tail budget kept only
-  * 149 of 289 keys in round 14's line). Since round 16 a capture whose
-  * every sweep self-flagged contaminated additionally RE-RUNS just the
-  * entries reading far above the committed clean per-query reference in
-  * one more settled window (the requote pass — same two-pass-min
-  * methodology, own stamped docs/bench_requote_r*.csv artifact, sweep
-  * values preserved in the sidecar's "requoteSweep"), so a loud window
-  * no longer turns untouched queries into 10–20× phantom regressions
-  * (the r15 PERF artifact). Four consecutive driver rounds
-  * landed only contaminated artifacts while same-code quiet captures read
-  * 3× faster; the retry closes that loop in-engine instead of hoping for a
-  * quiet driver window. KNOWN BIAS, recorded rather than hidden: a retry
-  * attempt reruns in the same now-warm JVM (JIT, sample caches, page
-  * cache), so a shipped attempt ≥ 2 reads somewhat faster than a cold
-  * capture of the same code — the `"attempts"` field marks it (the
-  * shipped attempt is the last one run), its CSV header carries
-  * `attempt=N`, and [[capturesFromCsvDir]] excludes warm attempts from
-  * the quiet-band derivation so the ceiling stays cold-calibrated.
+  * The capture adjudicates itself ([[contaminatedCapture]]: four fixed
+  * ceilings on cpu/query, loadavg, steal% and wall/query) and, at sf0.1,
+  * settles and reruns a contaminated sweep up to [[maxAttempts]] times,
+  * shipping the minimum-wall clean attempt, flagged honestly if none is
+  * clean. KNOWN BIAS: a retry reruns in the same now-warm JVM (JIT, sample
+  * caches, page cache), so a shipped attempt ≥ 2 reads somewhat faster
+  * than a cold capture; the `"attempts"` field and the CSV header's
+  * `attempt=N` mark it.
   */
 object Bench {
 
-  /** Fallback ceiling on process-CPU seconds per registry entry at the
-    * driver's sf0.1 scale, used when no committed capture history is
-    * readable. Calibration (same code, same box): quiet captures read
-    * 4.4–5.3 (r11p 1169.7 s / 255 entries, r12b 1227.5/268, r12e
-    * 1299.3/279, r13 1482.9/281); every loaded-window driver capture
-    * reads >10 (BENCH_r11 4207.9/255 = 16.5, BENCH_r12 3035.3/279 =
-    * 10.9 — scheduling interference inflates THIS process's CPU via
-    * cache-thrash/GC, not just wall). 8.0 sits ~1.5× above the quiet
-    * band and well under every observed contaminated value. */
+  /** Ceiling on process-CPU seconds per registry entry at sf0.1. Quiet
+    * captures read 4.4–5.3 (r11p 1169.7 s / 255 entries, r13 1482.9/281);
+    * loaded-window captures read >10 (BENCH_r11 16.5, BENCH_r12
+    * 10.9): shared-host interference inflates this process's CPU via
+    * cache-thrash/GC, not just wall. */
   val quietCpuPerQueryCeiling: Double = 8.0
 
-  /** Fallback ceiling on WALL seconds per registry entry (the sum of
-    * per-query best-pass times over the entry count) when no committed
-    * capture history is readable. Clean captures over r11–r14 read
-    * 0.47–0.67 wall/query; the wall-inflated windows the cpu/load/steal
-    * trio cannot see (the VERDICT-r14 blind spot: r14g 0.70, r14d 0.81
-    * — flat CPU, quiet load, sub-ceiling steal, +15–30% wall) sit just
-    * above. 1.0 is the conservative no-history bound. */
-  val quietWallPerQueryCeiling: Double = 1.0
+  /** Ceiling on WALL seconds per registry entry (Σ best-pass seconds over
+    * the entry count) at sf0.1. Over the 70 committed sf0.1 captures the
+    * clean ones top out at 0.670 (r12e) and the wall-inflated ones start
+    * at 0.681 (r11j); 0.675 splits the two. This axis sees scheduler
+    * latency that stretches wall at flat cpu, quiet load and low steal
+    * (r14g 0.70, r14d 0.81). */
+  val quietWallPerQueryCeiling: Double = 0.675
 
-  /** Multiplier for the wall band: calibrated on the REAL r14
-    * divergence the band exists to close — clean r14 capture 0.610
-    * wall/query vs the driver's wall-inflated r14g at 0.702 (+15%,
-    * every other signature in band). The last-3-rounds median of
-    * per-round minima reads 0.627, so ×1.10 puts the ceiling at 0.690:
-    * every committed clean capture passes, r14g/r14c/r14d flag. A wider
-    * band (the ~1.25 of the cpu axis) would sit at 0.78 and miss the
-    * exact artifact the r14 verdict adjudicated. */
-  val wallBandMultiplier: Double = 1.10
-
-  /** Multiplier for the cpu band (see [[derivedCpuCeiling]]): 1.8× the
-    * clean median sits ~1.5× above the quiet 4.4–5.3 range and well
-    * under every observed contaminated value (>9). */
-  val cpuBandMultiplier: Double = 1.8
-
-  /** One committed per-pass capture, parsed from its CSV: everything the
-    * band derivation needs to decide eligibility and extract both
-    * per-query rates. `wallPerQuery` is the BestSec column's sum over
-    * the entry count — the same total the JSON line reports, computable
-    * from every historical file (no header change needed).
-    * `stamped` is the in-header contamination verdict written since
-    * round 15 (None for older files). */
-  final case class CsvCapture(round: Int, attempt: Int, entries: Int,
-      cpuPerQuery: Double, wallPerQuery: Double,
-      load1Max: Double, stealPct: Double, stamped: Option[Boolean])
-
-  /** Is a historical capture eligible to CALIBRATE the quiet bands?
-    * (ADVICE r14 #1) — warm retries (attempt ≥ 2) are excluded (JIT /
-    * page-cache warmth reads systematically fast), and so are cold
-    * attempts that flag on the NON-CIRCULAR signals: the in-header
-    * contamination stamp when present, else the load/steal ceilings
-    * re-applied to the header telemetry. Without this, a round whose
-    * every cold attempt was loud would feed its contaminated minimum
-    * into the band and ratchet the ceiling up. Unreadable telemetry
-    * (-1) cannot condemn a capture. */
-  def calibrationEligible(c: CsvCapture): Boolean =
-    c.attempt == 1 && !c.stamped.contains(true) &&
-      c.load1Max <= quietLoad1Ceiling && c.stealPct <= quietStealPctCeiling
-
-  /** The shared band-derivation helper (VERDICT r14 #8): `multiplier` ×
-    * the median over the last 3 rounds of each round's LOWEST
-    * per-query rate among calibration-eligible captures (the min per
-    * round is the round's cleanest capture: contamination only ever
-    * inflates, so the min needs no circular "is it clean?"
-    * classification beyond [[calibrationEligible]]'s non-circular
-    * filters). Falls back when fewer than 2 rounds parse (a fresh
-    * clone must still adjudicate). For an even round count the median
-    * averages the two middle values (ADVICE r14 #2 — byRound(size/2)
-    * on 2 rounds silently picked the LARGER). */
-  def derivedCeiling(perRound: Seq[(Int, Double)], multiplier: Double,
-                     fallback: Double): Double = {
-    val byRound = perRound.groupBy(_._1)
-      .map { case (r, xs) => (r, xs.map(_._2).min) }
-      .toSeq.sortBy(-_._1).take(3).map(_._2).sorted
-    if (byRound.size < 2) fallback
-    else if (byRound.size % 2 == 1) multiplier * byRound(byRound.size / 2)
-    else multiplier *
-      (byRound(byRound.size / 2 - 1) + byRound(byRound.size / 2)) / 2
-  }
-
-  /** The self-maintaining cpu band (VERDICT r13 #7): as the registry
-    * grows heavier operators a hard-coded ceiling drifts, so the live
-    * ceiling derives from the committed capture history. Today's
-    * history derives ~8.3 — the same band the hand calibration picked. */
-  def derivedCpuCeiling(history: Seq[CsvCapture]): Double =
-    derivedCeiling(
-      history.filter(c => calibrationEligible(c) && c.cpuPerQuery > 0)
-        .map(c => (c.round, c.cpuPerQuery)),
-      cpuBandMultiplier, quietCpuPerQueryCeiling)
-
-  /** The wall band (VERDICT r14 #1): same mechanism over wall/query —
-    * the fourth contamination signature, closing the pure-wall-inflation
-    * blind spot (scheduler-latency windows inflate wall at flat CPU,
-    * quiet load, sub-ceiling steal; BENCH_r14.json shipped +15% wall
-    * "clean" because no committed signature measured wall). */
-  def derivedWallCeiling(history: Seq[CsvCapture]): Double =
-    derivedCeiling(
-      history.filter(c => calibrationEligible(c) && c.wallPerQuery > 0)
-        .map(c => (c.round, c.wallPerQuery)),
-      wallBandMultiplier, quietWallPerQueryCeiling)
-
-  /** Per-query clean reference minima from the committed capture history:
-    * for every registry entry, the MINIMUM BestSec over the
-    * calibration-eligible (cold, self-stamped-clean, quiet-telemetry)
-    * sf0.1 captures of the last 3 rounds present. This is the per-query
-    * analog of the wall band — the reference a contaminated sweep's
-    * entries are compared against to pick requote targets. */
-  def cleanQueryMinima(dir: java.io.File): Map[String, Double] = {
-    val name = "bench_passes_r(\\d+)[a-z]?\\.csv".r
-    val eligible = Option(dir.listFiles).getOrElse(Array.empty[java.io.File])
-      .toSeq.flatMap { f =>
-        f.getName match {
-          case name(r) => capturesFromCsv(f).filter(calibrationEligible)
-            .map(c => (r.toInt, f))
-          case _ => None
-        }
-      }
-    val lastRounds = eligible.map(_._1).distinct.sorted.takeRight(3).toSet
-    val minima = new scala.collection.mutable.HashMap[String, Double]()
-    eligible.filter(e => lastRounds(e._1)).foreach { case (_, f) =>
-      try {
-        val lines = java.nio.file.Files.readAllLines(f.toPath)
-        var i = 2
-        while (i < lines.size) {
-          val p = lines.get(i).split(",", -1)
-          if (p.length > 3) try {
-            val v = p(3).toDouble
-            if (v >= 0 && minima.get(p(0)).forall(v < _)) minima(p(0)) = v
-          } catch { case _: Exception => }
-          i += 1
-        }
-      } catch { case _: Exception => }
-    }
-    minima.toMap
-  }
-
-  /** Pick the per-query requote targets of a contaminated sweep: entries
-    * whose best-pass time reads far above the committed clean reference
-    * (ratio > 2.5× AND at least +0.5 s — both, so a 0.1 s entry's jitter
-    * or a genuinely-regressed heavy entry close to its reference never
-    * triggers a requote), worst inflation first, bounded at `maxN`.
-    * Entries with no clean history (new this round) are never requoted —
-    * there is nothing to compare against. */
-  def requoteTargets(results: Seq[(String, Double)],
-                     minima: Map[String, Double], maxN: Int): Seq[String] =
-    results.flatMap { case (name, t) =>
-      minima.get(name) match {
-        case Some(h) if t > math.max(2.5 * h, h + 0.5) => Some((name, t / h))
-        case _ => None
-      }
-    }.sortBy(-_._2).take(maxN).map(_._1)
-
-  /** Parse one committed per-pass CSV into (at most one) [[CsvCapture]]. */
-  private def capturesFromCsv(f: java.io.File): Option[CsvCapture] = {
-    val name = "bench_passes_r(\\d+)[a-z]?\\.csv".r
-    f.getName match {
-      case name(r) =>
-        try {
-          val lines = java.nio.file.Files.readAllLines(f.toPath)
-          val head = lines.get(0)
-          def d(re: String): Double =
-            re.r.findFirstMatchIn(head).map(_.group(1).toDouble)
-              .getOrElse(-1.0)
-          val attempt = "attempt=(\\d+)".r.findFirstMatchIn(head)
-            .map(_.group(1).toInt).getOrElse(1)
-          val stamped = "contaminated=(true|false)".r
-            .findFirstMatchIn(head).map(_.group(1).toBoolean)
-          val entries = lines.size - 2
-          var wall = 0.0
-          var i = 2
-          while (i < lines.size) {
-            val p = lines.get(i).split(",", -1)
-            if (p.length > 3)
-              try wall += p(3).toDouble catch { case _: Exception => }
-            i += 1
-          }
-          if (head.contains("sf0.1") && entries > 0)
-            Some(CsvCapture(r.toInt, attempt, entries,
-              d("procCpuSec=([0-9.]+)") / entries, wall / entries,
-              math.max(d("start_loadavg=\\[([0-9.]+)"),
-                d("end_loadavg=\\[([0-9.]+)")),
-              d("stealPct=(-?[0-9.]+)"), stamped))
-          else None
-        } catch { case _: Exception => None }
-      case _ => None
-    }
-  }
-
-  /** Parse the committed per-pass CSV history (docs/bench_passes_r*.csv)
-    * into [[CsvCapture]] rows, sf0.1 files only: header telemetry +
-    * the BestSec column summed for the wall rate. Files without
-    * procCpuSec (pre-telemetry rounds) carry cpuPerQuery = -1 and are
-    * excluded from the cpu band by its `> 0` filter while still feeding
-    * the wall band. Unreadable files are skipped, never fatal. */
-  def capturesFromCsvDir(dir: java.io.File): Seq[CsvCapture] =
-    Option(dir.listFiles).getOrElse(Array.empty[java.io.File]).toSeq
-      .flatMap(capturesFromCsv)
-
-  /** Ceiling on the 1-minute loadavg at either end of a quiet capture:
-    * this process's own 32 executor threads never pushed a quiet
-    * capture's samples past 2.9 (r11p 1.75, r12b 2.90, r12e 2.73, r13
-    * 1.93), and the driver's cpu-inflated captures ALSO sampled ≤2.9 —
-    * while a deliberately loaded rerun of r13 (40 memory-churn hogs)
-    * sampled 31/43 with the process CPU still IN band (1325.9 s / 281):
-    * external contention inflates wall, not this process's CPU, so the
-    * load axis is the only telemetry that catches it. */
+  /** Ceiling on the 1-minute loadavg at either end of a capture: this
+    * process alone never pushed a quiet capture past 2.9, while a
+    * deliberately loaded rerun of r13 (40 memory-churn hogs) sampled
+    * 31/43 with its process CPU still in band. External contention
+    * inflates wall, not this process's CPU, so only this axis sees it. */
   val quietLoad1Ceiling: Double = 8.0
 
   /** Ceiling on the CPU-steal percentage over the run: this box is a VM
-    * on a shared physical host (idle steal ≈ 2.3% measured); a capture
-    * taken while neighbor tenants hammer the host reads double digits.
-    * Steal is the root cause behind BOTH legacy signatures below —
-    * slice theft inflates wall, shared-cache/SMT interference inflates
-    * this process's cycle count. */
+    * on a shared physical host (idle steal ≈ 2.3%); a capture taken while
+    * neighbor tenants hammer the host reads double digits. */
   val quietStealPctCeiling: Double = 10.0
 
   /** Total sweep attempts a contaminated capture may consume (the
-    * initial run + 2 retries — VERDICT r13 #1). */
+    * initial run + 2 retries). */
   val maxAttempts: Int = 3
 
-  /** Self-adjudication of a capture from its own telemetry (VERDICT r12
-    * #4, wall axis added per VERDICT r14 #1): contamination has FOUR
-    * observed signatures, and the flag is their disjunction —
-    *  - CPU-inflated (the driver's BENCH_r11/r12 windows): this
-    *    process's CPU-seconds per registry entry blow past the quiet
-    *    band while loadavg looks ordinary (shared-host cache/SMT
-    *    interference burns real cycles);
-    *  - load-visible (in-guest host load): the process CPU stays in
-    *    band but the 1-minute loadavg at either end is far above
-    *    anything this process produces alone;
-    *  - slice-stolen (host-neighbor load): /proc/stat steal over the
-    *    run in double digits — the direct hypervisor-level reading of
-    *    the same contention the first two signatures infer;
-    *  - wall-inflated at flat CPU (the r14g blind spot): scheduler
-    *    latency stretches every query's wall clock while cpu, load,
-    *    and steal all read quiet — only the wall/query rate itself,
-    *    banded against the committed clean history, sees it.
-    * Calibrated at the driver's sf0.1 scale only; other SFs never flag.
-    * Negative samples mean the reading was unavailable — unknown, not
-    * incriminating (wallSec < 0 skips the wall axis for legacy spec
-    * rows). Ceilings default to the hand calibrations; `main` passes
-    * the history-derived bands. */
+  /** Self-adjudication of a capture from its own telemetry: contaminated
+    * when any of the four per-query or host readings exceeds its fixed
+    * ceiling — cpu/query (shared-host cache/SMT interference burns this
+    * process's cycles), loadavg (in-guest load), steal% (host-neighbor
+    * load) or wall/query (scheduler latency at flat cpu, load and steal).
+    * Calibrated at sf0.1 only; other SFs never flag. Negative samples mean
+    * the reading was unavailable — unknown, not incriminating (wallSec < 0
+    * skips the wall axis). */
   def contaminatedCapture(cpuSec: Double, nQueries: Int, sfName: String,
                           load1Start: Double, load1End: Double,
                           stealPct: Double = -1.0,
-                          cpuCeiling: Double = quietCpuPerQueryCeiling,
-                          wallSec: Double = -1.0,
-                          wallCeiling: Double = quietWallPerQueryCeiling): Boolean =
+                          wallSec: Double = -1.0): Boolean =
     sfName == "sf0.1" && nQueries > 0 &&
-      (cpuSec / nQueries > cpuCeiling ||
+      (cpuSec / nQueries > quietCpuPerQueryCeiling ||
         math.max(load1Start, load1End) > quietLoad1Ceiling ||
         stealPct > quietStealPctCeiling ||
-        (wallSec >= 0 && wallSec / nQueries > wallCeiling))
+        (wallSec >= 0 && wallSec / nQueries > quietWallPerQueryCeiling))
 
   /** Index of the attempt whose JSON line ships: the MINIMUM-WALL clean
     * attempt (VERDICT r14 #1 — wall is the number the artifact reports,
@@ -463,15 +240,20 @@ object Bench {
         case _ => -1.0
       }
     val sfName = new java.io.File(sfDir).getName // basename: robust to trailing '/'
-    // the history-derived quiet bands (see derivedCeiling): read BEFORE
-    // this run writes its own attempt CSVs
-    val history = capturesFromCsvDir(new java.io.File("docs"))
-    val cpuCeiling = derivedCpuCeiling(history)
-    val wallCeiling = derivedWallCeiling(history)
-    System.err.println(f"BENCH quiet-band cpu/query ceiling $cpuCeiling%.2f " +
-      f"wall/query ceiling $wallCeiling%.3f " +
-      s"(history-derived; fallbacks $quietCpuPerQueryCeiling / " +
-      s"$quietWallPerQueryCeiling)")
+    // the session's parallelism, not the machine's core count: a scaling
+    // run (SPARK_GRAFT_CPUS below nproc) tags its artifacts `_c<N>` so they
+    // never read as a normal round's capture
+    val cpus = spark.sparkContext.defaultParallelism
+    val cpuTag =
+      if (cpus != Runtime.getRuntime.availableProcessors) s"_c$cpus" else ""
+    // never overwrite an existing artifact (an r10 run silently clobbered
+    // a committed CSV): the first of name(""), name("b") …
+    // name("z") that does not exist yet
+    def firstFree(name: String => String): java.nio.file.Path = {
+      val cands = ("" +: ('b' to 'z').map(_.toString))
+        .map(c => java.nio.file.Paths.get(name(c)))
+      cands.find(!java.nio.file.Files.exists(_)).getOrElse(cands.last)
+    }
 
     // Round number = 1 + the highest BENCH_r<N>.json already in the repo
     // (this run's own artifact is written by the driver afterwards).
@@ -498,7 +280,7 @@ object Bench {
       val hit0 = graft.plans.SampleStore.hitCount
       val disk0 = graft.plans.SampleStore.diskHitCount
       System.err.println(s"BENCH ENV start attempt=$attempt loadavg=[$startLoad] " +
-        s"cpus=${Runtime.getRuntime.availableProcessors} " +
+        s"cpus=$cpus " +
         s"heapMax=${Runtime.getRuntime.maxMemory() >> 20}M")
       val timed = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         graft.plans.WcojJoinRule.clearStats()
@@ -537,12 +319,9 @@ object Bench {
       val results = timed.map { case (name, _, _, best, _, _, _, _, _, _, _) =>
         name -> best }
       val wallSec = results.map(_._2).sum
-      // adjudicate BEFORE the CSV write so the verdict is stamped into the
-      // header — future band derivations then filter on the stamp directly
-      // instead of re-inferring cleanliness from load/steal (ADVICE r14 #1)
+      // adjudicate BEFORE the CSV write so the verdict lands in its header
       val contaminated = contaminatedCapture(cpuSec, results.size, sfName,
-        load1(startLoad), load1(endLoad), stealPct, cpuCeiling,
-        wallSec, wallCeiling)
+        load1(startLoad), load1(endLoad), stealPct, wallSec)
       var csvPath = ""
       // persist the per-pass telemetry as a committed artifact: the driver's
       // tail capture keeps only the JSON line, so without this file a
@@ -555,7 +334,7 @@ object Bench {
             s"end_loadavg=[$endLoad] " +
             f"procCpuSec=$cpuSec%.1f stealPct=$stealPct%.1f " +
             f"wallSec=$wallSec%.1f contaminated=$contaminated " +
-            s"cpus=${Runtime.getRuntime.availableProcessors} " +
+            s"cpus=$cpus " +
             s"sampleScans=${graft.plans.SampleStore.scanCount - scan0} " +
             s"sampleDiskHits=${graft.plans.SampleStore.diskHitCount - disk0} " +
             s"sampleKeys=${graft.plans.SampleStore.keyCount}\n" +
@@ -571,18 +350,11 @@ object Bench {
             f"$k,$t1%.3f,$t2%.3f,$v%.3f,$sm1,$sm2,$gc1,$gc2,$hm1,$hm2,$w\n") }
         // Only the driver's per-round sf0.1 run owns the repo artifact;
         // local smoke runs at other SFs park their telemetry in /tmp so they
-        // can't clobber the capture PERF.md cites. Within the repo, NEVER
-        // overwrite an existing capture (the r10 driver run silently clobbered
-        // the builder's committed r10 CSV, leaving PERF.md citing a file the
-        // repo no longer showed): same round ⇒ suffix b, c, … — every run gets
-        // a distinct, durable artifact.
+        // can't clobber the capture PERF.md cites.
         val out =
-          if (sfName == "sf0.1") {
-            val candidates = java.nio.file.Paths.get(f"docs/bench_passes_r$round%02d.csv") +:
-              ('b' to 'z').map(c =>
-                java.nio.file.Paths.get(f"docs/bench_passes_r$round%02d$c.csv"))
-            candidates.find(!java.nio.file.Files.exists(_)).getOrElse(candidates.last)
-          } else java.nio.file.Paths.get("/tmp/graft_bench_passes.csv")
+          if (sfName == "sf0.1")
+            firstFree(c => f"docs/bench_passes_r$round%02d$c$cpuTag.csv")
+          else java.nio.file.Paths.get("/tmp/graft_bench_passes.csv")
         if (java.nio.file.Files.isDirectory(out.getParent)) {
           java.nio.file.Files.writeString(out, sb.toString)
           csvPath = out.toString
@@ -593,17 +365,17 @@ object Bench {
       if (contaminated)
         System.err.println(f"BENCH CONTAMINATED attempt=$attempt: cpu/query " +
           f"${cpuSec / math.max(1, results.size)}%.1f s (quiet ceiling " +
-          f"$cpuCeiling%.2f) / load1 [$startLoad | $endLoad] " +
+          f"$quietCpuPerQueryCeiling) / load1 [$startLoad | $endLoad] " +
           f"(quiet ceiling $quietLoad1Ceiling) / steal $stealPct%.1f%% " +
           f"(quiet ceiling $quietStealPctCeiling) / wall/query " +
           f"${wallSec / math.max(1, results.size)}%.3f s (quiet ceiling " +
-          f"$wallCeiling%.3f)")
+          f"$quietWallPerQueryCeiling)")
       Attempt(results, startLoad, endLoad, cpuSec, stealPct, wallSec,
         contaminated, csvPath)
     }
 
-    // the retry loop (VERDICT r13 #1): a contaminated sf0.1 attempt settles
-    // and reruns, up to maxAttempts sweeps; every attempt's CSV is kept
+    // the retry loop: a contaminated sf0.1 attempt settles and reruns, up
+    // to maxAttempts sweeps; every attempt's CSV is kept
     var attempts = Vector(runAttempt(1))
     while (attempts.last.contaminated && attempts.size < maxAttempts &&
         sfName == "sf0.1") {
@@ -616,147 +388,36 @@ object Bench {
       attempts.map(a => a.cpuSec / math.max(1, a.results.size)),
       attempts.map(a => a.wallSec / math.max(1, a.results.size))))
     val contaminated = chosen.contaminated
-
-    // Per-query quiet-window requote (VERDICT r15 #2): when every sweep was
-    // contaminated, the shipped numbers were pure window artifact (r15's
-    // driver capture: untouched queries inflated 10–20×, PERF mechanically
-    // computed 0.669 from it). Instead of shipping the loud minima, settle
-    // once more and RE-RUN just the entries reading far above the committed
-    // clean per-query reference ([[cleanQueryMinima]] /
-    // [[requoteTargets]]) — same methodology (two passes through once(),
-    // min), computed from the parquet scans like every other pass. Honesty
-    // contract: the sweep values stay in the attempt CSVs, the requote
-    // pass lands in its own stamped docs/bench_requote_r*.csv (never
-    // matched by the calibration parser), the line carries a "requoted"
-    // count, and the sidecar carries the pre-requote sweep values for every
-    // patched entry. A requote can only LOWER an entry toward the clean
-    // reference — a genuine regression (slow in quiet windows too) survives
-    // requoting and still reads slow.
-    val requoteCandidates =
-      if (contaminated && sfName == "sf0.1")
-        requoteTargets(chosen.results, cleanQueryMinima(new java.io.File("docs")), 80)
-      else Seq.empty
-    val requoted: Map[String, (Double, Double, Double)] =
-      if (requoteCandidates.isEmpty) Map.empty
-      else {
-        System.err.println(s"BENCH REQUOTE: ${requoteCandidates.size} " +
-          "wall-band outliers vs clean history; settling for a quiet window")
-        settle(maxWaitSec = 600)
-        val (s0, t0) = stealSample()
-        val m = requoteCandidates.map { name =>
-          val fn = SparkEntry.queries(name)
-          val (p1, _, _, _) = once(name, fn)
-          val (p2, _, _, _) = once(name, fn)
-          val best =
-            if (p1 < 0 && p2 < 0) -1.0
-            else if (p1 < 0) p2
-            else if (p2 < 0) p1
-            else math.min(p1, p2)
-          name -> (p1, p2, best)
-        }.toMap
-        val (s1, t1) = stealSample()
-        val requoteSteal = if (s0 < 0 || s1 < 0 || t1 <= t0) -1.0
-          else 100.0 * (s1 - s0) / (t1 - t0)
-        System.err.println(f"BENCH REQUOTE stealPct=$requoteSteal%.1f")
-        try {
-          val round = repoRound()
-          val sb = new StringBuilder(
-            s"# sf=$sfDir requote=true afterAttempts=${attempts.size} " +
-              f"stealPct=$requoteSteal%.1f\n" +
-              "Query,Pass1Sec,Pass2Sec,BestSec,SweepSec\n")
-          val sweep = chosen.results.toMap
-          requoteCandidates.foreach { name =>
-            val (p1, p2, b) = m(name)
-            sb.append(f"$name,$p1%.3f,$p2%.3f,$b%.3f,${sweep(name)}%.3f\n")
-          }
-          val cands = java.nio.file.Paths.get(f"docs/bench_requote_r$round%02d.csv") +:
-            ('b' to 'z').map(c =>
-              java.nio.file.Paths.get(f"docs/bench_requote_r$round%02d$c.csv"))
-          val out = cands.find(!java.nio.file.Files.exists(_)).getOrElse(cands.last)
-          if (java.nio.file.Files.isDirectory(out.getParent)) {
-            java.nio.file.Files.writeString(out, sb.toString)
-            System.err.println(s"BENCH requote CSV written to $out")
-          }
-        } catch { case e: Exception =>
-          System.err.println(s"BENCH requote CSV failed: $e") }
-        m
-      }
-    val results = chosen.results.map { case (n, t) =>
-      requoted.get(n) match {
-        case Some((_, _, b)) if b >= 0 && b < t => n -> b
-        case _ => n -> t
-      }
-    }
+    val results = chosen.results
 
     def fmt(v: Double, dec: Int): String =
       s"%.${dec}f".formatLocal(java.util.Locale.ROOT, v)
-    // 2-decimal with trailing zeros trimmed ("0.50"→"0.5", "1.00"→"1.0"):
-    // the intermediate budget fallback that keeps hundredths where they
-    // carry information instead of dropping the whole registry to tenths
-    def fmtTrim(v: Double): String = {
-      val s = fmt(v, 2)
-      if (s.endsWith("0")) s.dropRight(1) else s
-    }
     // short key = the unique qNN prefix of the registry name
     require(results.map(_._1.takeWhile(_ != '_')).distinct.size == results.size,
       "qNN prefixes must be unique for the compact bench keys")
-    def qs(f: Double => String) = results
-      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + f(v) }
-      .mkString("{", ",", "}")
-    def qsLine(dec: Int) = qs(fmt(_, dec))
     val total = results.map(_._2).sum
-    // self-diagnosing fields (VERDICT r10): start/end 1-min loadavg + this
-    // process's CPU-seconds, IN the parsed line — a contaminated capture
-    // (wall inflated, cpu/32 ≪ wall, loadavg high) is then adjudicable from
-    // the artifact alone instead of needing a judge rerun
-    //
-    // ...and the VERDICT-r12 closing of that loop: the bench ADJUDICATES
-    // ITSELF against the committed quiet reference band
-    // ([[contaminatedCapture]]) instead of leaving the cpu field for CSV
-    // archaeology — the judge/driver reads the verdict from the artifact.
-    // "attempts" says how many sweeps the retry loop spent getting here.
+    // self-diagnosing fields: start/end 1-min loadavg, this process's
+    // CPU-seconds, steal%, the sweeps the retry loop spent and the verdict,
+    // so a contaminated capture is adjudicable from the line alone
     val envFields =
-      s""","load":[${fmt(load1(chosen.startLoad), 1)},${fmt(load1(chosen.endLoad), 1)}],"cpu":${fmt(chosen.cpuSec, 1)},"steal":${fmt(chosen.stealPct, 1)},"attempts":${attempts.size},"requoted":${requoted.size},"contaminated":$contaminated"""
+      s""","load":[${fmt(load1(chosen.startLoad), 1)},${fmt(load1(chosen.endLoad), 1)}],"cpu":${fmt(chosen.cpuSec, 1)},"steal":${fmt(chosen.stealPct, 1)},"attempts":${attempts.size},"contaminated":$contaminated"""
     def jsonLine(qs: String) =
       s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$qs,"sf":"$sfName"$envFields}"""
-    // the driver keeps only the last ~2000 chars of output; degrade per-query
-    // precision (2-dec → trimmed 2-dec → 1-dec → adaptive → drop the map)
-    // rather than aborting a finished benchmark. The JSON line is written
-    // LAST (after stop()), but sbt appends its own "[success] Total time:.."
-    // epilogue (~60 chars) AFTER our line, inside the same tail capture —
-    // r7–r9's BENCH_r*.json came back parsed:null because a 1985-budget line
-    // plus that epilogue clipped the JSON head. Measured ceiling: 2000-char
-    // capture − ~65-char epilogue ⇒ lines ≤ ~1930 survive intact; full
-    // per-pass precision always lives in docs/bench_passes_r*.csv.
-    // adaptive rung: tenths where a query is sub-second (where the digit
-    // carries real information), whole seconds at ≥1 s (the dominators the
-    // map exists to identify) — buys ~2 chars per slow entry, which is what
-    // keeps a growing registry out of the all-integer rung
-    def fmtAdaptive(v: Double): String = if (v >= 0.95) fmt(v, 0) else fmt(v, 1)
-    // slow-only rung: once even all-integer precision overflows the budget
-    // (~200 registry entries), keep 1-decimal entries for the DOMINATORS
-    // and omit the sub-0.45 s crowd entirely — an absent key reads as
-    // "sub-half-second", which is everything the total-vs-baseline
-    // adjudication needs from the fast tail; full precision for every
-    // entry still lives in docs/bench_passes_r*.csv
+    // the capture keeps only the last ~2000 chars of output, and sbt appends
+    // its own ~65-char "[success] Total time" epilogue after our line, so
+    // lines ≤ ~1930 survive intact (r7–r9's BENCH_r*.json came back
+    // parsed:null from a 1985-char line). A full per-query map does not fit
+    // above ~200 entries, so the line keeps 1-decimal entries for the slow
+    // queries only — an absent key reads "faster than the floor" — and the
+    // full map lives in the sidecar below.
     def qsSlow(floor: Double) = results.filter(_._2 >= floor)
       .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v, 1) }
       .mkString("{", ",", "}")
-    // the 0.45 rung overflows once ~160+ entries clear half a second (the
-    // r14b capture hit the empty-map rung); the ≥0.95 s rung keeps the
-    // DOMINATORS — the entries a regression hunt actually opens — visible
-    // in the artifact at any registry size short of pathological
-    val line = Seq(jsonLine(qsLine(2)), jsonLine(qs(fmtTrim)),
-        jsonLine(qsLine(1)), jsonLine(qs(fmtAdaptive)), jsonLine(qsLine(0)),
-        jsonLine(qsSlow(0.45)), jsonLine(qsSlow(0.95)), jsonLine("{}"))
+    val line = Seq(jsonLine(qsSlow(0.45)), jsonLine(qsSlow(0.95)), jsonLine("{}"))
       .find(_.length < 1930).get
-    if (line.length < jsonLine(qsLine(2)).length)
-      System.err.println("BENCH line over budget, degraded: " + jsonLine(qsLine(2)))
-    // the LOSSLESS sidecar (VERDICT r14 #3): the tail-budgeted line drops
-    // per-query precision at registry scale (149 of 289 keys survived in
-    // BENCH_r14.json), so the full-name, full-precision map — plus the
-    // chosen attempt's CSV path and md5 — lands in its own committed file.
-    // Same no-clobber discipline as the CSVs: suffix within a round.
+    // the LOSSLESS sidecar: the full-name, full-precision map — plus the
+    // chosen attempt's CSV path and md5 — in its own committed file, with
+    // the same no-clobber suffixes as the CSVs.
     try {
       val fullQs = results
         .map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
@@ -768,22 +429,13 @@ object Bench {
               java.nio.file.Paths.get(chosen.csvPath)))
             .map("%02x".format(_)).mkString
         } else ""
-      // pre-requote sweep values for every patched entry — the "keep the
-      // old numbers too" half of the requote contract
-      val sweepQs = chosen.results.toMap
-      val requoteQs = results.collect {
-        case (k, v) if sweepQs.get(k).exists(_ != v) =>
-          "\"" + k + "\":" + fmt(sweepQs(k), 3)
-      }.mkString("{", ",", "}")
       val full =
-        s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","sf":"$sfName"$envFields,"csv":"${chosen.csvPath}","csvMd5":"$csvMd5","requoteSweep":$requoteQs,"queries":$fullQs}"""
+        s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","sf":"$sfName"$envFields,"csv":"${chosen.csvPath}","csvMd5":"$csvMd5","queries":$fullQs}"""
       val out =
         if (sfName == "sf0.1") {
           val round = repoRound()
-          val cands = java.nio.file.Paths.get(f"BENCH_r$round%02d_full.json") +:
-            ('b' to 'z').map(c =>
-              java.nio.file.Paths.get(f"BENCH_r$round%02d_full_$c.json"))
-          cands.find(!java.nio.file.Files.exists(_)).getOrElse(cands.last)
+          firstFree(c => f"BENCH_r$round%02d${cpuTag}_full" +
+            (if (c.isEmpty) "" else "_" + c) + ".json")
         } else java.nio.file.Paths.get("/tmp/graft_bench_full.json")
       java.nio.file.Files.writeString(out, full + "\n")
       System.err.println(s"BENCH full sidecar written to $out")

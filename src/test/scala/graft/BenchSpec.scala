@@ -2,12 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's capture self-adjudication (VERDICT r12 #4; wall axis
-  * VERDICT r14 #1), replayed against the REAL committed capture history:
-  * every quiet same-code capture must read clean, every loaded-window
-  * driver artifact must flag itself — including the pure-wall-inflation
-  * windows (flat cpu, quiet load, sub-ceiling steal) that rounds ≤14
-  * could not see. No Spark session needed — the predicate is pure.
+/** The bench's capture self-adjudication, replayed against the REAL
+  * committed capture history: every quiet same-code capture must read
+  * clean, every loaded-window artifact must flag itself — including the
+  * pure-wall-inflation windows (flat cpu, quiet load, sub-ceiling steal).
+  * No Spark session needed — the predicate is pure.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -16,11 +15,11 @@ class BenchSpec extends AnyFunSuite {
     // cpu, entries, start/end 1-min loadavg)
     assert(!Bench.contaminatedCapture(1169.7, 255, "sf0.1", 1.12, 1.75)) // r11p
     assert(!Bench.contaminatedCapture(1227.5, 268, "sf0.1", 1.61, 2.90)) // r12b
-    assert(!Bench.contaminatedCapture(1299.3, 279, "sf0.1", 1.15, 2.73)) // r12e
+    assert(!Bench.contaminatedCapture(1299.3, 279, "sf0.1", 1.15, 2.73,
+      wallSec = 186.9)) // r12e, the slowest clean capture (0.670 wall/query)
     assert(!Bench.contaminatedCapture(1482.9, 281, "sf0.1", 0.89, 1.93)) // r13
-    // the driver's loaded-window artifacts (BENCH_r11/BENCH_r12.json),
-    // each independently adjudicated contaminated by the r11/r12
-    // verdicts: the CPU-inflated signature (loadavg looked ordinary)
+    // the loaded-window artifacts BENCH_r11.json and BENCH_r12.json:
+    // the CPU-inflated signature (loadavg looked ordinary)
     assert(Bench.contaminatedCapture(4207.9, 255, "sf0.1", 2.4, 2.9))
     assert(Bench.contaminatedCapture(3035.3, 279, "sf0.1", 2.2, 1.9))
     // the DELIBERATELY loaded r13 rerun (40 memory-churn hogs,
@@ -34,112 +33,51 @@ class BenchSpec extends AnyFunSuite {
       stealPct = 25.0))
     assert(!Bench.contaminatedCapture(1400.0, 281, "sf0.1", 2.0, 2.0,
       stealPct = 2.3))
-  }
-
-  test("derived quiet bands replay the committed capture history") {
-    // the live ceilings come from docs/bench_passes_r*.csv (per-round
-    // cleanest rate among calibration-eligible captures, last 3 rounds,
-    // median × band multiplier) — replay the REAL committed files
-    // through the parser and re-adjudicate the history under the
-    // derived bands, exactly as Bench.main will
-    val live = Bench.capturesFromCsvDir(new java.io.File("docs"))
-    assert(live.nonEmpty, "committed capture history must parse")
-    // LIVE sanity pin (VERDICT r14 #8): whatever rounds have landed, the
-    // derived bands must stay inside the physically plausible envelope —
-    // drift past these bounds is a calibration bug, caught in CI
-    val liveCpu = Bench.derivedCpuCeiling(live)
-    val liveWall = Bench.derivedWallCeiling(live)
-    assert(liveCpu > 6.0 && liveCpu < 11.0, s"live cpu ceiling $liveCpu")
-    assert(liveWall > 0.6 && liveWall < 0.85, s"live wall ceiling $liveWall")
-    // the REPLAY runs on the frozen ≤r14 history (the rounds the r14
-    // verdict adjudicated), so it stays deterministic as later rounds
-    // commit their own captures
-    val hist = live.filter(_.round <= 14)
-    val cpuCeil = Bench.derivedCpuCeiling(hist)
-    // the derived cpu band must stay near the hand calibration (quiet
-    // captures read 4.4–5.3 cpu/query; contaminated driver windows >10)
-    assert(cpuCeil > 6.0 && cpuCeil < 10.0, s"derived cpu ceiling $cpuCeil")
-    val wallCeil = Bench.derivedWallCeiling(hist)
-    // clean wall/query reads 0.61–0.64 over r12–r14 minima; the band
-    // must sit between the clean range and the r14g inflation at 0.702
-    assert(wallCeil > 0.64 && wallCeil < 0.702,
-      s"derived wall ceiling $wallCeil")
-    // quiet references stay clean under the derived bands...
-    assert(!Bench.contaminatedCapture(1349.7, 282, "sf0.1", 1.0, 2.0,
-      stealPct = 0.5, cpuCeiling = cpuCeil,
-      wallSec = 180.2, wallCeiling = wallCeil)) // r13c definitive
-    assert(!Bench.contaminatedCapture(1299.3, 279, "sf0.1", 1.15, 2.73,
-      cpuCeiling = cpuCeil,
-      wallSec = 186.9, wallCeiling = wallCeil)) // r12e
-    assert(!Bench.contaminatedCapture(1352.4, 284, "sf0.1", 4.27, 2.52,
-      stealPct = 0.2, cpuCeiling = cpuCeil,
-      wallSec = 173.4, wallCeiling = wallCeil)) // r14 definitive clean
-    // ...the driver's cpu-loaded windows still flag under them...
-    assert(Bench.contaminatedCapture(4207.9, 255, "sf0.1", 2.4, 2.9,
-      cpuCeiling = cpuCeil)) // BENCH_r11
-    assert(Bench.contaminatedCapture(3035.3, 279, "sf0.1", 2.2, 1.9,
-      cpuCeiling = cpuCeil)) // BENCH_r12
-    assert(Bench.contaminatedCapture(9162.8, 282, "sf0.1", 2.9, 2.2,
-      stealPct = 1.3, cpuCeiling = cpuCeil)) // BENCH_r13
-    // ...and the r14 blind spot is CLOSED: BENCH_r14.json (=r14g,
-    // attempt 3 — cpu/query 4.77 in band, steal 1.5, load ≤1.83,
-    // every pre-wall signature clean) ships 202.8 s wall over 289
-    // entries (+15% vs the 173.4 s same-code clean capture) and must
-    // now flag on the wall axis alone
+    // the wall-inflated signature at flat cpu, quiet load and low steal:
+    // BENCH_r14.json (=r14g, 202.8 s / 289 = 0.70 wall/query) and r14d
+    // (233.0 s / 288 = 0.81) flag on the wall axis alone
     assert(Bench.contaminatedCapture(1378.5, 289, "sf0.1", 1.67, 1.83,
-      stealPct = 1.5, cpuCeiling = cpuCeil,
-      wallSec = 202.8, wallCeiling = wallCeil), "r14g must flag on wall")
-    // r14d — the capture commit 4847a named "pure wall-inflation
-    // window": cpu/query 4.65 in band, steal 4.4 under ceiling, load
-    // quiet, wall 233.0/288 = 0.81 — flags on wall
+      stealPct = 1.5, wallSec = 202.8), "r14g must flag on wall")
     assert(Bench.contaminatedCapture(1339.2, 288, "sf0.1", 2.57, 2.00,
-      stealPct = 4.4, cpuCeiling = cpuCeil,
-      wallSec = 233.0, wallCeiling = wallCeil), "r14d must flag on wall")
+      stealPct = 4.4, wallSec = 233.0), "r14d must flag on wall")
   }
 
-  test("calibration eligibility: warm retries and loud cold attempts " +
-      "are excluded from the bands") {
-    val hist = Bench.capturesFromCsvDir(new java.io.File("docs"))
-    // r14g is a warm retry (attempt=3): parsed, but never calibrates
-    val r14g = hist.filter(c => c.round == 14 && c.attempt > 1)
-    assert(r14g.nonEmpty, "warm retry attempts must still parse")
-    assert(r14g.forall(!Bench.calibrationEligible(_)))
-    // r13b (the deliberately loaded rerun, load1 31/43) is a COLD
-    // attempt whose cpu sits in band — without the non-circular
-    // load/steal filter it would feed 1.365 wall/query into the band
-    val loud = hist.filter(c => c.round == 13 && c.load1Max > 20)
-    assert(loud.nonEmpty, "the loaded r13b capture must parse")
-    assert(loud.forall(!Bench.calibrationEligible(_)))
-    // a stamped-contaminated cold attempt is excluded even when its
-    // header telemetry looks quiet (ADVICE r14 #1)
-    val stamped = Bench.CsvCapture(15, 1, 290, 4.7, 0.62, 2.0, 1.0,
-      stamped = Some(true))
-    assert(!Bench.calibrationEligible(stamped))
-    assert(Bench.calibrationEligible(stamped.copy(stamped = Some(false))))
-    assert(Bench.calibrationEligible(stamped.copy(stamped = None)))
-    // unreadable telemetry (-1) cannot condemn a cold attempt
-    assert(Bench.calibrationEligible(
-      Bench.CsvCapture(12, 1, 268, 4.6, 0.63, -1.0, -1.0, None)))
-  }
-
-  test("derivedCeiling falls back without history, uses last 3 rounds, " +
-      "and averages the middle pair on even sizes") {
-    assert(Bench.derivedCeiling(Nil, 1.8, 8.0) == 8.0)
-    assert(Bench.derivedCeiling(Seq((13, 5.0)), 1.8, 8.0) == 8.0)
-    // per-round MIN (the cleanest capture) feeds the median: round 12's
-    // contaminated 10.9 is ignored in favor of its quiet 4.6
-    val h = Seq((11, 4.6), (11, 16.5), (12, 4.6), (12, 10.9), (13, 4.8),
-      (10, 99.0), (9, 99.0)) // rounds 9/10 fall outside the last-3 window
-    assert(math.abs(Bench.derivedCeiling(h, 1.8, 8.0) - 1.8 * 4.6) < 1e-9)
-    // exactly 2 rounds: the median is the AVERAGE of the two values —
-    // byRound(size/2) would pick the larger, a lenient band right at
-    // the minimum history the function accepts (ADVICE r14 #2)
-    val two = Seq((13, 4.0), (14, 6.0))
-    assert(math.abs(Bench.derivedCeiling(two, 1.0, 8.0) - 5.0) < 1e-9)
+  test("fixed ceilings reproduce the verdict on every committed sf0.1 capture") {
+    // parse each docs/bench_passes_r*.csv the way its header and BestSec
+    // column read: absent telemetry is -1 (unknown, never incriminating)
+    val files = Option(new java.io.File("docs").listFiles).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith("bench_passes_r") &&
+        f.getName.endsWith(".csv"))
+    val captures = files.toSeq.flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f.toPath)
+      val head = lines.get(0)
+      if (!head.contains("sf0.1")) None else {
+        def d(re: String): Double = re.r.findFirstMatchIn(head)
+          .map(_.group(1).toDouble).getOrElse(-1.0)
+        val rows = (2 until lines.size).map(lines.get(_).split(",", -1))
+        val wall = rows.map(_(3).toDouble).sum
+        val name = f.getName.stripPrefix("bench_passes_").stripSuffix(".csv")
+        val flagged = Bench.contaminatedCapture(d("procCpuSec=([0-9.]+)"),
+          rows.size, "sf0.1", d("start_loadavg=\\[([0-9.]+)"),
+          d("end_loadavg=\\[([0-9.]+)"), d("stealPct=(-?[0-9.]+)"), wall)
+        Some((name, flagged, head.contains("contaminated=true")))
+      }
+    }
+    assert(captures.size == 70)
+    val expected = ("r08 r10 r11f r11g r11j r11q r12 r12c r12d r12f r13 r13b " +
+      "r13d r13e r14b r14c r14d r14e r14f r14g r15 r15c r15e r15f r15g r15h " +
+      "r15i r15j r15k r15l r15m r15n r15o r15p r15q r15r r15t r15u r15v r16 " +
+      "r16b r16e r16g r17").split(" ").toSet
+    assert(expected.size == 44)
+    assert(captures.filter(_._2).map(_._1).toSet == expected)
+    // every capture that stamped itself contaminated still reads so
+    val stamped = captures.filter(_._3).map(_._1)
+    assert(stamped.size == 22)
+    assert(stamped.forall(expected), stamped.filterNot(expected))
   }
 
   test("cleanestIndex: min-wall clean attempt wins, else least-poisoned") {
-    // two clean attempts: the one with less wall ships (VERDICT r14 #1)
+    // two clean attempts: the one with less wall ships
     assert(Bench.cleanestIndex(Seq(false, false),
       Seq(4.6, 4.7), Seq(0.70, 0.61)) == 1)
     // a contaminated first attempt followed by a clean rerun ships the rerun
@@ -152,36 +90,13 @@ class BenchSpec extends AnyFunSuite {
       Seq(12.0, 9.1, 10.4), Seq(1.0, 1.3, 1.1)) == 1)
   }
 
-  test("requote targets: far-above-clean-history entries only, worst first") {
-    val minima = Map("q01" -> 0.5, "q02" -> 2.0, "q03" -> 0.1, "q04" -> 1.0)
-    val sweep = Seq(
-      "q01" -> 11.9, // 23.8x and +11.4s -> requote (the r15 q32 shape)
-      "q02" -> 2.8,  // +0.8s but only 1.4x -> keep (regression-or-noise, near ref)
-      "q03" -> 0.45, // 4.5x but only +0.35s -> keep (sub-second jitter)
-      "q04" -> 5.0,  // 5x and +4s -> requote
-      "q05" -> 9.0)  // no clean history -> never requoted
-    assert(Bench.requoteTargets(sweep, minima, 80) == Seq("q01", "q04"))
-    // the cap keeps the worst inflation
-    assert(Bench.requoteTargets(sweep, minima, 1) == Seq("q01"))
-  }
-
-  test("clean per-query minima derive from calibration-eligible captures") {
-    val minima = Bench.cleanQueryMinima(new java.io.File("docs"))
-    assert(minima.nonEmpty, "committed clean history must parse")
-    // a heavyweight entry present in every round has a plausible clean min
-    assert(minima.get("q195_stream_sessions").exists(v => v > 0.5 && v < 10))
-    // minima come only from clean captures: the r15 contaminated driver
-    // window read q32 at 11.9s; the clean reference must be sub-second
-    assert(minima.get("q32_window_running_sum").exists(_ < 1.5),
-      s"q32 clean min ${minima.get("q32_window_running_sum")}")
-  }
-
   test("contaminatedCapture is calibrated at sf0.1 only and total-safe") {
-    assert(!Bench.contaminatedCapture(4207.9, 255, "sf0.01", 31.0, 31.0))
+    assert(!Bench.contaminatedCapture(4207.9, 255, "sf0.01", 31.0, 31.0,
+      wallSec = 400.0))
     assert(!Bench.contaminatedCapture(4207.9, 255, "sf0.001", 2.0, 2.0))
     assert(!Bench.contaminatedCapture(100.0, 0, "sf0.1", 2.0, 2.0))
     // unreadable proc files (-1 samples) are unknown, not incriminating,
-    // and a negative wallSec (legacy caller) skips the wall axis
+    // and a negative wallSec skips the wall axis
     assert(!Bench.contaminatedCapture(1400.0, 281, "sf0.1", -1.0, -1.0,
       stealPct = -1.0, wallSec = -1.0))
   }
