@@ -142,9 +142,11 @@ object Db {
     * measured as part of the per-query floor (VERDICT r15 #4). All spread
     * call sites are map-only subtrees over one leaf, whose partition
     * count is the LEAF's:
-    *  - file sources: replay FilePartition's split packing over the
-    *    relation's (cached) file listing — the same arithmetic
-    *    FileSourceScanExec uses, reading only catalog metadata;
+    *  - unpartitioned file sources: replay FilePartition's split packing
+    *    over the relation's (cached) file listing — the same arithmetic
+    *    FileSourceScanExec uses, reading only catalog metadata. A
+    *    partitioned source takes the exact probe below: the listing here
+    *    ignores partition filters, so a pruned scan would over-count;
     *  - RDD-backed leaves (localCheckpoint): the RDD's partition count
     *    is already known;
     *  - anything else (multiple leaves, exotic sources): fall back to
@@ -155,7 +157,7 @@ object Db {
     import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
     df.queryExecution.analyzed.collectLeaves() match {
       case Seq(l: LogicalRelation) => l.relation match {
-        case fs: HadoopFsRelation =>
+        case fs: HadoopFsRelation if fs.partitionSchema.isEmpty =>
           val parts = fs.location.listFiles(Nil, Nil)
           val maxSplit = FilePartition.maxSplitBytes(df.sparkSession, parts)
           val openCost =

@@ -23,6 +23,14 @@ object GraftSession {
       // never depend on whether Db.events (which also sets it) ran first
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // generated classes are cached per (classloader, code). With artifact
+      // isolation on, every cloned session (each writeStream.start()) gets
+      // its own executor classloader and recompiles the same code; graft
+      // adds no session artifacts, so isolation buys nothing
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // one q154 execution generates ~95 classes; the default 100-entry
+      // bound, split over the cache's segments, evicts them every run
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft_warehouse"))
       .config("spark.ui.enabled", "false")

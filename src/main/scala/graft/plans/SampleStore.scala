@@ -198,13 +198,7 @@ object SampleStore {
     val md = java.security.MessageDigest.getInstance("MD5")
     val payload = Seq(diskFormatVersion, leaf.canonicalized.toString,
       seed, mode, maxSamplePartitions, sampleSize, fp).mkString("\u0000")
-    val key = md.digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    if (sys.env.contains("SPARK_GRAFT_SAMPLE_DEBUG"))
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/tmp/graft-sample-debug",
-          key + "-" + ProcessHandle.current().pid() + ".txt"), payload)
-      catch { case scala.util.control.NonFatal(_) => () }
-    key
+    md.digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
   private def diskLoad(dir: java.nio.file.Path,

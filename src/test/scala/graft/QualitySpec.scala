@@ -132,6 +132,18 @@ class QualitySpec extends SparkSpec {
     assert(Db.scanPartitions(joined) == joined.rdd.getNumPartitions)
   }
 
+  test("scanPartitions counts only the partitions a pruned scan reads") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pruned-scan")
+    try {
+      // one file per partition value, so listing all 8 would count 8 splits
+      spark.range(0, 800).withColumn("p", col("id") % 8).coalesce(1)
+        .write.mode("overwrite").partitionBy("p").parquet(dir.toString)
+      val pruned = spark.read.parquet(dir.toString).where(col("p") === 3)
+      assert(Db.scanPartitions(pruned) == pruned.rdd.getNumPartitions)
+    } finally
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("q201 gate: TPC-H FKs are clean; orphan column present for events") {
     val rows = run("q201_ref_integrity").collect()
     assert(rows.length == 5)
