@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** Engine facade (the Spark-side analog of the reference's console/master
   * entry, /root/reference/src/console/SkinnerCmd.java + src/execution/
@@ -31,6 +32,13 @@ object GraftSession {
       // one q154 execution generates ~95 classes; the default 100-entry
       // bound, split over the cache's segments, evicts them every run
       .config("spark.sql.codegen.cache.maxEntries", "1024")
+      // the default FileContext-based manager renames each checkpoint file
+      // through AbstractFileSystem.renameInternal, which without libhadoop
+      // forks a `readlink` process twice per rename; the FileSystem-based
+      // one keeps the same write-temp-then-rename protocol and Spark's
+      // checksum files but renames with File.renameTo
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft_warehouse"))
       .config("spark.ui.enabled", "false")

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.streaming.EventStreams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -41,6 +43,45 @@ class StreamingSpec extends SparkSpec {
       val got = spark.table("hourly_test").collect().map(_.toString).sorted.toSeq
       assert(got == expected)
     } finally q.stop()
+  }
+
+  test("a restarted query resumes from its checkpoint files with Spark's checksums") {
+    val session = spark
+    import session.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // 7 keys, updates spread over 3 batches, every fifth change a delete
+    val changes = (0 until 30).map { i =>
+      (i % 7L, ts("2024-01-01 10:00:00").getTime * 1000 + i * 60000000L,
+        i.toLong, i * 1.5, if (i % 5 == 4) "D" else "U")
+    }
+    def latest(df: org.apache.spark.sql.DataFrame) = EventStreams.cdcLatest(
+      df.toDF("user_id", "us", "tie", "value", "op")
+        .withColumn("ts", timestamp_micros(col("us"))), Seq("user_id"))
+    val expected = latest(changes.toDF()).collect().map(_.toString).sorted.toSeq
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val input = MemoryStream[(Long, Long, Long, Double, String)]
+    def start() = latest(input.toDF()).writeStream.format("memory")
+      .queryName("cdc_restart").option("checkpointLocation", ckpt)
+      .outputMode("complete").start()
+    val q1 = start()
+    try for (b <- changes.grouped(10).take(2)) {
+      input.addData(b); q1.processAllAvailable()
+    } finally q1.stop()
+    // unload the state stores so the restarted query reads its state back
+    // from the checkpoint's delta files
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    val q2 = start()
+    try {
+      input.addData(changes.drop(20)); q2.processAllAvailable()
+      assert(q2.lastProgress.batchId == 2, "the restart must resume at batch 2")
+      val got = spark.table("cdc_restart").collect().map(_.toString).sorted.toSeq
+      assert(got.nonEmpty && got == expected)
+    } finally q2.stop()
+    val stateFiles = scala.util.Using.resource(
+        java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt, "state")))(
+      _.iterator().asScala.map(_.getFileName.toString).toList)
+    assert(stateFiles.exists(_.matches("\\d+\\.delta\\.crc")),
+      s"no checkpoint checksum file among ${stateFiles.distinct.sorted.mkString(", ")}")
   }
 
   test("mapGroupsWithState accumulates running per-user totals across batches") {
