@@ -1,26 +1,17 @@
 package graft
 
 /** Plan inspector: prints the optimized logical plan + formatted physical
-  * plan for one named query, plus the UCT rule's learned-order stats — the
-  * textual analog of the reference's `explain` command
-  * (/root/reference/src/console/SkinnerCmd.java:246-289).
+  * plan for one named query, plus the UCT rule's learned order and its
+  * per-level tree summary — the textual analog of the reference engine's
+  * `explain` command (src/console/SkinnerCmd.java:246-289).
   *
-  * Usage: Explain <queryName> [sfDir] [dotDir]
-  *
-  * With a third argument, Graphviz DOT snapshots of the UCT tree are
-  * written to that directory every 50 episodes DURING the search (the
-  * reference's `explain <dir> <bound> <freq>` + TreePlotter rendering).
+  * Usage: Explain <queryName> [sfDir]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q05_local_supplier_volume")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    val dotDir = if (args.length > 2) Some(args(2)) else None
-    dotDir.foreach { d =>
-      spark.conf.set("spark.graft.uct.explainDir", d)
-      spark.conf.set("spark.graft.uct.explainFreq", "50")
-    }
     val df = SparkEntry.queries(name)(spark, sfDir)
     println(s"=== $name: optimized logical plan ===")
     println(df.queryExecution.optimizedPlan.treeString)
@@ -37,7 +28,6 @@ object Explain {
         }
       case None => println("=== UCT: rule did not fire ===")
     }
-    dotDir.foreach(d => println(s"=== UCT DOT tree snapshots written under $d ==="))
     // runtime switching only shows itself on execution (AQE stage
     // boundaries), so run the query and report any mid-query re-order
     graft.plans.RuntimeOrderSwitchRule.clearLog()

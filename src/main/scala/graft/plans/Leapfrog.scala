@@ -330,7 +330,7 @@ object Leapfrog {
     * IO. Where it matters, disable routing for the query
     * (`spark.graft.wcoj.enabled=false`). */
   private def sampleRows(df: DataFrame, n: Int): Array[Row] =
-    SampleStore.interleavedSample(df.rdd, n, seed = 727L, head = false)
+    SampleStore.interleavedSample(df.rdd, n, seed = 727L)
 
   /** Type-general entry point: variables of ANY orderable Spark type.
     * Integral variables run through `join` directly; every other type

@@ -21,7 +21,7 @@ final case class LeafSample(
 /** Collects + caches deterministic per-leaf samples of the already-filtered
   * leaf subplan (pushed-down predicates shape the sample).
   *
-  * Default mode is a SEEDED PER-PARTITION RESERVOIR (Algorithm R with a
+  * The sample is a SEEDED PER-PARTITION RESERVOIR (Algorithm R with a
   * partition-indexed seed): one pass over each partition, bounded memory
   * (perPart rows), and every row of the partition equally likely to be
   * kept. Parquet at scale is usually sorted/clustered (ids ascending,
@@ -33,16 +33,17 @@ final case class LeafSample(
   * collects only perPart rows per partition to the driver, and the SCAN
   * itself is bounded too: at most `maxSamplePartitions` (64) seeded-
   * randomly-chosen partitions are ever scheduled, so plan-time IO stays
-  * flat however large the leaf is. Set
-  * `spark.graft.uct.sampleMode=head` to opt back into the cheap prefix
-  * take when plan-time scan cost matters more than sample fidelity.
-  * Samples stay deterministic in both modes: the seed is fixed per
-  * (conf.seed, partition index), and partition layout of a parquet scan is
-  * stable. Rows are interleaved round-robin across partitions either way.
+  * flat however large the leaf is. Samples are deterministic: the seed is
+  * fixed per (`seed`, partition index), and partition layout of a parquet
+  * scan is stable. Rows are interleaved round-robin across partitions.
   * Cache key = canonicalized plan, so repeated queries over the same
   * filtered scans reuse samples across the session.
   */
 object SampleStore {
+
+  /** Reservoir seed for every leaf sample (UCT leaves and the WCOJ probes
+    * alike, so both read one cached entry). */
+  private val seed = 42L
 
   /** Cache payload: sampled columns keyed by POSITION in the canonicalized
     * leaf's output, not by exprId. Canonically-equal plans (self-join roles,
@@ -58,9 +59,7 @@ object SampleStore {
 
   /** Bounded LRU: canonicalized-plan keys embed filter literals, so unbounded
     * growth (sampleSize rows + retained plan per entry) would leak driver
-    * memory across a long session of distinct constants. Seed and mode are
-    * part of the key — switching `spark.graft.uct.sampleMode` mid-session
-    * must not silently serve samples taken under the other setting.
+    * memory across a long session of distinct constants.
     *
     * Sizing: the r10 judge measured ~1,000+ distinct (filtered-leaf, attrs)
     * keys across the 113-query JOB sweep — far past the old 256-entry bound,
@@ -70,9 +69,9 @@ object SampleStore {
     * driver sized for a 113-query analytical session). */
   private val maxEntries = 2048
   private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(LogicalPlan, Long, String), PosSample](64, 0.75f, true) {
+    new java.util.LinkedHashMap[LogicalPlan, PosSample](64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(LogicalPlan, Long, String), PosSample]): Boolean =
+          e: java.util.Map.Entry[LogicalPlan, PosSample]): Boolean =
         this.size() > maxEntries
     })
 
@@ -90,7 +89,7 @@ object SampleStore {
     * scans, never corrupt); one stripe per key would pin the retained
     * canonical plans the LRU bound exists to cap. */
   private val lockStripes = Array.fill(64)(new Object)
-  private def stripeFor(key: (LogicalPlan, Long, String)): Object =
+  private def stripeFor(key: LogicalPlan): Object =
     lockStripes(math.floorMod(key.hashCode, lockStripes.length))
 
   /** Plan-time sampling telemetry (driver-side, test/bench attribution): how
@@ -125,7 +124,7 @@ object SampleStore {
   // sampling sweep (the r10 judge measured ~88 s of first-touch sample scans
   // across a cold 174-query bench). So sample scans WRITE THROUGH to a small
   // on-disk cache, keyed by a hash that is stable across JVMs:
-  //   md5(canonicalized-plan text, seed, mode, partition bound, sampleSize,
+  //   md5(canonicalized-plan text, partition bound, sampleSize,
   //       source-file fingerprint)
   // where the fingerprint is the sorted (path, length, mtime) list of the
   // leaf's parquet files — so rewriting a table silently invalidates its
@@ -140,9 +139,11 @@ object SampleStore {
   private val diskFormatVersion = 2
   private val maxDiskEntries = 8192
 
+  /** `spark.graft.uct.sampleDiskCacheDir`, else `target/graft-sample-cache`
+    * when `target` exists, else under java.io.tmpdir; None (memory-only)
+    * when the directory cannot be created. */
   private def resolveDiskDir(spark: SparkSession): Option[java.nio.file.Path] = {
     val conf = spark.conf.get("spark.graft.uct.sampleDiskCacheDir", "")
-    if (conf == "off") return None
     val dir =
       if (conf.nonEmpty) java.nio.file.Paths.get(conf)
       else if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("target")))
@@ -193,11 +194,10 @@ object SampleStore {
 
   /** The payload includes the partition bound, so entries written under a
     * different bound never match. */
-  private def diskKey(leaf: LogicalPlan, seed: Long, mode: String,
-      sampleSize: Int, fp: String): String = {
+  private def diskKey(leaf: LogicalPlan, sampleSize: Int, fp: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val payload = Seq(diskFormatVersion, leaf.canonicalized.toString,
-      seed, mode, maxSamplePartitions, sampleSize, fp).mkString("\u0000")
+      maxSamplePartitions, sampleSize, fp).mkString("\u0000")
     md.digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
@@ -266,18 +266,18 @@ object SampleStore {
     case other => other
   }
 
-  /** Per-partition sample (seeded Algorithm-R reservoir, or a cheap prefix
-    * take when `head`) interleaved ROUND-ROBIN across partitions — every
-    * partition contributes to the final n rows, so data clustered by key
-    * (sorted parquet, the common layout) cannot hide a range or a heavy
-    * hitter in the partitions a naive flatten-then-take would drop. One
+  /** Per-partition sample (seeded Algorithm-R reservoir) interleaved
+    * ROUND-ROBIN across partitions — every partition contributes to the
+    * final n rows, so data clustered by key (sorted parquet, the common
+    * layout) cannot hide a range or a heavy hitter in the partitions a
+    * naive flatten-then-take would drop. One
     * pass, O(perPart) memory per task, only perPart rows per partition
     * reach the driver. Shared by the UCT leaf sampler and
     * `Leapfrog.skewAwareShares`.
     */
   private[plans] def interleavedSample(
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-      n: Int, seed: Long, head: Boolean): Array[org.apache.spark.sql.Row] = {
+      n: Int, seed: Long): Array[org.apache.spark.sql.Row] = {
     val allParts = math.max(rdd.getNumPartitions, 1)
     // bound the plan-time SCAN, not just the collect: the reservoir pass
     // consumes its whole partition iterator, so over a 100 TB leaf an
@@ -307,27 +307,22 @@ object SampleStore {
     val perPart = math.max(1, (2L * n / nParts).toInt + 1)
     val parts = sampled
       .mapPartitionsWithIndex { (i, it) =>
-        val rows =
-          if (head) it.take(perPart).toArray // prefix take: cheap, biased
+        // Algorithm R: uniform without replacement, one pass, O(perPart)
+        // memory; seeded per partition so the sample is reproducible
+        val rnd = new java.util.Random(seed * 1000003L + i)
+        val res = new Array[org.apache.spark.sql.Row](perPart)
+        var filled = 0
+        var m = 0L
+        while (it.hasNext) {
+          val row = it.next()
+          if (filled < perPart) { res(filled) = row; filled += 1 }
           else {
-            // Algorithm R: uniform without replacement, one pass, O(perPart)
-            // memory; seeded per partition so the sample is reproducible
-            val rnd = new java.util.Random(seed * 1000003L + i)
-            val res = new Array[org.apache.spark.sql.Row](perPart)
-            var filled = 0
-            var m = 0L
-            while (it.hasNext) {
-              val row = it.next()
-              if (filled < perPart) { res(filled) = row; filled += 1 }
-              else {
-                val j = (rnd.nextDouble() * (m + 1)).toLong
-                if (j < perPart) res(j.toInt) = row
-              }
-              m += 1
-            }
-            java.util.Arrays.copyOf(res, filled)
+            val j = (rnd.nextDouble() * (m + 1)).toLong
+            if (j < perPart) res(j.toInt) = row
           }
-        Iterator.single(i -> rows)
+          m += 1
+        }
+        Iterator.single(i -> java.util.Arrays.copyOf(res, filled))
       }
       .collect().sortBy(_._1).map(_._2)
     val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
@@ -342,9 +337,8 @@ object SampleStore {
   }
 
   def sample(spark: SparkSession, leaf: LogicalPlan,
-             attrs: Seq[AttributeReference], sampleSize: Int,
-             seed: Long = 42L, mode: String = "reservoir"): LeafSample = {
-    val key = (leaf.canonicalized, seed, mode)
+             attrs: Seq[AttributeReference], sampleSize: Int): LeafSample = {
+    val key = leaf.canonicalized
     val wanted: Seq[Attribute] =
       if (attrs.nonEmpty) attrs else leaf.output.take(1)
     val wantedPos = wanted.map(a => leaf.output.indexWhere(_.exprId == a.exprId))
@@ -377,7 +371,7 @@ object SampleStore {
       val diskCtx: Option[(java.nio.file.Path, String)] = for {
         dir <- resolveDiskDir(spark)
         fp <- fileFingerprint(leaf)
-      } yield (dir, diskKey(leaf, seed, mode, sampleSize, fp))
+      } yield (dir, diskKey(leaf, sampleSize, fp))
       // partial memory entry ⇒ skip the load (the rescan below widens and
       // rewrites the disk entry anyway)
       val diskCached: Option[PosSample] =
@@ -428,8 +422,7 @@ object SampleStore {
       val proj = GraftShims
         .ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.Project(projAttrs, leaf))
       val t0 = System.nanoTime()
-      val rows =
-        interleavedSample(proj.rdd, sampleSize, seed, mode == "head")
+      val rows = interleavedSample(proj.rdd, sampleSize, seed)
       scanCountA.incrementAndGet()
       scanNanosA.addAndGet(System.nanoTime() - t0)
       val cols = allPos.zipWithIndex.map { case (p, i) =>

@@ -173,15 +173,6 @@ final class UctJoinOrder(
     var bestMean = Double.NegativeInfinity
     while (episodes < maxEpisodes && sinceImproved < window) {
       episode()
-      // periodic during-search tree rendering — the reference's
-      // `explain <dir> <bound> <freq>` console mode, which dumps a
-      // TreePlotter visualization of the UCT state every <freq> samples
-      // (/root/reference/src/console/SkinnerCmd.java:246-289,
-      // src/visualization/TreePlotter.java:1-88). Graphviz DOT text:
-      // renderable anywhere, no plotting library needed.
-      if (conf.explainFreq > 0 && conf.explainDir.nonEmpty
-          && episodes % conf.explainFreq == 0)
-        writeSnapshot(s"ep$episodes")
       val (_, (s, c)) =
         orderRewards.maxBy { case (o, (rs, rc)) => (rs / rc, rc, orderKey(o)) }
       val mean = s / c
@@ -189,50 +180,8 @@ final class UctJoinOrder(
       else sinceImproved += 1
     }
     stoppedBy = if (sinceImproved >= window) "converged" else "cap"
-    if (conf.explainFreq > 0 && conf.explainDir.nonEmpty) writeSnapshot("final")
     val (best, _) = orderRewards.maxBy { case (o, (s, c)) => (s / c, c, orderKey(o)) }
     best
-  }
-
-  private lazy val searchTag: Int = UctJoinOrder.nextSearchId()
-
-  private def writeSnapshot(suffix: String): Unit =
-    // a debug-visualization knob must never abort query planning: an
-    // unwritable explainDir is reported, not thrown
-    try {
-      val dir = java.nio.file.Paths.get(conf.explainDir)
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.writeString(
-        dir.resolve(s"uct_s$searchTag$suffix.dot"), treeDot())
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"graft UCT explain snapshot failed ($suffix): $e")
-    }
-
-  /** Graphviz DOT rendering of the current UCT tree (top `maxChildren`
-    * children per node by visits, `maxDepth` levels): each node shows the
-    * chosen leaf, its visit count and mean reward — what the reference's
-    * TreePlotter draws per snapshot. */
-  def treeDot(maxDepth: Int = 3, maxChildren: Int = 8): String = {
-    val sb = new StringBuilder
-    sb.append("digraph uct {\n  node [shape=box fontname=\"monospace\"];\n")
-    sb.append(s"""  n0 [label="root\\nepisodes $episodes\\nvisits ${root.visits}"];\n""")
-    var id = 0
-    def rec(node: Node, nid: Int, depth: Int): Unit = {
-      if (depth >= maxDepth) return
-      node.children.toSeq.sortBy(-_._2.visits).take(maxChildren).foreach {
-        case (leaf, ch) =>
-          id += 1
-          val cid = id
-          val mean = ch.rewardSum / math.max(1, ch.visits)
-          sb.append(f"""  n$cid [label="leaf $leaf\\nvisits ${ch.visits}\\nmean $mean%.3f"];\n""")
-          sb.append(s"  n$nid -> n$cid;\n")
-          rec(ch, cid, depth + 1)
-      }
-    }
-    rec(root, 0, 0)
-    sb.append("}\n")
-    sb.toString
   }
 
   private def orderKey(o: List[Int]): Double = -o.zipWithIndex.map {
@@ -260,20 +209,12 @@ final class UctJoinOrder(
   }
 }
 
-object UctJoinOrder {
-  private val searchIds = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def nextSearchId(): Int = searchIds.incrementAndGet()
-}
-
 final case class UctConf(
     episodes: Int,
     budgetPerEpisode: Int,
     explorationWeight: Double,
     sampleSize: Int,
-    seed: Long,
-    explainDir: String = "",       // non-empty: dump DOT tree snapshots here
-    explainFreq: Int = 0,          // every N episodes (0 = off)
-    sampleMode: String = "reservoir") // reservoir | head (see SampleStore)
+    seed: Long)
 
 object UctConf {
   /** Defaults: budget mirrors the reference's BUDGET_PER_EPISODE=500

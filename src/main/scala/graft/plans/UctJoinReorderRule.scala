@@ -22,17 +22,6 @@ final class UctJoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] wi
 
   import UctJoinReorderRule._
 
-  /** `UctConf.default` plus the three settings a session may change: DOT
-    * tree snapshots (`explainDir`/`explainFreq`) and the leaf sample mode
-    * (`sampleMode=head` is the cheap, head-biased prefix take). */
-  private def uctConf: UctConf = {
-    val c = spark.conf
-    UctConf.default.copy(
-      explainDir = c.get("spark.graft.uct.explainDir", ""),
-      explainFreq = c.get("spark.graft.uct.explainFreq", "0").toInt,
-      sampleMode = c.get("spark.graft.uct.sampleMode", "reservoir"))
-  }
-
   private def enabled: Boolean =
     spark.conf.get("spark.graft.uct.enabled", "true").toBoolean
 
@@ -66,7 +55,7 @@ final class UctJoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] wi
 
   private def reorder(root: Join): Option[LogicalPlan] = {
     JoinGraph.extract(root).filter(_.leaves.forall(scanShaped)).map { graph =>
-      val c = uctConf
+      val c = UctConf.default
       // repeated query shapes (warm benchmarks, dashboards) skip the search:
       // the learned order is cached per canonicalized join subtree
       val cacheKey = root.canonicalized
@@ -85,8 +74,7 @@ final class UctJoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] wi
           import scala.concurrent.duration._
           Await.result(Future.sequence(graph.leaves.indices.map { i =>
             Future(SampleStore.sample(spark, graph.leaves(i),
-              keysPerLeaf.getOrElse(i, Seq.empty), c.sampleSize,
-              c.seed, c.sampleMode))
+              keysPerLeaf.getOrElse(i, Seq.empty), c.sampleSize))
           }), 300.seconds)
         }
         val tSearch0 = System.nanoTime()

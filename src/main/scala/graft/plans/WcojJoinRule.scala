@@ -58,16 +58,14 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   *      column positions (`e2.src = e1.dst`, where a many-to-many edge
   *      makes the cycle's output exceed its inputs) — or, failing that
   *      structural check, a SAMPLED m:n probe: every intra-core join
-  *      column shows mean key multiplicity ≥
-  *      `spark.graft.wcoj.mnThreshold` in its leaf's cached bounded
-  *      sample, which admits the symmetric/multi-table motifs the
-  *      structural check misses (bipartite butterfly census, a cycle of
-  *      distinct m:n edge tables). A key–FK loop always carries a
-  *      unique-key side (TPC-H q05's c_nationkey = s_nationkey; q85's
-  *      nation pair on n_name) whose result never exceeds the largest
-  *      input: binary hash joins + UCT ordering stay optimal there, so
-  *      both checks decline it (`spark.graft.wcoj.requireGrowth=false`
-  *      opts any cyclic core back in).
+  *      column shows mean key multiplicity ≥ `mnThreshold` (1.5) in its
+  *      leaf's cached bounded sample, which admits the symmetric/
+  *      multi-table motifs the structural check misses (bipartite
+  *      butterfly census, a cycle of distinct m:n edge tables). A key–FK
+  *      loop always carries a unique-key side (TPC-H q05's c_nationkey =
+  *      s_nationkey; q85's nation pair on n_name) whose result never
+  *      exceeds the largest input: binary hash joins + UCT ordering stay
+  *      optimal there, so both checks decline it.
   *
   * Only the GYO-STUCK residue (the cyclic core) is routed; the ears GYO
   * sheds — dimension legs, chains hanging off the cycle — are folded back
@@ -88,7 +86,7 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * GRID SIZING is byte-budgeted and skew-aware. Each cell buffers its
   * input fragments as in-memory flat arrays, so the grid must be fine
   * enough that Σ_R |R| / Π_{v∈vars(R)} share(v) fits a per-cell budget
-  * (`spark.graft.wcoj.cellBudgetBytes`): the rule grows the cell count
+  * (`cellBudgetBytes`, 512 MB): the rule grows the cell count
   * from `maxCells` (32) up to `maxCellsHard` (1024) until the budget
   * holds, and DECLINES the route (keeping the spill-capable binary plan)
   * when even the hard cap cannot. The heavy-hitter probe runs BEFORE any
@@ -99,23 +97,24 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * pinned to share 1 so the cell budget is spent on dimensions that
   * actually spread load.
   *
-  * Disable with `spark.graft.wcoj.enabled=false`.
+  * The three limits default to the companion's constants of the same
+  * names; tests build the rule with other values. Disable with
+  * `spark.graft.wcoj.enabled=false`.
   */
-final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Logging {
+final class WcojJoinRule(
+    spark: SparkSession,
+    mnThreshold: Double = WcojJoinRule.mnThreshold,
+    cellBudgetBytes: Long = WcojJoinRule.cellBudgetBytes,
+    joinBackBudgetBytes: Long = WcojJoinRule.joinBackBudgetBytes)
+    extends Rule[LogicalPlan] with Logging {
 
-  import WcojJoinRule._
+  // the three limits come from the constructor, everything else from the
+  // companion
+  import WcojJoinRule.{mnThreshold => _, cellBudgetBytes => _,
+    joinBackBudgetBytes => _, _}
 
   private def enabled: Boolean =
     spark.conf.get("spark.graft.wcoj.enabled", "true").toBoolean
-
-  /** Per-cell INPUT byte budget. A cell receives Σ_R |R| / Π_{v∈vars(R)}
-    * share(v) bytes (Catalyst estimates) and buffers them as flat arrays,
-    * so this must sit comfortably inside one executor task's memory. When
-    * even the `maxCellsHard` grid cannot meet it, the route is DECLINED —
-    * the binary plan shuffles more but spills instead of OOMing. */
-  private def cellBudgetBytes: Long =
-    spark.conf.get("spark.graft.wcoj.cellBudgetBytes",
-      (512L << 20).toString).toLong
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
@@ -150,35 +149,6 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
     }
     None // unreachable
   }
-
-  /** Require many-to-many growth evidence before routing: a traversal
-    * self-join (structural), or failing that a sampled m:n probe (every
-    * core join column's mean key multiplicity ≥ `mnThreshold` in its
-    * leaf's bounded sample). Off routes every structurally-eligible
-    * cyclic core. */
-  private def requireGrowth: Boolean =
-    spark.conf.get("spark.graft.wcoj.requireGrowth", "true").toBoolean
-
-  /** Minimum sampled mean multiplicity (sample rows / distinct values) a
-    * core join column needs before it counts as the "many" side of an m:n
-    * edge. 1.0 is a unique key; real m:n motif columns measure well above
-    * 2. A large domain can dilute the sample toward 1 (all-distinct), which
-    * errs toward DECLINING — the conservative side. */
-  private def mnThreshold: Double =
-    spark.conf.get("spark.graft.wcoj.mnThreshold", "1.5").toDouble
-
-  /** Ceiling on (estimated binding-stream bytes) × (payload-leaf count):
-    * each payload leaf appends a sequential equi-join of the binding stream
-    * to the plan, and past the broadcast threshold each such join-back is a
-    * full shuffle of the stream — cost the per-cell INPUT budget never sees
-    * because it gates cell input, not core output. The stream estimate is
-    * an AGM-style bound over the core's distinct projections (sampled
-    * distinct ratios × stats rows); when it × k exceeds this ceiling the
-    * route declines to the binary plan, whose spill-capable pairwise joins
-    * handle a huge output without k extra passes over it. */
-  private def joinBackBudgetBytes: Long =
-    spark.conf.get("spark.graft.wcoj.joinBackBudgetBytes",
-      (256L << 30).toString).toLong
 
   private def route(root: Join): Option[LogicalPlan] = {
     if (root.isStreaming) return None // no checkpoint/sample on a stream
@@ -234,79 +204,73 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
     // "Adopting Worst-Case Optimal Joins in Relational Database Systems",
     // VLDB'20). Conservative by design — a multi-table or symmetric motif
     // (e.g. a bipartite butterfly census, where every self-join edge is
-    // same-position) keeps its binary plan unless
-    // `spark.graft.wcoj.requireGrowth=false` opts it back in.
-    var mnProbed = false // growth shown by the sampled probe, not structure
-    var mnProbePending = false // structural check failed; probe decides later
-    var mnDeclineDetail: () => String = () => ""
-    if (requireGrowth) {
-      // compare roles modulo a distinct-shaped wrapper: `DISTINCT e` and a
-      // raw `e` role traverse the same edge content, and the distinct
-      // cannot REMOVE a many-to-many fan-out — only duplicate rows
-      def growthBase(p: LogicalPlan): LogicalPlan = p match {
-        case a: Aggregate if provablyDistinct(a) &&
-            a.aggregateExpressions.forall(_.isInstanceOf[Attribute]) =>
-          growthBase(a.child)
-        case d: Deduplicate => growthBase(d.child)
-        case _ => p
-      }
-      // …and modulo union-branch multiplicity: RemoveNoopUnion dedups the
-      // branches under a DISTINCT role but not under a raw one, yet bag
-      // copies of a branch never change WHETHER an m:n fan-out exists —
-      // so the key is the distinct branch set, not the union itself. A
-      // SINGLE-branch set collapses to the branch plan itself: that is
-      // exactly what RemoveNoopUnion leaves behind under the DISTINCT role
-      // (`DISTINCT (e UNION ALL e)` → `DISTINCT e`), so the raw
-      // `e UNION ALL e` role and the collapsed role must land in ONE group
-      // — a Set wrapper on one side and a bare plan on the other can never
-      // compare equal.
-      def growthKey(p: LogicalPlan): AnyRef = growthBase(p) match {
-        case u: org.apache.spark.sql.catalyst.plans.logical.Union =>
-          val branches = u.children.map(_.canonicalized).distinct
-          if (branches.size == 1) branches.head else branches.toSet
-        case other => other.canonicalized
-      }
-      // each role column's position within its GROWTH BASE's output (-1 if
-      // untraceable): the cross-position test must compare coordinates in
-      // the one shared base space, or a DISTINCT wrapper that permutes or
-      // projects its columns would flip the verdict both ways (a permuted
-      // `DISTINCT dst, src` role both hides a real traversal and fakes one
-      // out of a symmetric same-column join)
-      def baseIndex(p: LogicalPlan): Seq[Int] = p match {
-        case a: Aggregate if provablyDistinct(a) &&
-            a.aggregateExpressions.forall(_.isInstanceOf[Attribute]) =>
-          val childIdx = baseIndex(a.child)
-          a.aggregateExpressions.map { e =>
-            val ci = a.child.output.indexWhere(
-              _.exprId == e.asInstanceOf[Attribute].exprId)
-            if (ci >= 0) childIdx(ci) else -1
-          }
-        case d: Deduplicate => baseIndex(d.child) // output == child.output
-        case other => other.output.indices
-      }
-      val byPlan = core.toSeq.sorted.groupBy(i => growthKey(graph.leaves(i)))
-      val traversal = byPlan.values.exists { roles =>
-        roles.combinations(2).exists { case Seq(i, j) =>
-          val ci = leafClasses(i); val cj = leafClasses(j)
-          val bi = baseIndex(graph.leaves(i)); val bj = baseIndex(graph.leaves(j))
-          ci.indices.exists(p => cj.indices.exists(q =>
-            bi(p) >= 0 && bj(q) >= 0 && bi(p) != bj(q) &&
-              ci(p) == cj(q) && ci(p) >= 0))
+    // same-position) shows no traversal and routes only if the sampled m:n
+    // probe below admits it.
+
+    // compare roles modulo a distinct-shaped wrapper: `DISTINCT e` and a
+    // raw `e` role traverse the same edge content, and the distinct
+    // cannot REMOVE a many-to-many fan-out — only duplicate rows
+    def growthBase(p: LogicalPlan): LogicalPlan = p match {
+      case a: Aggregate if provablyDistinct(a) &&
+          a.aggregateExpressions.forall(_.isInstanceOf[Attribute]) =>
+        growthBase(a.child)
+      case d: Deduplicate => growthBase(d.child)
+      case _ => p
+    }
+    // …and modulo union-branch multiplicity: RemoveNoopUnion dedups the
+    // branches under a DISTINCT role but not under a raw one, yet bag
+    // copies of a branch never change WHETHER an m:n fan-out exists —
+    // so the key is the distinct branch set, not the union itself. A
+    // SINGLE-branch set collapses to the branch plan itself: that is
+    // exactly what RemoveNoopUnion leaves behind under the DISTINCT role
+    // (`DISTINCT (e UNION ALL e)` → `DISTINCT e`), so the raw
+    // `e UNION ALL e` role and the collapsed role must land in ONE group
+    // — a Set wrapper on one side and a bare plan on the other can never
+    // compare equal.
+    def growthKey(p: LogicalPlan): AnyRef = growthBase(p) match {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union =>
+        val branches = u.children.map(_.canonicalized).distinct
+        if (branches.size == 1) branches.head else branches.toSet
+      case other => other.canonicalized
+    }
+    // each role column's position within its GROWTH BASE's output (-1 if
+    // untraceable): the cross-position test must compare coordinates in
+    // the one shared base space, or a DISTINCT wrapper that permutes or
+    // projects its columns would flip the verdict both ways (a permuted
+    // `DISTINCT dst, src` role both hides a real traversal and fakes one
+    // out of a symmetric same-column join)
+    def baseIndex(p: LogicalPlan): Seq[Int] = p match {
+      case a: Aggregate if provablyDistinct(a) &&
+          a.aggregateExpressions.forall(_.isInstanceOf[Attribute]) =>
+        val childIdx = baseIndex(a.child)
+        a.aggregateExpressions.map { e =>
+          val ci = a.child.output.indexWhere(
+            _.exprId == e.asInstanceOf[Attribute].exprId)
+          if (ci >= 0) childIdx(ci) else -1
         }
-      }
-      // no structural growth evidence → the sampled m:n probe (below) gets
-      // the final say, but only AFTER the remaining cheap guards pass: a
-      // core that guard 2/4a/4b or the byte floor would decline for free
-      // must never pay the probe's sample scans
-      if (!traversal) {
-        mnProbePending = true
-        mnDeclineDetail = () =>
-          s"plan groups ${byPlan.values.map(_.size).toSeq.sorted.reverse}; " +
-            s"leaves ${core.toSeq.sorted.map(i =>
-              growthBase(graph.leaves(i)).treeString.linesIterator
-                .map(_.trim.take(60)).take(3).mkString(" | ")).mkString(" ;; ")}"
+      case d: Deduplicate => baseIndex(d.child) // output == child.output
+      case other => other.output.indices
+    }
+    val byPlan = core.toSeq.sorted.groupBy(i => growthKey(graph.leaves(i)))
+    val traversal = byPlan.values.exists { roles =>
+      roles.combinations(2).exists { case Seq(i, j) =>
+        val ci = leafClasses(i); val cj = leafClasses(j)
+        val bi = baseIndex(graph.leaves(i)); val bj = baseIndex(graph.leaves(j))
+        ci.indices.exists(p => cj.indices.exists(q =>
+          bi(p) >= 0 && bj(q) >= 0 && bi(p) != bj(q) &&
+            ci(p) == cj(q) && ci(p) >= 0))
       }
     }
+    // no structural growth evidence → the sampled m:n probe (below) gets
+    // the final say, but only AFTER the remaining cheap guards pass: a
+    // core that guard 2/4a/4b or the byte floor would decline for free
+    // must never pay the probe's sample scans. The probe's decline log
+    // names the plan groups and leaves:
+    def mnDeclineDetail: String =
+      s"plan groups ${byPlan.values.map(_.size).toSeq.sorted.reverse}; " +
+        s"leaves ${core.toSeq.sorted.map(i =>
+          growthBase(graph.leaves(i)).treeString.linesIterator
+            .map(_.trim.take(60)).take(3).mkString(" | ")).mkString(" ;; ")}"
 
     // guard 2: split each core leaf's columns into COVERED (consumed by a
     // plain equi-edge — these are the leaf's join variables) and PAYLOAD
@@ -379,7 +343,8 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
     // pairs) means a structurally-declined core never pays a scan, and an
     // admitted one shares its samples with the skew probe through the
     // SampleStore cache.
-    if (mnProbePending) {
+    val mnProbed = !traversal // growth shown by the sampled probe, not structure
+    if (mnProbed) {
       val mnGrowth = try {
         coreSeq.forall { i =>
           val attrs = coveredOf(i).collect { case a: AttributeReference => a }
@@ -401,10 +366,9 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
       if (!mnGrowth) {
         logInfo(s"graft WCOJ route declined: no traversal self-join and the " +
           s"sampled m:n probe found a sub-$mnThreshold multiplicity column " +
-          s"in the ${core.size}-leaf cyclic core; ${mnDeclineDetail()}")
+          s"in the ${core.size}-leaf cyclic core; $mnDeclineDetail")
         return None
       }
-      mnProbed = true
     }
 
     // skew probe from the same bounded per-leaf samples the UCT rule
@@ -764,6 +728,31 @@ final class WcojJoinRule(spark: SparkSession) extends Rule[LogicalPlan] with Log
 
 object WcojJoinRule {
   private[plans] val PROCESSED = TreeNodeTag[Boolean]("graft.wcoj.processed")
+
+  /** Minimum sampled mean multiplicity (sample rows / distinct values) a
+    * core join column needs before it counts as the "many" side of an m:n
+    * edge. 1.0 is a unique key; real m:n motif columns measure well above
+    * 2. A large domain can dilute the sample toward 1 (all-distinct), which
+    * errs toward DECLINING — the conservative side. */
+  val mnThreshold = 1.5
+
+  /** Per-cell INPUT byte budget. A cell receives Σ_R |R| / Π_{v∈vars(R)}
+    * share(v) bytes (Catalyst estimates) and buffers them as flat arrays,
+    * so this must sit comfortably inside one executor task's memory. When
+    * even the `maxCellsHard` grid cannot meet it, the route is DECLINED —
+    * the binary plan shuffles more but spills instead of OOMing. */
+  val cellBudgetBytes: Long = 512L << 20
+
+  /** Ceiling on (estimated binding-stream bytes) × (payload-leaf count):
+    * each payload leaf appends a sequential equi-join of the binding stream
+    * to the plan, and past the broadcast threshold each such join-back is a
+    * full shuffle of the stream — cost the per-cell INPUT budget never sees
+    * because it gates cell input, not core output. The stream estimate is
+    * an AGM-style bound over the core's distinct projections (sampled
+    * distinct ratios × stats rows); when it × k exceeds this ceiling the
+    * route declines to the binary plan, whose spill-capable pairwise joins
+    * handle a huge output without k extra passes over it. */
+  val joinBackBudgetBytes: Long = 256L << 30
 
   /** Cell count the budget-driven grid growth starts from. */
   private val maxCells = 32

@@ -162,6 +162,41 @@ class SampleStoreSpec extends SparkSpec
       .map(_.asInstanceOf[Long]).forall(_ >= 100))
   }
 
+  test("a truncated disk sample is rescanned with the same values, then rewritten") {
+    val dir = freshParquet("corrupt", wide = false)
+    def sampleFiles: Set[java.io.File] = new java.io.File(freshCacheDir)
+      .listFiles((_, n) => n.endsWith(".sample")).toSet
+    SampleStore.clear()
+    SampleStore.resetStats()
+    val before = sampleFiles
+    val leaf1 = analyzedLeaf(spark.read.parquet(dir))
+    val s1 = SampleStore.sample(spark, leaf1, attrsOf(leaf1, "a"), 256)
+    val written = (sampleFiles -- before).toSeq
+    assert(written.size == 1, s"expected one new .sample file, got $written")
+    // a torn write: keep only the first 16 bytes of the serialized sample
+    val file = written.head.toPath
+    java.nio.file.Files.write(file,
+      java.util.Arrays.copyOf(java.nio.file.Files.readAllBytes(file), 16))
+
+    SampleStore.clear()
+    val (scans, diskHits) = (SampleStore.scanCount, SampleStore.diskHitCount)
+    val leaf2 = analyzedLeaf(spark.read.parquet(dir))
+    val s2 = SampleStore.sample(spark, leaf2, attrsOf(leaf2, "a"), 256)
+    assert(SampleStore.diskHitCount == diskHits, "a truncated sample was served")
+    assert(SampleStore.scanCount == scans + 1, "the truncated sample was not rescanned")
+    assert(s2.cols(SampleStore.attrKey(attrsOf(leaf2, "a").head)).toSeq ==
+      s1.cols(SampleStore.attrKey(attrsOf(leaf1, "a").head)).toSeq,
+      "the rescan sampled different values")
+
+    // the rescan rewrote the entry: the next fresh touch loads it
+    SampleStore.clear()
+    val leaf3 = analyzedLeaf(spark.read.parquet(dir))
+    SampleStore.sample(spark, leaf3, attrsOf(leaf3, "a"), 256)
+    assert(SampleStore.diskHitCount == diskHits + 1,
+      "the rewritten sample did not serve a disk hit")
+    assert(SampleStore.scanCount == scans + 1)
+  }
+
   test("non-file leaves skip the disk tier") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}

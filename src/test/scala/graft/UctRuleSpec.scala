@@ -20,32 +20,6 @@ class UctRuleSpec extends SparkSpec {
     assert(s.nrUctNodes > 1)
   }
 
-  test("periodic explain snapshots render the UCT tree as DOT during search") {
-    // the reference's `explain <dir> <bound> <freq>` console mode
-    // (SkinnerCmd.java:246-289 + TreePlotter.java): tree renderings are
-    // written DURING the search every explainFreq episodes, plus a final one
-    val dir = java.nio.file.Files.createTempDirectory("uct-explain")
-    spark.conf.set("spark.graft.uct.explainDir", dir.toString)
-    spark.conf.set("spark.graft.uct.explainFreq", "25")
-    try {
-      UctJoinReorderRule.clearCache()
-      run("q05_local_supplier_volume").queryExecution.optimizedPlan
-      val files = scala.util.Using.resource(java.nio.file.Files.list(dir))(
-        _.toArray.map(_.toString).sorted)
-      assert(files.count(_.endsWith(".dot")) >= 2,
-        s"expected periodic + final snapshots, got ${files.mkString(", ")}")
-      val finalDot = files.filter(_.endsWith("final.dot"))
-      assert(finalDot.nonEmpty, s"no final snapshot in ${files.mkString(", ")}")
-      val text = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(finalDot.head))
-      assert(text.startsWith("digraph uct {") && text.contains("->")
-        && text.contains("visits"), s"not a DOT tree:\n$text")
-    } finally {
-      spark.conf.set("spark.graft.uct.explainDir", "")
-      spark.conf.set("spark.graft.uct.explainFreq", "0")
-    }
-  }
-
   test("reordered plan returns identical results to the unreordered plan") {
     def resultSet(name: String) = run(name).collect().map(_.toString).sorted.toSeq
     val withRule = resultSet("q05_local_supplier_volume")
@@ -400,35 +374,83 @@ class UctRuleSpec extends SparkSpec {
     spark.range(0, 50).select(col("id").as("k2"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/d2")
 
-    def learned(mode: String): Seq[Int] = {
-      graft.plans.SampleStore.clear()
-      UctJoinReorderRule.clearCache()
-      UctJoinReorderRule.lastStats = None
-      spark.conf.set("spark.graft.uct.sampleMode", mode)
-      try {
-        val q = spark.read.parquet(s"$dir/f").as("f")
-          .join(spark.read.parquet(s"$dir/d1").as("d1"),
-            col("f.a") === col("d1.k1"))
-          .join(spark.read.parquet(s"$dir/d2").as("d2"),
-            col("f.b") === col("d2.k2"))
-          .agg(count(lit(1)).as("n"))
-        q.queryExecution.optimizedPlan // force optimization
-        val stats = UctJoinReorderRule.lastStats
-        assert(stats.nonEmpty, s"UCT did not fire in mode=$mode")
-        stats.get.order
-      } finally spark.conf.unset("spark.graft.uct.sampleMode")
-    }
+    val q = spark.read.parquet(s"$dir/f").as("f")
+      .join(spark.read.parquet(s"$dir/d1").as("d1"),
+        col("f.a") === col("d1.k1"))
+      .join(spark.read.parquet(s"$dir/d2").as("d2"),
+        col("f.b") === col("d2.k2"))
+      .agg(count(lit(1)).as("n"))
+    graft.plans.SampleStore.clear()
+    UctJoinReorderRule.clearCache()
+    UctJoinReorderRule.lastStats = None
+    q.queryExecution.optimizedPlan // force optimization
+    val stats = UctJoinReorderRule.lastStats
+    assert(stats.nonEmpty, "UCT did not fire")
     // leaves flatten in authoring order: 0=f, 1=d1, 2=d2
-    val res = learned("reservoir")
-    val hd = learned("head")
+    val res = stats.get.order
     assert(res.indexOf(1) < res.indexOf(2),
       s"reservoir sample should learn the selective d1 first, got $res")
+
+    // negative control: the same search over prefix samples (the first 1024
+    // rows of each leaf) must fall for the inversion
+    import graft.plans.{LeafSample, SampleStore, UctConf, UctJoinOrder}
+    val g = JoinGraph.extract(
+      q.queryExecution.analyzed.collectFirst { case j: Join => j }.get).get
+    val keys = g.equiEdges
+      .flatMap { case (la, aa, lb, ab) => Seq(la -> aa, lb -> ab) }
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct }
+    val headSamples = g.leaves.indices.map { i =>
+      val attrs = keys(i)
+      val rows = org.apache.spark.sql.GraftShims.ofRows(spark,
+        org.apache.spark.sql.catalyst.plans.logical.Project(attrs, g.leaves(i)))
+        .limit(1024).collect()
+      val cols = attrs.zipWithIndex.map { case (a, c) =>
+        SampleStore.attrKey(a) -> rows.map(r => r.get(c): Any) }.toMap
+      val index = cols.map { case (k, vs) =>
+        val m = new java.util.HashMap[Any, Array[Int]]()
+        vs.zipWithIndex.groupBy(_._1).foreach { case (v, ps) => m.put(v, ps.map(_._2)) }
+        k -> m
+      }
+      LeafSample(rows.length, cols, index)
+    }
+    val hd = new UctJoinOrder(g, headSamples, UctConf.default).search()
     assert(hd.indexOf(2) < hd.indexOf(1),
       s"head sample should fall for the inversion (d2 first), got $hd — " +
         "if this starts passing, the fixture no longer inverts and the " +
         "reservoir assertion above proves nothing")
     graft.plans.SampleStore.clear()
     UctJoinReorderRule.clearCache()
+  }
+
+  test("a leaf whose filter matches no rows still gets a valid order and the same result") {
+    // `k2 > 1000` over keys 0..49 is empty at run time but not provably
+    // false, so PropagateEmptyRelation keeps the join and the rule samples
+    // an empty leaf (a lit(false) filter would remove the join before UCT)
+    import org.apache.spark.sql.functions._
+    val dir = graft.Scratch.root + "/uct_empty"
+    spark.range(2000).select((col("id") % 10).as("a"), (col("id") % 50).as("b"))
+      .write.mode("overwrite").parquet(s"$dir/f")
+    spark.range(10).select(col("id").as("k1"))
+      .write.mode("overwrite").parquet(s"$dir/d1")
+    spark.range(50).select(col("id").as("k2"))
+      .write.mode("overwrite").parquet(s"$dir/d2")
+    def q = spark.read.parquet(s"$dir/f")
+      .join(spark.read.parquet(s"$dir/d1"), col("a") === col("k1"))
+      .join(spark.read.parquet(s"$dir/d2").where(col("k2") > 1000),
+        col("b") === col("k2"))
+      .groupBy(col("k1")).agg(count(lit(1)).as("n"))
+    UctJoinReorderRule.clearCache()
+    UctJoinReorderRule.lastStats = None
+    val df = q
+    df.queryExecution.optimizedPlan
+    val stats = UctJoinReorderRule.lastStats
+    assert(stats.exists(_.nrRelations == 3), s"UCT did not fire: $stats")
+    assert(stats.get.order.sorted == Seq(0, 1, 2), s"not a permutation: $stats")
+    val got = df.collect().map(_.toString).sorted.toSeq
+    spark.conf.set("spark.graft.uct.enabled", "false")
+    val want = try q.collect().map(_.toString).sorted.toSeq
+      finally spark.conf.set("spark.graft.uct.enabled", "true")
+    assert(got == want)
   }
 
   test("runtime switch scores the full remaining prefix, not just the first divergence") {

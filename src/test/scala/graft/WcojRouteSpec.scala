@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.WcojJoinRule
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
@@ -13,11 +14,24 @@ import org.apache.spark.sql.functions._
   */
 class WcojRouteSpec extends SparkSpec {
 
-  private def routed(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.exists {
+  private def routed(plan: LogicalPlan): Boolean =
+    plan.exists {
       case l: LogicalRDD => l.output.exists(_.name.startsWith("__wcoj_"))
       case _ => false
     }
+
+  private def routed(df: org.apache.spark.sql.DataFrame): Boolean =
+    routed(df.queryExecution.optimizedPlan)
+
+  /** Whether `rule` routes `sql`: the query is optimized with the injected
+    * rule switched off, then `rule` is applied to that plan. The seam for
+    * building the rule with limits other than the companion's constants. */
+  private def routedBy(rule: WcojJoinRule, sql: String): Boolean = {
+    spark.conf.set("spark.graft.wcoj.enabled", "false")
+    val plan = try spark.sql(sql).queryExecution.optimizedPlan
+      finally spark.conf.set("spark.graft.wcoj.enabled", "true")
+    routed(rule(plan))
+  }
 
   /** n-node ascending random graph at pct% density, deterministic. */
   private def denseGraph(n: Int, pct: Int): org.apache.spark.sql.DataFrame =
@@ -224,18 +238,6 @@ class WcojRouteSpec extends SparkSpec {
       JOIN kfk_li l ON l.lokey = o.okey
       JOIN kfk_supp s ON s.skey = l.lskey AND s.snkey = c.cnkey"""
     assert(!routed(spark.sql(sql)), "key–FK loop was wrongly routed")
-    // the escape hatch opts a known-growing key–FK cycle back in
-    spark.conf.set("spark.graft.wcoj.requireGrowth", "false")
-    try {
-      WcojJoinRule.clearStats()
-      val df = spark.sql(sql)
-      assert(routed(df), "requireGrowth=false should route the cycle")
-      val got = df.collect()(0).getLong(0)
-      spark.conf.set("spark.graft.wcoj.enabled", "false")
-      val want = try spark.sql(sql).collect()(0).getLong(0)
-        finally spark.conf.set("spark.graft.wcoj.enabled", "true")
-      assert(got == want, s"counts diverge: $got vs $want")
-    } finally spark.conf.unset("spark.graft.wcoj.requireGrowth")
   }
 
   test("bipartite butterfly census routes via the sampled m:n probe") {
@@ -271,12 +273,10 @@ class WcojRouteSpec extends SparkSpec {
       finally spark.conf.set("spark.graft.wcoj.enabled", "true")
     assert(got == want)
     // an unreachable threshold turns the probe off and the decline returns
-    spark.conf.set("spark.graft.wcoj.mnThreshold", "1e18")
-    try {
-      WcojJoinRule.clearStats()
-      assert(!routed(spark.sql(sql)),
-        "sub-threshold multiplicity must keep the binary plan")
-    } finally spark.conf.unset("spark.graft.wcoj.mnThreshold")
+    assert(routedBy(new WcojJoinRule(spark), sql),
+      "the default threshold should route the optimized plan too")
+    assert(!routedBy(new WcojJoinRule(spark, mnThreshold = 1e18), sql),
+      "sub-threshold multiplicity must keep the binary plan")
   }
 
   test("a raw UNION ALL role groups with its collapsed-DISTINCT sibling (growth key)") {
@@ -354,12 +354,11 @@ class WcojRouteSpec extends SparkSpec {
       FROM e e1
       JOIN e e2 ON e2.src = e1.dst
       JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst"""
-    try {
-      spark.conf.set("spark.graft.wcoj.joinBackBudgetBytes", "1")
-      assert(!routed(spark.sql(sql)),
-        "an over-ceiling payload core must keep its binary plan")
-    } finally spark.conf.unset("spark.graft.wcoj.joinBackBudgetBytes")
+    assert(!routedBy(new WcojJoinRule(spark, joinBackBudgetBytes = 1L), sql),
+      "an over-ceiling payload core must keep its binary plan")
     // default ceiling: the same core still routes
+    assert(routedBy(new WcojJoinRule(spark), sql),
+      "default budget should route the optimized plan")
     WcojJoinRule.clearStats()
     assert(routed(spark.sql(sql)), "default budget should route the core")
     assert(WcojJoinRule.lastRoute.exists(_.payloadLeaves == 3),
@@ -454,27 +453,22 @@ class WcojRouteSpec extends SparkSpec {
   test("grid grows under a tight per-cell budget and declines under an impossible one") {
     denseGraph(200, 20).createOrReplaceTempView("wcoj_g")
     WcojJoinRule.clearStats()
-    val df0 = spark.sql(triangleSql)
-    assert(routed(df0))
+    assert(routedBy(new WcojJoinRule(spark), triangleSql))
     val base = WcojJoinRule.lastRoute.get
-    try {
-      // a budget below the unconstrained per-cell load forces a finer grid
-      spark.conf.set("spark.graft.wcoj.cellBudgetBytes",
-        math.max(1L, base.perCellBytes / 2).toString)
-      WcojJoinRule.clearStats()
-      val df1 = spark.sql(triangleSql)
-      assert(routed(df1), "tight-budget core should still route with a finer grid")
-      val r1 = WcojJoinRule.lastRoute.get
-      assert(r1.cells > base.cells,
-        s"grid did not grow: ${base.cells} -> ${r1.cells}")
-      assert(r1.perCellBytes <= math.max(1L, base.perCellBytes / 2),
-        s"per-cell load ${r1.perCellBytes} exceeds the budget")
-      // an impossible budget: even the hard-cap grid cannot comply — the
-      // rule must DECLINE and keep the spill-capable binary plan
-      spark.conf.set("spark.graft.wcoj.cellBudgetBytes", "1")
-      val df2 = spark.sql(triangleSql)
-      assert(!routed(df2), "route should decline when no grid meets the budget")
-    } finally spark.conf.unset("spark.graft.wcoj.cellBudgetBytes")
+    // a budget below the unconstrained per-cell load forces a finer grid
+    val tight = math.max(1L, base.perCellBytes / 2)
+    WcojJoinRule.clearStats()
+    assert(routedBy(new WcojJoinRule(spark, cellBudgetBytes = tight), triangleSql),
+      "tight-budget core should still route with a finer grid")
+    val r1 = WcojJoinRule.lastRoute.get
+    assert(r1.cells > base.cells,
+      s"grid did not grow: ${base.cells} -> ${r1.cells}")
+    assert(r1.perCellBytes <= tight,
+      s"per-cell load ${r1.perCellBytes} exceeds the budget")
+    // an impossible budget: even the hard-cap grid cannot comply — the
+    // rule must DECLINE and keep the spill-capable binary plan
+    assert(!routedBy(new WcojJoinRule(spark, cellBudgetBytes = 1L), triangleSql),
+      "route should decline when no grid meets the budget")
   }
 
   test("skew probe pins heavy-hitter variables and keeps per-cell load balanced") {
