@@ -38,13 +38,12 @@ import org.apache.spark.util.LongAccumulator
   * Known limitation (inherent to HyperCube): a variable's grid coordinate
   * hashes the single value, so one heavy-hitter VALUE of a variable lands
   * all its tuples in one slice of that dimension — the grid spreads
-  * distinct values, not copies of one value. `skewAwareShares` is the
-  * countermeasure: it detects a dominant value from a seeded reservoir
-  * sample and pins that variable's share to 1, letting `autoShares`
-  * redistribute the cell budget along the other dimensions — the hot
-  * value's tuples then spread across cells by the OTHER variables'
-  * hashes and per-cell load stays near the mean (asserted in
-  * LeapfrogSpec).
+  * distinct values, not copies of one value. The SQL route
+  * (`WcojJoinRule`) counters it from the leaves' `SampleStore` samples: a
+  * variable with a dominant value gets share 1, and `autoShares` spends
+  * the cell budget on the other dimensions — the hot value's tuples then
+  * spread across cells by the OTHER variables' hashes and per-cell load
+  * stays near the mean (asserted in WcojRouteSpec).
   *
   * Semantics: set-semantics over the variable columns (the trie collapses
   * duplicate tuples), i.e. the conjunctive-query model of the reference's
@@ -255,82 +254,6 @@ object Leapfrog {
     rec(0, 1L)
     vars.zip(best).toMap
   }
-
-  /** Skew-aware grid sizing: `autoShares` with heavy-hitter protection.
-    * HyperCube hashes each variable's VALUE to a grid coordinate, so a
-    * value owning a large fraction of a variable pins that fraction of
-    * every relation containing it to one slice of that dimension — more
-    * shares along the skewed variable then only shrink the cells the hot
-    * value does NOT occupy. This helper reservoir-samples every relation's
-    * columns (seeded, one bounded pass, same estimator as SampleStore) and
-    * PINS any variable whose most frequent value exceeds `skewThreshold`
-    * of a sample to share 1; `autoShares` then spends the whole cell
-    * budget on the remaining dimensions, so the hot value's tuples spread
-    * by the other variables' hashes and per-cell input stays within a
-    * constant of the mean (the planted-heavy-hitter bound is asserted in
-    * LeapfrogSpec).
-    */
-  def skewAwareShares(
-      rels: Seq[(DataFrame, Seq[String])],
-      varOrder: Seq[String],
-      maxCells: Int,
-      skewThreshold: Double = 0.2,
-      sampleSize: Int = 4096): Map[String, Int] = {
-    require(skewThreshold > 0 && skewThreshold <= 1, s"bad skewThreshold")
-    val topRatio = topValueRatios(rels, sampleSize)
-    val pinned = varOrder.filter(v => topRatio.getOrElse(v, 0.0) >= skewThreshold).toSet
-    val free = varOrder.filterNot(pinned)
-    if (free.isEmpty) varOrder.map(_ -> 1).toMap
-    else {
-      val sizes = rels.map { case (df, vs) =>
-        (vs.filterNot(pinned), df.queryExecution.analyzed.stats.sizeInBytes match {
-          case s if s > BigInt(Long.MaxValue) => Long.MaxValue
-          case s => s.toLong.max(1L)
-        })
-      }
-      autoShares(sizes, free, maxCells) ++ pinned.map(_ -> 1)
-    }
-  }
-
-  /** Max single-value frequency ratio per variable across the relations,
-    * from one bounded seeded sample pass per relation (covering all its
-    * variables at once) — the skew probe `skewAwareShares` and the SQL
-    * route's grid sizing (WcojJoinRule) share. */
-  private[plans] def topValueRatios(
-      rels: Seq[(DataFrame, Seq[String])],
-      sampleSize: Int): Map[String, Double] = {
-    val topRatio = scala.collection.mutable.HashMap.empty[String, Double]
-    rels.foreach { case (df, vs) =>
-      val rows = sampleRows(df.select(vs.map(col).toIndexedSeq: _*), sampleSize)
-      if (rows.length > 0) vs.zipWithIndex.foreach { case (v, i) =>
-        val freq = scala.collection.mutable.HashMap.empty[Any, Int]
-        var nonNull = 0
-        rows.foreach { r =>
-          val x = r.get(i)
-          if (x != null) { freq(x) = freq.getOrElse(x, 0) + 1; nonNull += 1 }
-        }
-        if (nonNull > 0) {
-          val ratio = freq.values.max.toDouble / nonNull
-          if (ratio > topRatio.getOrElse(v, 0.0)) topRatio(v) = ratio
-        }
-      }
-    }
-    topRatio.toMap
-  }
-
-  /** Seeded per-partition reservoir over a frame — bounded driver memory,
-    * one pass, deterministic, and round-robin interleaved across
-    * partitions (SampleStore's estimator): a hot value clustered into the
-    * LAST partitions of a sorted layout still reaches the sample because
-    * the partition subset is chosen uniformly at random, not as a prefix.
-    * The scan itself is bounded to `SampleStore.maxSamplePartitions` (64)
-    * partitions, so the visibility guarantee is probabilistic past that: a
-    * hitter confined to a FEW of many partitions can be missed — the
-    * residual risk any bounded probe carries, priced against flat plan-time
-    * IO. Where it matters, disable routing for the query
-    * (`spark.graft.wcoj.enabled=false`). */
-  private def sampleRows(df: DataFrame, n: Int): Array[Row] =
-    SampleStore.interleavedSample(df.rdd, n, seed = 727L)
 
   /** Type-general entry point: variables of ANY orderable Spark type.
     * Integral variables run through `join` directly; every other type

@@ -41,9 +41,11 @@ final case class LeafSample(
   */
 object SampleStore {
 
-  /** Reservoir seed for every leaf sample (UCT leaves and the WCOJ probes
-    * alike, so both read one cached entry). */
+  /** Reservoir seed and row count of every leaf sample. The UCT leaves and
+    * the WCOJ route's probes sample at this one size, so both read one
+    * cached entry. */
   private val seed = 42L
+  private val sampleSize = 1024
 
   /** Cache payload: sampled columns keyed by POSITION in the canonicalized
     * leaf's output, not by exprId. Canonically-equal plans (self-join roles,
@@ -77,8 +79,8 @@ object SampleStore {
 
   /** Upper bound on the partitions one sample scan schedules (see
     * [[interleavedSample]]): plan-time IO stays flat however large the
-    * leaf. Shared with `Leapfrog`'s skew sampler. */
-  private[plans] val maxSamplePartitions = 64
+    * leaf. */
+  private val maxSamplePartitions = 64
 
   /** Striped locks making the miss path atomic PER KEY: UctJoinReorderRule
     * samples leaves from concurrent Futures, and without the stripe two
@@ -192,9 +194,9 @@ object SampleStore {
       Some(digests.mkString("|"))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The payload includes the partition bound, so entries written under a
-    * different bound never match. */
-  private def diskKey(leaf: LogicalPlan, sampleSize: Int, fp: String): String = {
+  /** The payload includes the partition bound and the sample size, so
+    * entries written under different values never match. */
+  private def diskKey(leaf: LogicalPlan, fp: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val payload = Seq(diskFormatVersion, leaf.canonicalized.toString,
       maxSamplePartitions, sampleSize, fp).mkString("\u0000")
@@ -268,16 +270,14 @@ object SampleStore {
 
   /** Per-partition sample (seeded Algorithm-R reservoir) interleaved
     * ROUND-ROBIN across partitions — every partition contributes to the
-    * final n rows, so data clustered by key (sorted parquet, the common
-    * layout) cannot hide a range or a heavy hitter in the partitions a
-    * naive flatten-then-take would drop. One
-    * pass, O(perPart) memory per task, only perPart rows per partition
-    * reach the driver. Shared by the UCT leaf sampler and
-    * `Leapfrog.skewAwareShares`.
+    * final `sampleSize` rows, so data clustered by key (sorted parquet, the
+    * common layout) cannot hide a range or a heavy hitter in the partitions
+    * a naive flatten-then-take would drop. One pass, O(perPart) memory per
+    * task, only perPart rows per partition reach the driver.
     */
-  private[plans] def interleavedSample(
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-      n: Int, seed: Long): Array[org.apache.spark.sql.Row] = {
+  private def interleavedSample(
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row])
+      : Array[org.apache.spark.sql.Row] = {
     val allParts = math.max(rdd.getNumPartitions, 1)
     // bound the plan-time SCAN, not just the collect: the reservoir pass
     // consumes its whole partition iterator, so over a 100 TB leaf an
@@ -304,7 +304,7 @@ object SampleStore {
     // each task surrenders at most perPart rows, so the collect stays
     // bounded however large the input is; 2× headroom covers empty/short
     // partitions
-    val perPart = math.max(1, (2L * n / nParts).toInt + 1)
+    val perPart = math.max(1, (2L * sampleSize / nParts).toInt + 1)
     val parts = sampled
       .mapPartitionsWithIndex { (i, it) =>
         // Algorithm R: uniform without replacement, one pass, O(perPart)
@@ -327,9 +327,9 @@ object SampleStore {
       .collect().sortBy(_._1).map(_._2)
     val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     var depth = 0
-    while (buf.length < n && depth < perPart) {
+    while (buf.length < sampleSize && depth < perPart) {
       parts.foreach { p =>
-        if (depth < p.length && buf.length < n) buf += p(depth)
+        if (depth < p.length && buf.length < sampleSize) buf += p(depth)
       }
       depth += 1
     }
@@ -337,7 +337,7 @@ object SampleStore {
   }
 
   def sample(spark: SparkSession, leaf: LogicalPlan,
-             attrs: Seq[AttributeReference], sampleSize: Int): LeafSample = {
+             attrs: Seq[AttributeReference]): LeafSample = {
     val key = leaf.canonicalized
     val wanted: Seq[Attribute] =
       if (attrs.nonEmpty) attrs else leaf.output.take(1)
@@ -371,7 +371,7 @@ object SampleStore {
       val diskCtx: Option[(java.nio.file.Path, String)] = for {
         dir <- resolveDiskDir(spark)
         fp <- fileFingerprint(leaf)
-      } yield (dir, diskKey(leaf, sampleSize, fp))
+      } yield (dir, diskKey(leaf, fp))
       // partial memory entry ⇒ skip the load (the rescan below widens and
       // rewrites the disk entry anyway)
       val diskCached: Option[PosSample] =
@@ -422,7 +422,7 @@ object SampleStore {
       val proj = GraftShims
         .ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.Project(projAttrs, leaf))
       val t0 = System.nanoTime()
-      val rows = interleavedSample(proj.rdd, sampleSize, seed)
+      val rows = interleavedSample(proj.rdd)
       scanCountA.incrementAndGet()
       scanNanosA.addAndGet(System.nanoTime() - t0)
       val cols = allPos.zipWithIndex.map { case (p, i) =>

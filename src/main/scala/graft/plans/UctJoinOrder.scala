@@ -213,7 +213,6 @@ final case class UctConf(
     episodes: Int,
     budgetPerEpisode: Int,
     explorationWeight: Double,
-    sampleSize: Int,
     seed: Long)
 
 object UctConf {
@@ -224,5 +223,5 @@ object UctConf {
     */
   val default: UctConf = UctConf(
     episodes = 200, budgetPerEpisode = 500,
-    explorationWeight = 0.7, sampleSize = 1024, seed = 42L)
+    explorationWeight = 0.7, seed = 42L)
 }

@@ -74,7 +74,7 @@ final class UctJoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] wi
           import scala.concurrent.duration._
           Await.result(Future.sequence(graph.leaves.indices.map { i =>
             Future(SampleStore.sample(spark, graph.leaves(i),
-              keysPerLeaf.getOrElse(i, Seq.empty), c.sampleSize))
+              keysPerLeaf.getOrElse(i, Seq.empty)))
           }), 300.seconds)
         }
         val tSearch0 = System.nanoTime()

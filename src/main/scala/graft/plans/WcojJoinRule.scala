@@ -150,6 +150,33 @@ final class WcojJoinRule(
     None // unreachable
   }
 
+  /** One core leaf's [[LeafProfile]], from its cached `SampleStore` sample
+    * over the leaf's covered columns; None when a covered column is not a
+    * plain attribute reference or the sample scan fails. */
+  private def leafProfile(leaf: LogicalPlan,
+      covered: Seq[Attribute]): Option[LeafProfile] = {
+    val attrs = covered.collect { case a: AttributeReference => a }
+    if (attrs.size != covered.size) return None
+    try {
+      val s = SampleStore.sample(spark, leaf, attrs)
+      val meanMult = mutable.HashMap.empty[Long, Double]
+      val topRatio = mutable.HashMap.empty[Long, Double]
+      attrs.foreach { a =>
+        s.index.get(SampleStore.attrKey(a)).filter(_.size > 0).foreach { idx =>
+          var top = 0; var tot = 0
+          idx.forEach((_, ps) => { top = math.max(top, ps.length); tot += ps.length })
+          meanMult(a.exprId.id) = tot.toDouble / idx.size
+          topRatio(a.exprId.id) = top.toDouble / tot
+        }
+      }
+      val distinct = (0 until s.nRows).map(r =>
+        attrs.map(a => s.cols(SampleStore.attrKey(a))(r)).toList).distinct.size
+      Some(LeafProfile(meanMult.toMap, topRatio.toMap,
+        if (s.nRows == 0) 1.0 else distinct.toDouble / s.nRows))
+    } catch { case NonFatal(e) =>
+      logInfo(s"graft WCOJ sample profile failed: $e"); None }
+  }
+
   private def route(root: Join): Option[LogicalPlan] = {
     if (root.isStreaming) return None // no checkpoint/sample on a stream
     val graph = JoinGraph.extract(root).getOrElse(return None)
@@ -327,6 +354,21 @@ final class WcojJoinRule(
         if (sz > BigInt(Long.MaxValue)) Long.MaxValue else sz.toLong.max(1L))
     }
 
+    // ONE SAMPLE PROFILE PER CORE LEAF feeds the three sample checks below
+    // (m:n growth, skew pinning, join-back distinct ratio). It is computed
+    // HERE, after every structural guard, so a core those guards decline
+    // never pays a scan; it reads the bounded per-leaf sample SampleStore
+    // caches for the UCT rule (keyed by canonicalized plan, so self-join
+    // roles share ONE sample, a leaf the UCT rule already sampled costs
+    // nothing, and repeat queries hit the cache). Profiles are built on
+    // first use, so an m:n decline stops scanning at its first failing
+    // leaf. None marks a leaf that is unsampleable or whose scan failed:
+    // the m:n check then declines, skew proceeds unpinned, and the distinct
+    // ratio reads 1.0.
+    val profiles = mutable.HashMap.empty[Int, Option[LeafProfile]]
+    def profile(i: Int): Option[LeafProfile] =
+      profiles.getOrElseUpdate(i, leafProfile(graph.leaves(i), coveredOf(i)))
+
     // SAMPLED m:n PROBE — the deferred fallback for the structural growth
     // check's documented false negatives: a same-position symmetric motif
     // (the bipartite butterfly census) or a cycle of DISTINCT m:n edge
@@ -338,71 +380,32 @@ final class WcojJoinRule(
     // key–FK loop always carries a unique-key side (multiplicity ~1.0) —
     // TPC-H q05's c_custkey, the q85 nation pair's n_name — so those
     // decline; a sample diluted by a huge domain reads ~1 and errs toward
-    // declining too. Running HERE (after every structural guard, right
-    // before the skew probe that samples the same (leaf, covered-attrs)
-    // pairs) means a structurally-declined core never pays a scan, and an
-    // admitted one shares its samples with the skew probe through the
-    // SampleStore cache.
+    // declining too.
     val mnProbed = !traversal // growth shown by the sampled probe, not structure
-    if (mnProbed) {
-      val mnGrowth = try {
-        coreSeq.forall { i =>
-          val attrs = coveredOf(i).collect { case a: AttributeReference => a }
-          attrs.size == coveredOf(i).size && (attrs.isEmpty || {
-            val s = SampleStore.sample(spark, graph.leaves(i), attrs,
-              skewSampleSize)
-            attrs.forall { a =>
-              coreLeavesPerClass.getOrElse(classOfAttr(a.exprId.id), 0) < 2 ||
-                s.index.get(SampleStore.attrKey(a)).exists { idx =>
-                  var tot = 0
-                  idx.forEach((_, ps) => tot += ps.length)
-                  idx.size > 0 && tot.toDouble / idx.size >= mnThreshold
-                }
-            }
-          })
-        }
-      } catch { case NonFatal(e) =>
-        logInfo(s"graft WCOJ m:n probe failed, declining: $e"); false }
-      if (!mnGrowth) {
-        logInfo(s"graft WCOJ route declined: no traversal self-join and the " +
-          s"sampled m:n probe found a sub-$mnThreshold multiplicity column " +
-          s"in the ${core.size}-leaf cyclic core; $mnDeclineDetail")
-        return None
-      }
+    if (mnProbed && !coreSeq.forall(i => profile(i).exists(p =>
+        coveredOf(i).forall(a =>
+          coreLeavesPerClass.getOrElse(classOfAttr(a.exprId.id), 0) < 2 ||
+            p.meanMult.get(a.exprId.id).exists(_ >= mnThreshold))))) {
+      logInfo(s"graft WCOJ route declined: no traversal self-join and the " +
+        s"sampled m:n probe found a sub-$mnThreshold multiplicity column " +
+        s"in the ${core.size}-leaf cyclic core; $mnDeclineDetail")
+      return None
     }
 
-    // skew probe from the same bounded per-leaf samples the UCT rule
-    // collects (SampleStore: keyed by canonicalized plan, so self-join
-    // roles share ONE sample, a leaf the UCT rule already sampled costs
-    // nothing, and repeat queries hit the cache). The sample sees the RAW
-    // leaf rows — for a bag leaf that can overstate a high-multiplicity
-    // hub relative to the distinct rows the core actually joins, which
-    // errs toward pinning (spending a grid dimension), never toward
-    // missing a hitter the sample saw.
+    // skew probe: a variable pins when its top value reaches `skewThreshold`
+    // of any core leaf's sampled values. The sample sees the RAW leaf rows —
+    // for a bag leaf that can overstate a high-multiplicity hub relative to
+    // the distinct rows the core actually joins, which errs toward pinning
+    // (spending a grid dimension), never toward missing a hitter the sample
+    // saw.
     val pinned: Seq[String] =
-      try {
-        val ratios = mutable.HashMap.empty[String, Double]
-        coreSeq.foreach { i =>
-          val attrs = coveredOf(i).collect { case a: AttributeReference => a }
-          if (attrs.size == coveredOf(i).size) {
-            val s = SampleStore.sample(spark, graph.leaves(i), attrs,
-              skewSampleSize)
-            attrs.zip(coveredClasses(i)).foreach { case (a, c) =>
-              s.index.get(SampleStore.attrKey(a)).foreach { idx =>
-                var top = 0; var tot = 0
-                idx.forEach((_, ps) => { top = math.max(top, ps.length); tot += ps.length })
-                if (tot > 0) {
-                  val v = varName(c)
-                  val r = top.toDouble / tot
-                  if (r > ratios.getOrElse(v, 0.0)) ratios(v) = r
-                }
-              }
-            }
-          }
-        }
-        classVarOrder.filter(v => ratios.getOrElse(v, 0.0) >= skewThreshold)
-      } catch { case NonFatal(e) =>
-        logInfo(s"graft WCOJ skew probe failed, proceeding unpinned: $e"); Nil }
+      if (coreSeq.exists(i => profile(i).isEmpty)) Nil
+      else {
+        val hot = coreSeq.flatMap(i => coveredOf(i)
+          .filter(a => profile(i).get.topRatio.get(a.exprId.id).exists(_ >= skewThreshold))
+          .map(a => varName(classOfAttr(a.exprId.id)))).toSet
+        classVarOrder.filter(hot)
+      }
 
     // one budget pass over the UNPINNED dimensions (pinned variables carry
     // share 1 and spread no load); decline — still checkpoint-free — when
@@ -445,21 +448,7 @@ final class WcojJoinRule(
         st.rowCount.map(_.toDouble).getOrElse(
           st.sizeInBytes.toDouble / math.max(1, leafOutputs(i).size * 8))
       }
-      def distinctRatio(i: Int): Double = try {
-        val attrs = coveredOf(i).collect { case a: AttributeReference => a }
-        if (attrs.size != coveredOf(i).size) 1.0
-        else {
-          val s = SampleStore.sample(spark, graph.leaves(i), attrs,
-            skewSampleSize)
-          if (s.nRows == 0) 1.0
-          else {
-            val distinct = (0 until s.nRows).map(r =>
-              attrs.map(a => s.cols(SampleStore.attrKey(a))(r)).toList)
-              .distinct.size
-            distinct.toDouble / s.nRows
-          }
-        }
-      } catch { case NonFatal(_) => 1.0 }
+      def distinctRatio(i: Int): Double = profile(i).fold(1.0)(_.distinctRatio)
       val weight: Map[Int, Double] = coreSeq.map { i =>
         val solo = coveredClasses(i).exists(c => coreLeavesPerClass(c) < 2)
         i -> (if (solo) 1.0 else 0.5)
@@ -778,9 +767,13 @@ object WcojJoinRule {
     * variable's sampled non-null values owned by its top value). */
   private val skewThreshold = 0.2
 
-  /** Rows in the bounded per-leaf sample the m:n, skew and join-back
-    * probes read (through SampleStore, so they share one cached sample). */
-  private val skewSampleSize = 1024
+  /** What the route's sample checks read of one core leaf: per covered
+    * column (by exprId; absent when the sample holds no non-null value)
+    * the mean multiplicity and the top value's share of its sampled
+    * non-null values, and the distinct fraction of the sampled rows of the
+    * leaf's covered projection (1.0 on an empty sample). */
+  private final case class LeafProfile(meanMult: Map[Long, Double],
+      topRatio: Map[Long, Double], distinctRatio: Double)
 
   /** What the most recent route decided — the gate/spec observability
     * surface (same pattern as UctJoinReorderRule.RuleStats). nrRelations

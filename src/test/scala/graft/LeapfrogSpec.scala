@@ -226,74 +226,4 @@ class LeapfrogSpec extends SparkSpec {
       Leapfrog.join(spark, Seq((e, Seq("a", "z"))), Seq("a", "z"), Map.empty)
     }
   }
-
-  test("skewAwareShares pins a planted heavy hitter and levels per-cell load") {
-    // star skew: value 7 owns 80% of variable "a", which only relations R
-    // and T carry; S is uniform. A grid that splits dimension "a" pins all
-    // those tuples to one slice; skewAwareShares must detect the hitter,
-    // pin share(a)=1 — and ONLY a — then spend the budget across BOTH
-    // still-free variables, after which per-cell input is near-uniform.
-    val hotA = 7L
-    val rData = (0 until 1200).map(i => (hotA, 1000L + i)) ++
-      (0 until 300).map(i => (10L + i % 37, 2000L + (i * 31) % 500))
-    val sData = (0 until 1500).map(i => (1000L + i, 3000L + (i * 17) % 1400))
-    val tData = (0 until 1200).map(i => (hotA, 3000L + i % 1400)) ++
-      (0 until 300).map(i => (10L + i % 37, 3000L + (i * 13) % 1400))
-    val rels = Seq(
-      (rData.toDF("a", "b"), Seq("a", "b")),
-      (sData.toDF("b", "c"), Seq("b", "c")),
-      (tData.toDF("a", "c"), Seq("a", "c")))
-    val varOrder = Seq("a", "b", "c")
-    val shares = Leapfrog.skewAwareShares(rels, varOrder, maxCells = 64)
-    assert(shares("a") == 1, s"hot variable not pinned: $shares")
-    assert(shares("b") > 1 && shares("c") > 1,
-      s"budget not spread across both free variables: $shares")
-
-    // replay the HyperCube placement (same hash) for a grid and return
-    // per-cell input-tuple counts, replicas included
-    def cellLoads(sh: Map[String, Int]): Seq[Long] = {
-      val vars = varOrder.toArray
-      val shareArr = vars.map(v => math.max(1, sh.getOrElse(v, 1)))
-      val stride = new Array[Int](3)
-      var acc = 1
-      for (d <- 2 to 0 by -1) { stride(d) = acc; acc *= shareArr(d) }
-      val counts = new Array[Long](acc)
-      val relData = Seq((rData, Seq(0, 1)), (sData, Seq(1, 2)), (tData, Seq(0, 2)))
-      relData.foreach { case (data, rv) =>
-        val free = (0 until 3).filterNot(rv.contains)
-        data.foreach { case (x, y) =>
-          val base = Leapfrog.coordOf(x, shareArr(rv(0))) * stride(rv(0)) +
-            Leapfrog.coordOf(y, shareArr(rv(1))) * stride(rv(1))
-          def rec(ds: List[Int], cid: Int): Unit = ds match {
-            case Nil => counts(cid) += 1
-            case d :: rest =>
-              (0 until shareArr(d)).foreach(k => rec(rest, cid + k * stride(d)))
-          }
-          rec(free.toList, base)
-        }
-      }
-      counts.toSeq
-    }
-    val naive = Leapfrog.autoShares(
-      rels.map { case (_, vs) => (vs, 1500L) }, varOrder, 64)
-    val naiveLoads = cellLoads(naive)
-    val skewLoads = cellLoads(shares)
-    def imbalance(l: Seq[Long]): Double =
-      l.max.toDouble / (l.sum.toDouble / l.length)
-    // the naive grid splits "a" and concentrates the hot value; the pinned
-    // grid must stay within 2x of the mean (the fixture is built so the
-    // naive imbalance clearly exceeds that)
-    assert(naive("a") > 1, s"fixture drift: naive grid no longer splits a: $naive")
-    assert(imbalance(naiveLoads) > 2.0,
-      s"fixture drift: naive imbalance ${imbalance(naiveLoads)} not > 2x")
-    assert(imbalance(skewLoads) <= 2.0,
-      s"skew-aware imbalance ${imbalance(skewLoads)} exceeds 2x of mean " +
-        s"(loads: ${skewLoads.mkString(",")})")
-    // and the shares choice never changes results
-    val a = Leapfrog.join(spark, rels, varOrder, shares)
-      .as[(Long, Long, Long)].collect().toSet
-    val b = Leapfrog.join(spark, rels, varOrder, naive)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(a == b)
-  }
 }

@@ -62,8 +62,8 @@ class SampleStoreSpec extends SparkSpec
       "fixture must exercise distinct exprIds")
     assert(leaf1.canonicalized == leaf2.canonicalized)
 
-    val s1 = SampleStore.sample(spark, leaf1, attrsOf(leaf1, "a"), 256)
-    val s2 = SampleStore.sample(spark, leaf2, attrsOf(leaf2, "b"), 256)
+    val s1 = SampleStore.sample(spark, leaf1, attrsOf(leaf1, "a"))
+    val s2 = SampleStore.sample(spark, leaf2, attrsOf(leaf2, "b"))
     assert(SampleStore.size == 1, s"expected one shared entry, got ${SampleStore.size}")
     assert(s1.nRows == s2.nRows)
     // narrow leaf => full-width first scan => the second (staggered) request
@@ -76,7 +76,7 @@ class SampleStoreSpec extends SparkSpec
     // BOTH columns must see s1's a and s2's b on the same rows
     val leaf3 = analyzedLeaf(spark.read.parquet(dir))
     val Seq(a3, b3) = attrsOf(leaf3, "a", "b")
-    val s3 = SampleStore.sample(spark, leaf3, Seq(a3, b3), 256)
+    val s3 = SampleStore.sample(spark, leaf3, Seq(a3, b3))
     assert(s3.cols(SampleStore.attrKey(a3)).toSeq ==
       s1.cols(SampleStore.attrKey(attrsOf(leaf1, "a").head)).toSeq)
     assert(s3.cols(SampleStore.attrKey(b3)).toSeq ==
@@ -93,10 +93,10 @@ class SampleStoreSpec extends SparkSpec
     SampleStore.clear()
     SampleStore.resetStats()
     val leaf1 = analyzedLeaf(spark.read.parquet(dir))
-    val s1 = SampleStore.sample(spark, leaf1, attrsOf(leaf1, "a"), 256)
+    val s1 = SampleStore.sample(spark, leaf1, attrsOf(leaf1, "a"))
     val leaf2 = analyzedLeaf(spark.read.parquet(dir))
     val Seq(a2, b2) = attrsOf(leaf2, "a", "b")
-    val s2 = SampleStore.sample(spark, leaf2, Seq(a2, b2), 256)
+    val s2 = SampleStore.sample(spark, leaf2, Seq(a2, b2))
     assert(SampleStore.size == 1)
     assert(SampleStore.scanCount == 2, "wide leaf should union-merge re-scan")
     // deterministic seeded reservoir: the re-scan reproduces the cached rows
@@ -115,7 +115,7 @@ class SampleStoreSpec extends SparkSpec
       Future {
         val leaf = analyzedLeaf(spark.read.parquet(dir))
         val attrs = attrsOf(leaf, cols(i % cols.length))
-        SampleStore.sample(spark, leaf, attrs, 256).nRows
+        SampleStore.sample(spark, leaf, attrs).nRows
       }
     }
     val ns = Await.result(Future.sequence(futures), Duration.Inf)
@@ -133,13 +133,13 @@ class SampleStoreSpec extends SparkSpec
     SampleStore.clear()
     SampleStore.resetStats()
     val leaf1 = analyzedLeaf(spark.read.parquet(dir))
-    val s1 = SampleStore.sample(spark, leaf1, attrsOf(leaf1, "a"), 256)
+    val s1 = SampleStore.sample(spark, leaf1, attrsOf(leaf1, "a"))
     assert(SampleStore.scanCount == 1)
 
     // simulate a fresh session: memory cache wiped, disk cache intact
     SampleStore.clear()
     val leaf2 = analyzedLeaf(spark.read.parquet(dir))
-    val s2 = SampleStore.sample(spark, leaf2, attrsOf(leaf2, "a"), 256)
+    val s2 = SampleStore.sample(spark, leaf2, attrsOf(leaf2, "a"))
     assert(SampleStore.scanCount == 1,
       s"fresh-session touch re-scanned (${SampleStore.scanCount} scans) " +
         "instead of loading the persisted sample")
@@ -155,7 +155,7 @@ class SampleStoreSpec extends SparkSpec
       .write.mode("overwrite").parquet(dir)
     SampleStore.clear()
     val leaf3 = analyzedLeaf(spark.read.parquet(dir))
-    val s3 = SampleStore.sample(spark, leaf3, attrsOf(leaf3, "a"), 256)
+    val s3 = SampleStore.sample(spark, leaf3, attrsOf(leaf3, "a"))
     assert(SampleStore.scanCount == 2,
       "rewritten table served a stale persisted sample")
     assert(s3.cols(SampleStore.attrKey(attrsOf(leaf3, "a").head))
@@ -170,7 +170,7 @@ class SampleStoreSpec extends SparkSpec
     SampleStore.resetStats()
     val before = sampleFiles
     val leaf1 = analyzedLeaf(spark.read.parquet(dir))
-    val s1 = SampleStore.sample(spark, leaf1, attrsOf(leaf1, "a"), 256)
+    val s1 = SampleStore.sample(spark, leaf1, attrsOf(leaf1, "a"))
     val written = (sampleFiles -- before).toSeq
     assert(written.size == 1, s"expected one new .sample file, got $written")
     // a torn write: keep only the first 16 bytes of the serialized sample
@@ -181,7 +181,7 @@ class SampleStoreSpec extends SparkSpec
     SampleStore.clear()
     val (scans, diskHits) = (SampleStore.scanCount, SampleStore.diskHitCount)
     val leaf2 = analyzedLeaf(spark.read.parquet(dir))
-    val s2 = SampleStore.sample(spark, leaf2, attrsOf(leaf2, "a"), 256)
+    val s2 = SampleStore.sample(spark, leaf2, attrsOf(leaf2, "a"))
     assert(SampleStore.diskHitCount == diskHits, "a truncated sample was served")
     assert(SampleStore.scanCount == scans + 1, "the truncated sample was not rescanned")
     assert(s2.cols(SampleStore.attrKey(attrsOf(leaf2, "a").head)).toSeq ==
@@ -191,7 +191,7 @@ class SampleStoreSpec extends SparkSpec
     // the rescan rewrote the entry: the next fresh touch loads it
     SampleStore.clear()
     val leaf3 = analyzedLeaf(spark.read.parquet(dir))
-    SampleStore.sample(spark, leaf3, attrsOf(leaf3, "a"), 256)
+    SampleStore.sample(spark, leaf3, attrsOf(leaf3, "a"))
     assert(SampleStore.diskHitCount == diskHits + 1,
       "the rewritten sample did not serve a disk hit")
     assert(SampleStore.scanCount == scans + 1)
@@ -206,9 +206,9 @@ class SampleStoreSpec extends SparkSpec
     val df = spark.createDataFrame(rdd, StructType(Seq(StructField("k", LongType))))
     val leaf = df.queryExecution.analyzed
     val attr = leaf.output.head.asInstanceOf[AttributeReference]
-    SampleStore.sample(spark, leaf, Seq(attr), 64)
+    SampleStore.sample(spark, leaf, Seq(attr))
     SampleStore.clear()
-    SampleStore.sample(spark, leaf, Seq(attr), 64)
+    SampleStore.sample(spark, leaf, Seq(attr))
     assert(SampleStore.diskHitCount == 0,
       "an RDD-backed leaf must not round-trip through the disk cache")
     assert(SampleStore.scanCount == 2)

@@ -111,7 +111,7 @@ class UctRuleSpec extends SparkSpec {
       .flatMap { case (la, aa, lb, ab) => Seq(la -> aa, lb -> ab) }
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct }
     val samples = g.leaves.indices.map { i =>
-      SampleStore.sample(spark, g.leaves(i), keys.getOrElse(i, Seq.empty).toSeq, 1024)
+      SampleStore.sample(spark, g.leaves(i), keys.getOrElse(i, Seq.empty).toSeq)
     }.toIndexedSeq
     (g, samples)
   }
@@ -305,8 +305,8 @@ class UctRuleSpec extends SparkSpec {
     val attr = df.queryExecution.analyzed.output.head
       .asInstanceOf[org.apache.spark.sql.catalyst.expressions.AttributeReference]
     val sample = graft.plans.SampleStore.sample(spark,
-      df.queryExecution.analyzed, Seq(attr), 256)
-    assert(sample.nRows == 256)
+      df.queryExecution.analyzed, Seq(attr))
+    assert(sample.nRows == 1024)
     val keys = sample.cols(graft.plans.SampleStore.attrKey(attr))
       .map(_.asInstanceOf[Long])
     val rangesSeen = keys.map(_ / 1000).distinct.sorted
@@ -337,8 +337,8 @@ class UctRuleSpec extends SparkSpec {
       .asInstanceOf[org.apache.spark.sql.catalyst.expressions.AttributeReference]
     PartitionTouchCounter.touched.clear()
     val sample = graft.plans.SampleStore.sample(spark,
-      df.queryExecution.analyzed, Seq(attr), 256)
-    assert(sample.nRows == 256)
+      df.queryExecution.analyzed, Seq(attr))
+    assert(sample.nRows == 1024)
     val n = PartitionTouchCounter.touched.size
     assert(n <= 64, s"sampling scheduled $n of 512 partitions (bound is 64)")
     assert(n >= 32, s"only $n partitions scheduled — subset too small to " +

@@ -238,6 +238,30 @@ class WcojRouteSpec extends SparkSpec {
       JOIN kfk_li l ON l.lokey = o.okey
       JOIN kfk_supp s ON s.skey = l.lskey AND s.snkey = c.cnkey"""
     assert(!routed(spark.sql(sql)), "key–FK loop was wrongly routed")
+
+    // the declined m:n probe reads the samples the UCT reorder of the same
+    // join takes anyway: with both rules on, the query scans exactly as
+    // many leaf samples as the UCT rule alone
+    def sampleScans(wcoj: Boolean, uct: Boolean): Long = {
+      spark.conf.set("spark.graft.wcoj.enabled", wcoj.toString)
+      spark.conf.set("spark.graft.uct.enabled", uct.toString)
+      try {
+        graft.plans.UctJoinReorderRule.clearCache()
+        graft.plans.SampleStore.clear()
+        graft.plans.SampleStore.resetStats()
+        assert(!routed(spark.sql(sql)), "key–FK loop was wrongly routed")
+        graft.plans.SampleStore.scanCount
+      } finally {
+        spark.conf.set("spark.graft.wcoj.enabled", "true")
+        spark.conf.set("spark.graft.uct.enabled", "true")
+      }
+    }
+    val probeOnly = sampleScans(wcoj = true, uct = false)
+    val uctOnly = sampleScans(wcoj = false, uct = true)
+    val both = sampleScans(wcoj = true, uct = true)
+    assert(probeOnly >= 1, "the m:n probe sampled nothing")
+    assert(both == uctOnly,
+      s"the m:n probe added ${both - uctOnly} scans to the UCT rule's $uctOnly")
   }
 
   test("bipartite butterfly census routes via the sampled m:n probe") {
@@ -495,30 +519,52 @@ class WcojRouteSpec extends SparkSpec {
       finally spark.conf.set("spark.graft.wcoj.enabled", "true")
     assert(got == want, s"counts diverge: $got vs $want")
 
-    // replay the HyperCube assignment over the real edges with the chosen
-    // shares: max per-cell input within 2x of the mean (load-independent)
+    // replay the HyperCube assignment over the real edges for a grid and
+    // return per-cell input-tuple counts, replicas included
     val edges = spark.sql("SELECT DISTINCT src, dst FROM wcoj_hub")
       .collect().map(x => (x.getLong(0), x.getLong(1)))
-    val classVars = r.varOrder.take(r.nrVars).toArray
-    val shareArr = classVars.map(v => r.shares.getOrElse(v, 1))
-    val stride = new Array[Int](classVars.length)
-    var accum = 1
-    for (d <- classVars.indices.reverse) { stride(d) = accum; accum *= shareArr(d) }
-    val loads = new Array[Long](accum)
-    for (rv <- r.relVars; (src, dst) <- edges) {
-      val posOf = rv.map(v => classVars.indexOf(v))
-      val vals = Array(src, dst)
-      var basePos = 0
-      for (j <- rv.indices)
-        basePos += graft.plans.Leapfrog.coordOf(vals(j), shareArr(posOf(j))) * stride(posOf(j))
-      val freeDims = classVars.indices.filterNot(posOf.contains)
-      def spread(dims: List[Int], cell: Int): Unit = dims match {
-        case Nil => loads(cell) += 1
-        case d :: rest =>
-          for (c <- 0 until shareArr(d)) spread(rest, cell + c * stride(d))
+    val classVars = r.varOrder.take(r.nrVars)
+    def cellLoads(shares: Map[String, Int]): Array[Long] = {
+      val shareArr = classVars.map(v => shares.getOrElse(v, 1)).toArray
+      val stride = new Array[Int](classVars.length)
+      var accum = 1
+      for (d <- classVars.indices.reverse) { stride(d) = accum; accum *= shareArr(d) }
+      val loads = new Array[Long](accum)
+      for (rv <- r.relVars; (src, dst) <- edges) {
+        val posOf = rv.map(v => classVars.indexOf(v))
+        val vals = Array(src, dst)
+        var basePos = 0
+        for (j <- rv.indices)
+          basePos += graft.plans.Leapfrog.coordOf(vals(j), shareArr(posOf(j))) * stride(posOf(j))
+        val freeDims = classVars.indices.filterNot(posOf.contains)
+        def spread(dims: List[Int], cell: Int): Unit = dims match {
+          case Nil => loads(cell) += 1
+          case d :: rest =>
+            for (c <- 0 until shareArr(d)) spread(rest, cell + c * stride(d))
+        }
+        spread(freeDims.toList, basePos)
       }
-      spread(freeDims.toList, basePos)
+      loads
     }
+    def imbalance(loads: Array[Long]): Double =
+      loads.max / (loads.sum.toDouble / loads.length)
+
+    // fixture-drift guard: with nothing pinned, the load-minimizing grid
+    // over the same roles splits the hub's dimensions and concentrates its
+    // edges. Sized at 64 cells (4x4x4): at the route's 32 cells the
+    // unpinned grid gives one hub dimension only 2 slices, which caps the
+    // concentration near 2x
+    val unpinned = graft.plans.Leapfrog.autoShares(
+      r.relVars.map(vs => (vs, 1L)), classVars, 64)
+    assert(imbalance(cellLoads(unpinned)) > 2.0,
+      f"fixture drift: unpinned grid $unpinned imbalance " +
+        f"${imbalance(cellLoads(unpinned))}%.2f not > 2x")
+    // the pinned grid still spreads over the free variables…
+    val freeCells = classVars.filterNot(r.pinnedVars.contains)
+      .map(v => r.shares.getOrElse(v, 1)).product
+    assert(freeCells > 1, s"no cells spent on the free variables: ${r.shares}")
+    // …and keeps max per-cell input within 2x of the mean
+    val loads = cellLoads(r.shares)
     val mean = loads.sum.toDouble / loads.length
     assert(loads.max <= 2 * mean + 1,
       f"per-cell imbalance: max ${loads.max} vs mean $mean%.0f " +
