@@ -39,6 +39,10 @@ object GraftSession {
       // checksum files but renames with File.renameTo
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[FileSystemBasedCheckpointFileManager].getName)
+      // without libhadoop, RawLocalFileSystem.setPermission forks `chmod`
+      // on every file create; this file system sets the same mode bits
+      // through java.nio
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft_warehouse"))
       .config("spark.ui.enabled", "false")

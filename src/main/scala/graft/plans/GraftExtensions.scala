@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 
 /** Session extension wiring: `spark.sql.extensions=graft.plans.GraftExtensions`
   * (or `SparkSession.builder.withExtensions(new GraftExtensions)`) — installs
-  * the UCT join-order rule, the TopKPerKey planner strategy, and the SQL
+  * the UCT join-order rule, the TopKPerKey planner strategy, the
+  * micro-batch scan strategy that keeps a batch's input rows out of plan
+  * closures and task binaries (`LeanMicroBatchScanStrategy`), and the SQL
   * form of every graft codegen expression.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -49,6 +51,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(spark => new UctJoinReorderRule(spark))
     ext.injectRuntimeOptimizerRule(spark => new RuntimeOrderSwitchRule(spark))
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
+    ext.injectPlannerStrategy(_ => LeanMicroBatchScanStrategy)
 
     register(ext, "graft_dot", 2)(c => graft.functions.DotProduct(c(0), c(1)))
     register(ext, "graft_simhash64", 1)(c => graft.functions.SimHash64(c(0)))

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import graft.streaming.EventStreams
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming surface: the same transformations must produce the
@@ -82,6 +82,35 @@ class StreamingSpec extends SparkSpec {
       _.iterator().asScala.map(_.getFileName.toString).toList)
     assert(stateFiles.exists(_.matches("\\d+\\.delta\\.crc")),
       s"no checkpoint checksum file among ${stateFiles.distinct.sorted.mkString(", ")}")
+  }
+
+  test("a micro-batch plan carries none of its input rows") {
+    val session = spark
+    import session.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // ~1 MB of rows: a plan node that holds them serializes far past the bound
+    val rows = (0 until 20000).map(i => (i % 97L, i.toLong, f"payload-$i%08d"))
+    def totals(df: org.apache.spark.sql.DataFrame) = df.toDF("k", "v", "s")
+      .groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("total"))
+    val expected = totals(rows.toDF()).collect().map(_.toString).sorted.toSeq
+    val input = MemoryStream[(Long, Long, String)]
+    val q = totals(input.toDF()).writeStream.format("memory")
+      .queryName("lean_scan").outputMode("complete").start()
+    try {
+      input.addData(rows)
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+      // the sink's write node (the root) is never shipped to executors;
+      // every node of the query below it can travel in a closure or task
+      // binary
+      val sizes = plan.children.flatMap(_.collect { case n =>
+        n.nodeName -> ser.serialize(n).limit() })
+      assert(sizes.forall(_._2 < 64 * 1024), s"serialized plan nodes: ${sizes.mkString(", ")}")
+      assert(q.lastProgress.numInputRows == rows.size)
+      assert(spark.table("lean_scan").collect().map(_.toString).sorted.toSeq == expected)
+    } finally q.stop()
   }
 
   test("mapGroupsWithState accumulates running per-user totals across batches") {

@@ -30,13 +30,23 @@ object StreamProbe {
       r
     }
 
-    def dumpProgress(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    def dumpProgress(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
       q.recentProgress.foreach { p =>
         System.err.println(s"PROBE progress batch=${p.batchId} " +
           s"durationMs=${p.durationMs} " +
           s"stateRows=${p.stateOperators.map(_.numRowsTotal).mkString(",")} " +
           s"stateCommitMs=${p.stateOperators.map(_.commitTimeMs).mkString(",")}")
       }
+      // the last batch's plan below the sink's write node (never shipped to
+      // executors), each node serialized as a closure or task binary
+      // carries it
+      val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+        .StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val bytes = plan.children.flatMap(_.collect { case n => ser.serialize(n).limit() })
+      System.err.println(s"PROBE planNodeBytes max=${bytes.max} sum=${bytes.sum} " +
+        s"nodes=${bytes.size}")
+    }
 
     def ckptOpts[T](w: org.apache.spark.sql.streaming.DataStreamWriter[T]) =
       sys.env.get("PROBE_CKPT") match {
