@@ -89,7 +89,7 @@ object Console {
         val outB = dirBytes(out)
         val inB = try dirBytes(s"$dir/$t.parquet") catch { case NonFatal(_) => 0L }
         val ratio = if (inB > 0) f" (${outB * 100.0 / inB}%.0f%% of source)" else ""
-        spark.read.parquet(out).createOrReplaceTempView(t)
+        Db.readParquet(spark, out).createOrReplaceTempView(t)
         s"compressed $t to $out: $outB bytes$ratio; view '$t' now reads it"
       } else if (lower.startsWith("bench ")) {
         val args = trimmed.substring("bench ".length).trim.split("\\s+")

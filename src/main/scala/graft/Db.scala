@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table access + cross-engine-deterministic numeric helpers.
   *
@@ -11,22 +15,25 @@ import org.apache.spark.sql.functions._
   * the reference's hand-rolled columnar buffer pool entirely (SURVEY.md §1.3).
   */
 final case class Db(spark: SparkSession, dir: String) {
-  /** Analyzed base frames are cached per (session, dir, table): every
-    * `spark.read.parquet` call re-lists the directory and re-reads the footer
-    * schema (~100 ms), which at 8–12 relations per query dominated cold
-    * planning. The cached DataFrame is just the resolved relation — plans on
-    * top of it stay fully lazy. Mirrors the reference's load-once catalog
-    * (BufferManager.loadDB, /root/reference/src/buffer/BufferManager.java:78).
+  /** Analyzed base frames are cached per (session, dir, table), so only
+    * the first access lists the directory and reads the schema; plans on top
+    * of the cached relation stay fully lazy. The schema comes from the
+    * parquet footer, read on the driver ([[Db.readParquet]]): Spark's own
+    * inference runs a one-task job per table. Mirrors the reference's
+    * load-once catalog (SkinnerDB's `BufferManager.loadDB`).
     */
-  def table(name: String): DataFrame = {
-    // on a miss (i.e. at most once per (session, dir, table)) drop entries of
-    // stopped sessions so a long-lived process doesn't retain dead sessions'
-    // analyzed plans; a dir rewritten mid-session still needs an explicit
-    // Db.clearFrameCache() (documented there)
-    if (!Db.frameCache.containsKey((spark, dir, name)))
+  def table(name: String): DataFrame = load(Seq(name)).head
+
+  /** The cached frames of `names`; the footers of those not cached yet are
+    * read in one parallel pass. A miss first drops entries of stopped
+    * sessions, so a long-lived process doesn't retain dead sessions'
+    * analyzed plans; a dir rewritten mid-session still needs an explicit
+    * Db.clearFrameCache() (documented there). */
+  private def load(names: Seq[String]): Seq[DataFrame] = {
+    val keys = names.map(n => (spark, dir, n))
+    if (!keys.forall(Db.frameCache.containsKey))
       Db.frameCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    Db.frameCache.computeIfAbsent((spark, dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+    Db.cachedParquet(Db.frameCache, spark, keys.zip(names.map(n => s"$dir/$n.parquet")))
   }
 
   def region: DataFrame    = table("region")
@@ -47,7 +54,7 @@ final case class Db(spark: SparkSession, dir: String) {
     * so both engines agree on micro-precision wall-clock values.
     */
   def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    setNanosAsLong()
     val raw = table("events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -64,25 +71,57 @@ final case class Db(spark: SparkSession, dir: String) {
     }
   }
 
+  private def setNanosAsLong(): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
   /** Register every table as a temp view (for spark.sql use). `events` is
     * registered through the converting getter so the SQL facade sees the same
     * micros TIMESTAMP_NTZ schema as Db.events and the DuckDB oracle (the raw
     * parquet is TIMESTAMP(NANOS), which would surface as a BIGINT — or throw
-    * outright if the nanosAsLong conf was not yet set). */
-  def registerAll(): Unit = Db.tableNames.foreach { n =>
-    val df = if (n == "events") events else table(n)
-    df.createOrReplaceTempView(n)
+    * outright if the nanosAsLong conf was not yet set). Every footer is read
+    * in one pass, after that conf is set, and no Spark job runs. */
+  def registerAll(): Unit = {
+    setNanosAsLong()
+    load(Db.tableNames)
+    Db.tableNames.foreach { n =>
+      val df = if (n == "events") events else table(n)
+      df.createOrReplaceTempView(n)
+    }
   }
 }
 
 object Db {
   private val frameCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+    new ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   /** Force re-reads after a table directory was rewritten externally (the
     * cached frame pins the file listing read at first access); also the test
     * hook for specs that rewrite parquet dirs mid-session. */
   def clearFrameCache(): Unit = frameCache.clear()
+
+  /** `spark.read.parquet(path)` with the schema read from a footer on the
+    * driver instead of by Spark's one-task inference job. The analyzed plan
+    * is the same; where the driver read cannot decide (see
+    * `GraftParquetShims.footerSchemas`), Spark's own read runs and raises
+    * its own error. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    parquet(spark, path, GraftParquetShims.footerSchemas(spark, Seq(path)).head)
+
+  /** The frame cached under each key, reading the missing ones from their
+    * paths like [[readParquet]], with all their footers read in one pass. */
+  private[graft] def cachedParquet[K](cache: ConcurrentHashMap[K, DataFrame],
+      spark: SparkSession, entries: Seq[(K, String)]): Seq[DataFrame] = {
+    val missing = entries.filterNot(e => cache.containsKey(e._1))
+    val schemas = missing.map(_._1)
+      .zip(GraftParquetShims.footerSchemas(spark, missing.map(_._2))).toMap
+    entries.map { case (k, p) =>
+      cache.computeIfAbsent(k, _ => parquet(spark, p, schemas.getOrElse(k, None)))
+    }
+  }
+
+  private def parquet(spark: SparkSession, path: String,
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   val tableNames: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

@@ -54,7 +54,7 @@ object GraftSession {
   /** Register one parquet-backed relation under a name (the reference's
     * `registerTable` catalog surface). */
   def registerTable(spark: SparkSession, name: String, path: String): Unit =
-    spark.read.parquet(path).createOrReplaceTempView(name)
+    Db.readParquet(spark, path).createOrReplaceTempView(name)
 
   /** Register every testdata table under its bare name and run SQL. */
   def execute(spark: SparkSession, dir: String, sql: String): DataFrame = {

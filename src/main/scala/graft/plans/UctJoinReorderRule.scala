@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
@@ -66,15 +66,20 @@ final class UctJoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] wi
             .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct }
         // collect the per-leaf samples CONCURRENTLY: each is its own small
         // Spark job, and at JOB width (12 leaves) sequential collection was
-        // most of the planning cost
+        // most of the planning cost. Each job runs under the planning
+        // thread's local properties, so it carries the SQL execution id of
+        // the query being planned (none outside an action)
         val tSample0 = System.nanoTime()
         val samples = {
           import scala.concurrent.{Await, Future}
           import scala.concurrent.ExecutionContext.Implicits.global
           import scala.concurrent.duration._
+          val props = GraftShims.localProperties(spark.sparkContext)
           Await.result(Future.sequence(graph.leaves.indices.map { i =>
-            Future(SampleStore.sample(spark, graph.leaves(i),
-              keysPerLeaf.getOrElse(i, Seq.empty)))
+            Future(GraftShims.withLocalProperties(spark.sparkContext, props) {
+              SampleStore.sample(spark, graph.leaves(i),
+                keysPerLeaf.getOrElse(i, Seq.empty))
+            })
           }), 300.seconds)
         }
         val tSearch0 = System.nanoTime()

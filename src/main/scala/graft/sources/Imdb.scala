@@ -2,6 +2,7 @@ package graft.sources
 
 import scala.util.hashing.MurmurHash3
 
+import graft.Db
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -322,14 +323,12 @@ object Imdb {
       }
       // the VIEW is (re-)registered every call (cheap catalog op, and other
       // gates may bind names in between) but the analyzed frame is cached so
-      // only the first call pays the 21 parquet footer reads (see Db's
-      // frame cache)
+      // only the first call reads the 21 parquet footers, in one pass on the
+      // driver (see Db.cachedParquet)
       frames.keySet.removeIf(_._1.sparkContext.isStopped)
-      tables.foreach { case (name, _, _, _) =>
-        frames.computeIfAbsent((spark, name),
-          _ => spark.read.parquet(s"$indexPath/$name.parquet"))
-          .createOrReplaceTempView(name)
-      }
+      Db.cachedParquet(frames, spark,
+        tableNames.map(n => (spark, n) -> s"$indexPath/$n.parquet"))
+        .zip(tableNames).foreach { case (df, n) => df.createOrReplaceTempView(n) }
     }
   }
 

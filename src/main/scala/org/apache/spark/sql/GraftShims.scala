@@ -18,6 +18,22 @@ object GraftShims {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** A copy of this thread's Spark local properties (execution id, job
+    * group, scheduler pool, ...), for work this thread hands to another. */
+  def localProperties(sc: org.apache.spark.SparkContext): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+
+  /** Run `body` under `props` (from [[localProperties]]) and restore this
+    * thread's own properties afterwards. A pooled thread otherwise keeps the
+    * properties it inherited from whichever thread created it, so its jobs
+    * would be charged to a stale SQL execution. */
+  def withLocalProperties[T](sc: org.apache.spark.SparkContext,
+      props: java.util.Properties)(body: => T): T = {
+    val own = sc.getLocalProperties
+    sc.setLocalProperties(org.apache.spark.util.Utils.cloneProperties(props))
+    try body finally sc.setLocalProperties(own)
+  }
+
   /** Decompose a possibly-`.desc`/`.asc_nulls_*` Column into
     * (bare key column, descending?, nullsFirst?). A plain column reads as
     * the Window.orderBy default: ascending, nulls first. Columns are

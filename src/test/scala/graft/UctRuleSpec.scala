@@ -102,6 +102,54 @@ class UctRuleSpec extends SparkSpec {
     assert(s.get.order.sorted == (0 until s.get.nrRelations).toList)
   }
 
+  test("plan-time sample jobs carry the execution id of the query that planned them") {
+    import graft.plans.SampleStore
+    import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // an empty disk tier and cleared memory tiers make every query scan its
+    // leaves, so each one starts sample jobs of its own
+    val dir = java.nio.file.Files.createTempDirectory("graft-sample-props")
+    def fresh(): Unit = {
+      SampleStore.clear(); UctJoinReorderRule.clearCache()
+      spark.conf.set("spark.graft.uct.sampleDiskCacheDir",
+        java.nio.file.Files.createTempDirectory(dir, "tier").toString)
+    }
+    def sampleJobIds(es: Seq[SparkListenerEvent]): Seq[Option[String]] =
+      es.collect {
+        case j: SparkListenerJobStart
+            if j.stageInfos.exists(_.name.contains("SampleStore")) =>
+          Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      }
+    try {
+      val executions = Seq("q05_local_supplier_volume", "q47_job_chain").map { q =>
+        fresh()
+        val es = eventsDuring(run(q).collect())
+        val top = es.collect {
+          case s: SparkListenerSQLExecutionStart
+              if s.rootExecutionId.forall(_ == s.executionId) => s.executionId.toString
+        }
+        assert(top.size == 1, s"$q: expected one top-level execution, got $top")
+        val ids = sampleJobIds(es)
+        assert(ids.nonEmpty, s"$q started no sample job")
+        assert(ids.forall(_.contains(top.head)),
+          s"$q ran as execution ${top.head}; its sample jobs carried ${ids.distinct}")
+        top.head
+      }
+      assert(executions.distinct.size == 2)
+      // planning outside an action: no execution to charge
+      fresh()
+      val outside = sampleJobIds(
+        eventsDuring(run("q05_local_supplier_volume").queryExecution.optimizedPlan))
+      assert(outside.nonEmpty, "optimization started no sample job")
+      assert(outside.forall(_.isEmpty),
+        s"sample jobs planned outside an action carried ${outside.flatten.distinct}")
+    } finally {
+      spark.conf.unset("spark.graft.uct.sampleDiskCacheDir")
+      SampleStore.clear(); UctJoinReorderRule.clearCache()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   private def graphAndSamples(q: String) = {
     import graft.plans.{SampleStore, UctJoinOrder, UctConf}
     val analyzed = run(q).queryExecution.analyzed
