@@ -44,11 +44,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // WCOJ routing runs BEFORE the UCT reorder inside the injected batch,
-    // so a cyclic core is rewritten once instead of being sampled/ordered
-    // first and rewritten after
+    // WCOJ routing runs in the operator-optimization batches; the UCT
+    // reorder runs once after them (pre-CBO), over each join tree's final
+    // filtered leaves and with any cyclic core already rewritten
     ext.injectOptimizerRule(spark => new WcojJoinRule(spark))
-    ext.injectOptimizerRule(spark => new UctJoinReorderRule(spark))
+    ext.injectPreCBORule(spark => new UctJoinReorderRule(spark))
     ext.injectRuntimeOptimizerRule(spark => new RuntimeOrderSwitchRule(spark))
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     ext.injectPlannerStrategy(_ => LeanMicroBatchScanStrategy)

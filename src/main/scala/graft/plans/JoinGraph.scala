@@ -157,7 +157,7 @@ object JoinGraph extends PredicateHelper {
         for ((ll, lc) <- flatten(l); (rl, rc) <- flatten(r)) yield
           (ll ++ rl, lc ++ rc ++ cond.toSeq.flatMap(splitConjunctivePredicates))
       case Project(pl, c) if pl.forall(_.isInstanceOf[Attribute]) && seesJoinBelow(c) =>
-        flatten(c) // column pruning re-narrows the rebuilt tree next iteration
+        flatten(c) // a later ColumnPruning re-narrows the rebuilt tree
       case Filter(cond, c) if seesJoinBelow(c) =>
         flatten(c).map { case (ls, cs) => (ls, cs ++ splitConjunctivePredicates(cond)) }
       // anything else (incl. non-inner or hinted joins) is an opaque leaf

@@ -63,12 +63,12 @@ object SampleStore {
     * growth (sampleSize rows + retained plan per entry) would leak driver
     * memory across a long session of distinct constants.
     *
-    * Sizing: the r10 judge measured ~1,000+ distinct (filtered-leaf, attrs)
-    * keys across the 113-query JOB sweep — far past the old 256-entry bound,
-    * so the sweep evicted its own working set and pass2 re-scanned leaves
-    * pass1 had already sampled. Hence 2048 entries (an entry is ~100–200 KB
-    * at sampleSize 1024: worst case ~400 MB driver memory, acceptable on any
-    * driver sized for a 113-query analytical session). */
+    * Sizing: ~1,000+ distinct (filtered-leaf, attrs) keys were measured
+    * across the 113-query JOB sweep while the UCT rule still keyed every
+    * leaf twice (bare, then under its inferred filters); the old 256-entry
+    * bound evicted the sweep's own working set. Hence 2048 entries (an entry
+    * is ~100–200 KB at sampleSize 1024: worst case ~400 MB driver memory,
+    * acceptable on a driver sized for a 113-query analytical session). */
   private val maxEntries = 2048
   private val cache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[LogicalPlan, PosSample](64, 0.75f, true) {

@@ -13,10 +13,10 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * order from budgeted sample-join episodes, and rebuilds the tree in that
   * order with each conjunct attached at its earliest valid position.
   *
-  * Runs in the extended-operator-optimization batch, i.e. after predicate
-  * pushdown/column pruning have shaped the leaves. Never fails a query: any
-  * error falls back to the original subtree. Safe under re-entry via a
-  * TreeNodeTag marker.
+  * Runs once, in the pre-CBO batch after the operator optimizations
+  * (pushdown, pruning, filter inference) have shaped the leaves. Never fails
+  * a query: any error keeps the original subtree. Joins a rebuild creates
+  * carry a TreeNodeTag, so neither this pass nor a re-run searches them.
   */
 final class UctJoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] with Logging {
 
@@ -29,11 +29,11 @@ final class UctJoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] wi
     if (!enabled) return plan
     plan.transformDown {
       case j: Join if j.getTagValue(PROCESSED).isEmpty && j.resolved =>
-        try reorder(j).getOrElse { j.setTagValue(PROCESSED, true); j }
+        try reorder(j).getOrElse(j)
         catch {
           case e: Exception =>
             logWarning(s"graft UCT join reorder failed, keeping original order: $e")
-            j.setTagValue(PROCESSED, true); j
+            j
         }
     }
   }
@@ -88,8 +88,8 @@ final class UctJoinReorderRule(spark: SparkSession) extends Rule[LogicalPlan] wi
         val tEnd = System.nanoTime()
         logInfo(f"graft UCT timing: samples ${(tSearch0 - tSample0) / 1e3}%.0f us, " +
           f"search ${(tEnd - tSearch0) / 1e3}%.0f us over ${graph.leaves.size} leaves")
-        // a query can trigger several reorders while the tree is still being
-        // assembled mid-batch; report the widest one (the full join)
+        // a query can reorder several separate join trees (e.g. one under an
+        // aggregate subquery); report the widest one
         val stats = RuleStats(graph.leaves.size, learned, search.episodes,
           search.nodesCreated, search.treeSummary(),
           sampleMs = (tSearch0 - tSample0) / 1e6, searchMs = (tEnd - tSearch0) / 1e6)

@@ -253,14 +253,46 @@ class UctRuleSpec extends SparkSpec {
   }
 
   test("rule fires at the reference corpus's maximum width (17 relations)") {
+    import graft.plans.SampleStore
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     UctJoinReorderRule.clearCache()
     UctJoinReorderRule.lastStats = None
-    run("q110_job_wide17").queryExecution.optimizedPlan
+    SampleStore.clear()
+    SampleStore.resetStats()
+    // sf0.1: at sf0.001 a second search over a rebuilt sub-join learns the
+    // same order as the first, so the executed-order pin could not catch it
+    val df = SparkEntry.queries("q110_job_wide17")(spark, "/root/testdata/sf0.1")
+    val optimized = df.queryExecution.optimizedPlan
     val stats = UctJoinReorderRule.lastStats
     assert(stats.exists(_.nrRelations == 17),
       s"expected a 17-relation reorder, got $stats")
     assert(stats.get.order.sorted == (0 until 17),
       s"learned order must be a full permutation, got ${stats.get.order}")
+    // one search per join tree: a second search over a rebuilt sub-join
+    // would add its own order-cache entry
+    assert(UctJoinReorderRule.cacheSize == 1,
+      s"expected one learned order, the cache holds ${UctJoinReorderRule.cacheSize}")
+    // the rule's input is the same analyzed plan optimized with the rule
+    // off: no later batch reorders joins (CBO is off)
+    spark.conf.set("spark.graft.uct.enabled", "false")
+    val unordered =
+      try spark.sessionState.optimizer.execute(df.queryExecution.analyzed)
+      finally spark.conf.set("spark.graft.uct.enabled", "true")
+    def widest(p: LogicalPlan): JoinGraph =
+      p.collect { case j: Join => JoinGraph.extract(j) }.flatten.maxBy(_.leaves.size)
+    val (in, out) = (widest(unordered), widest(optimized))
+    assert(in.leaves.size == 17 && out.leaves.size == 17)
+    // each distinct canonical leaf is sampled once: the filtered leaves the
+    // search sees, not also their bare pre-inference forms
+    val distinctLeaves = in.leaves.map(_.canonicalized).distinct.size
+    assert(SampleStore.scanCount + SampleStore.diskHitCount == distinctLeaves,
+      s"${SampleStore.scanCount} scans + ${SampleStore.diskHitCount} disk hits " +
+        s"for $distinctLeaves distinct leaves")
+    // the executed order is the reported one: leaves are told apart by the
+    // exprIds of their relations (self-join roles get their own)
+    def role(l: LogicalPlan) = l.collectLeaves().flatMap(_.output.map(_.exprId))
+    assert(out.leaves.map(role) == stats.get.order.map(i => role(in.leaves(i))),
+      s"the optimized join does not follow the reported order ${stats.get.order}")
   }
 
   test("width-17 search halts by convergence, not the episode cap, and beats greedy-by-size") {

@@ -239,9 +239,9 @@ class WcojRouteSpec extends SparkSpec {
       JOIN kfk_supp s ON s.skey = l.lskey AND s.snkey = c.cnkey"""
     assert(!routed(spark.sql(sql)), "key–FK loop was wrongly routed")
 
-    // the declined m:n probe reads the samples the UCT reorder of the same
-    // join takes anyway: with both rules on, the query scans exactly as
-    // many leaf samples as the UCT rule alone
+    // the UCT rule samples each of the 4 leaves once, under its inferred
+    // filters; the declined m:n probe runs before filter inference, on the
+    // bare leaves, so the two share no sample and their scans add up
     def sampleScans(wcoj: Boolean, uct: Boolean): Long = {
       spark.conf.set("spark.graft.wcoj.enabled", wcoj.toString)
       spark.conf.set("spark.graft.uct.enabled", uct.toString)
@@ -260,8 +260,9 @@ class WcojRouteSpec extends SparkSpec {
     val uctOnly = sampleScans(wcoj = false, uct = true)
     val both = sampleScans(wcoj = true, uct = true)
     assert(probeOnly >= 1, "the m:n probe sampled nothing")
-    assert(both == uctOnly,
-      s"the m:n probe added ${both - uctOnly} scans to the UCT rule's $uctOnly")
+    assert(uctOnly == 4, s"the UCT rule took $uctOnly scans for 4 leaves")
+    assert(both == uctOnly + probeOnly,
+      s"both rules took $both scans; the probe alone $probeOnly, the UCT rule alone $uctOnly")
   }
 
   test("bipartite butterfly census routes via the sampled m:n probe") {
