@@ -1,450 +1,90 @@
 package graft
 
-/** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line (total seconds + per-query seconds), the engine-side
-  * analog of the reference's `bench` command
-  * (/root/reference/src/console/SkinnerCmd.java:67-99).
+import org.apache.spark.sql.functions.{col, count, lit, udaf}
+
+/** Timing main: runs the SparkEntry registry (or only the entry names given
+  * as arguments) on SPARK_GRAFT_SF_DIR and prints ONE JSON line, the
+  * engine-side analog of the reference's `bench` command
+  * (`SkinnerCmd.java:67-99`).
   *
-  * Each query runs twice after a warm-up and reports the faster pass; the
-  * per-pass telemetry goes to a CSV and the full-precision per-query map
-  * to a lossless sidecar, so the JSON line only has to fit a
-  * 2000-character output-tail capture.
+  * Each entry runs twice after a warm-up and reports the faster pass. The
+  * line holds the per-entry seconds and their total over the entries that
+  * ran; each entry also gets a `BENCH <name> <best>` line on stderr. An
+  * entry whose first pass fails reads -1, never fast. Nothing is written to
+  * disk.
   *
-  * The capture adjudicates itself ([[contaminatedCapture]]: four fixed
-  * ceilings on cpu/query, loadavg, steal% and wall/query) and, at sf0.1,
-  * settles and reruns a contaminated sweep up to [[maxAttempts]] times,
-  * shipping the minimum-wall clean attempt, flagged honestly if none is
-  * clean. KNOWN BIAS: a retry reruns in the same now-warm JVM (JIT, sample
-  * caches, page cache), so a shipped attempt ≥ 2 reads somewhat faster
-  * than a cold capture; the `"attempts"` field and the CSV header's
-  * `attempt=N` mark it.
+  * Usage: `SPARK_GRAFT_SF_DIR=<sfDir> tools/run.sh graft.Bench [entry...]`
   */
 object Bench {
-
-  /** Ceiling on process-CPU seconds per registry entry at sf0.1. Quiet
-    * captures read 4.4–5.3 (r11p 1169.7 s / 255 entries, r13 1482.9/281);
-    * loaded-window captures read >10 (BENCH_r11 16.5, BENCH_r12
-    * 10.9): shared-host interference inflates this process's CPU via
-    * cache-thrash/GC, not just wall. */
-  val quietCpuPerQueryCeiling: Double = 8.0
-
-  /** Ceiling on WALL seconds per registry entry (Σ best-pass seconds over
-    * the entry count) at sf0.1. Over the 70 committed sf0.1 captures the
-    * clean ones top out at 0.670 (r12e) and the wall-inflated ones start
-    * at 0.681 (r11j); 0.675 splits the two. This axis sees scheduler
-    * latency that stretches wall at flat cpu, quiet load and low steal
-    * (r14g 0.70, r14d 0.81). */
-  val quietWallPerQueryCeiling: Double = 0.675
-
-  /** Ceiling on the 1-minute loadavg at either end of a capture: this
-    * process alone never pushed a quiet capture past 2.9, while a
-    * deliberately loaded rerun of r13 (40 memory-churn hogs) sampled
-    * 31/43 with its process CPU still in band. External contention
-    * inflates wall, not this process's CPU, so only this axis sees it. */
-  val quietLoad1Ceiling: Double = 8.0
-
-  /** Ceiling on the CPU-steal percentage over the run: this box is a VM
-    * on a shared physical host (idle steal ≈ 2.3%); a capture taken while
-    * neighbor tenants hammer the host reads double digits. */
-  val quietStealPctCeiling: Double = 10.0
-
-  /** Total sweep attempts a contaminated capture may consume (the
-    * initial run + 2 retries). */
-  val maxAttempts: Int = 3
-
-  /** Self-adjudication of a capture from its own telemetry: contaminated
-    * when any of the four per-query or host readings exceeds its fixed
-    * ceiling — cpu/query (shared-host cache/SMT interference burns this
-    * process's cycles), loadavg (in-guest load), steal% (host-neighbor
-    * load) or wall/query (scheduler latency at flat cpu, load and steal).
-    * Calibrated at sf0.1 only; other SFs never flag. Negative samples mean
-    * the reading was unavailable — unknown, not incriminating (wallSec < 0
-    * skips the wall axis). */
-  def contaminatedCapture(cpuSec: Double, nQueries: Int, sfName: String,
-                          load1Start: Double, load1End: Double,
-                          stealPct: Double = -1.0,
-                          wallSec: Double = -1.0): Boolean =
-    sfName == "sf0.1" && nQueries > 0 &&
-      (cpuSec / nQueries > quietCpuPerQueryCeiling ||
-        math.max(load1Start, load1End) > quietLoad1Ceiling ||
-        stealPct > quietStealPctCeiling ||
-        (wallSec >= 0 && wallSec / nQueries > quietWallPerQueryCeiling))
-
-  /** Index of the attempt whose JSON line ships: the MINIMUM-WALL clean
-    * attempt (VERDICT r14 #1 — wall is the number the artifact reports,
-    * so among clean windows the least-stretched one is the capture; with
-    * the retry loop stopping at the first clean attempt the two rules
-    * coincide today, but the selection must not regress if the loop ever
-    * keeps going), else the attempt that burned the least process CPU
-    * per query — contamination only ever inflates cpu, so min-cpu is
-    * the least-poisoned of a bad lot. */
-  def cleanestIndex(contaminated: Seq[Boolean], cpuPerQuery: Seq[Double],
-                    wallPerQuery: Seq[Double]): Int = {
-    val clean = contaminated.zipWithIndex.collect { case (false, i) => i }
-    if (clean.nonEmpty) clean.minBy(wallPerQuery)
-    else cpuPerQuery.zipWithIndex.minBy(_._1)._2
-  }
-
-  /** /proc/stat (steal ticks, total ticks) from ONE read, so both come
-    * from the same instant. The total sums fields 1..8 (user..steal)
-    * ONLY: guest/guest_nice (fields 9/10) are already folded into
-    * user/nice by the kernel, so including them would double-count
-    * guest time and understate steal%. Shared by the decade harness. */
-  def stealSample(): (Long, Long) =
-    try {
-      val f = java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get("/proc/stat")).get(0).trim.split("\\s+")
-      (f(8).toLong, f.slice(1, 9).map(_.toLong).sum)
-    } catch { case _: Exception => (-1L, -1L) }
-
-  def loadavg(): String =
-    try java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/proc/loadavg")).trim
-    catch { case _: Exception => "n/a" }
-
-  def load1(s: String): Double =
-    try s.split("\\s+")(0).toDouble catch { case _: Exception => -1.0 }
-
-  /** Bounded wait for the host to go quiet before a retry: poll the
-    * 1-minute loadavg and the steal% over each poll window until every
-    * READABLE signal reads quiet (load1 < 3, steal < 3% — well inside
-    * the contamination ceilings, since retrying into a marginal window
-    * wastes a sweep) or `maxWaitSec` elapses. An unreadable signal is
-    * treated as quiet — it cannot condemn the window — but a readable
-    * LOUD signal always keeps waiting; only when BOTH are unreadable is
-    * there nothing to wait on and settle exits immediately. */
-  def settle(maxWaitSec: Int, pollSec: Int = 15): Unit = {
-    val deadline = System.nanoTime() + maxWaitSec * 1e9.toLong
-    var quiet = false
-    while (!quiet && System.nanoTime() < deadline) {
-      val (s0, t0) = stealSample()
-      Thread.sleep(pollSec * 1000L)
-      val (s1, t1) = stealSample()
-      val steal = if (s0 < 0 || s1 < 0 || t1 <= t0) -1.0
-        else 100.0 * (s1 - s0) / (t1 - t0)
-      val l1 = load1(loadavg())
-      System.err.println(f"BENCH SETTLE load1=$l1%.2f steal=$steal%.1f%%")
-      // unreadable signals read -1 and are therefore < 3.0 = quiet by
-      // construction; a readable loud signal keeps the loop waiting
-      quiet = l1 < 3.0 && steal < 3.0
-    }
-  }
-
-  /** One full sweep's results + the telemetry that adjudicates it.
-    * `wallSec` = Σ best-pass seconds (the JSON line's total); `csvPath`
-    * names the per-pass artifact this attempt wrote (the lossless
-    * sidecar references it). */
-  final case class Attempt(results: Seq[(String, Double)],
-                           startLoad: String, endLoad: String,
-                           cpuSec: Double, stealPct: Double,
-                           wallSec: Double, contaminated: Boolean,
-                           csvPath: String)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown registry entries: ${unknown.mkString(" ")}")
     val spark = GraftSession.create()
-    // warm the JVM/codegen/parquet/join/agg paths so the first timed query
+    // warm the JVM/codegen/parquet/join/agg paths so the first timed entry
     // isn't charged several seconds of one-time startup cost
     spark.range(1000000).selectExpr("sum(id)").collect()
     val db = Db(spark, sfDir)
-    // load the catalog once up front — the reference does the same at startup
-    // (BufferManager.loadDB); per-query time then measures the query, not
-    // repeated schema inference
+    // load the catalog once up front, as the reference does at startup
+    // (BufferManager.loadDB)
     Db.tableNames.foreach { n => if (n == "events") db.events else db.table(n) }
-    db.region.count()
-    // warm the broadcast-join + decimal-aggregate codegen paths the TPC-H
-    // queries hit first (JVM/janino warmup otherwise lands on q01/q03)
-    db.region.join(db.nation,
-        org.apache.spark.sql.functions.col("r_regionkey") ===
-          org.apache.spark.sql.functions.col("n_regionkey"))
+    // broadcast join, decimal sum, typed UDAF, pivot and streaming state:
+    // each a codegen/class-loading path whose one-time cost would otherwise
+    // land on whichever entry hits it first
+    db.region.join(db.nation, col("r_regionkey") === col("n_regionkey"))
       .groupBy("r_name").count().collect()
-    db.supplier
-      .agg(Db.moneySum(Db.dec(org.apache.spark.sql.functions.col("s_acctbal"))))
-      .collect()
-    // warm the remaining cold-JIT jitter sources the round-3 judge measured
-    // (q89 typed-UDAF aggregation, q96 pivot, q77 streaming state): each is
-    // a distinct codegen/class-loading path whose one-time cost otherwise
-    // lands on whichever query hits it first
+    db.supplier.agg(Db.moneySum(Db.dec(col("s_acctbal")))).collect()
+    val wavg = udaf(graft.functions.WeightedAvg)
+    db.region.agg(wavg(col("r_regionkey").cast("double"), lit(1.0))).collect()
+    db.nation.groupBy("n_regionkey")
+      .pivot("n_regionkey", Seq(0, 1)).agg(count(lit(1))).collect()
     locally {
-      import org.apache.spark.sql.functions.{col, count, lit, udaf}
-      val wavg = udaf(graft.functions.WeightedAvg)
-      db.region.agg(wavg(col("r_regionkey").cast("double"),
-        lit(1.0)).as("w")).collect()
-      db.nation.groupBy("n_regionkey")
-        .pivot("n_regionkey", Seq(0, 1)).agg(count(lit(1))).collect()
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       import spark.implicits._
-      val warmStream =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
-      val wq = warmStream.toDF().groupBy("value").count()
+      val warm = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
+      val wq = warm.toDF().groupBy("value").count()
         .writeStream.format("noop").outputMode("complete").start()
-      warmStream.addData(1, 2, 3)
+      warm.addData(1, 2, 3)
       wq.processAllAvailable(); wq.stop()
     }
-    // the reference-workload fixtures (synthesized IMDB schema, augmented
-    // TPC-H views) are one-time catalog setup, same as the table pre-load
-    // above — build them in warmup so q117+/q121+ time the queries, not a
-    // 21-table parquet write
+    // one-time fixture setup (synthesized IMDB schema, augmented TPC-H
+    // views, gate tables), so entries time the query, not a parquet write
     if (queries.ImdbQueries.all.nonEmpty) sources.Imdb.ensure(spark)
     if (queries.TpchQueries.all.nonEmpty) sources.Tpch.ensure(spark, sfDir)
     queries.OperatorGates.ensureFixtures(spark, sfDir)
-    // two timed passes per query, report the min: a single-pass capture is
-    // exposed to one-shot noise (GC pause, page-cache miss, a concurrent
-    // compaction) — round 5's driver artifact showed 13 phantom 2-10x
-    // regressions that a clean rerun disproved. The min of two passes is the
-    // standard steady-state estimator and stays honest: both passes run the
-    // full query (no result caching between them — each call re-plans and
-    // re-executes from the parquet scans).
-    // returns (wall sec, plan-time SampleStore scan millis within the pass):
-    // the second column splits a slow pass into sampling-storm vs execution
-    // without a judge rerun (the r9 q82–q86/q165/q55 regressions and the
-    // q162 cold pass were exactly this ambiguity)
-    // driver-JVM GC wall millis: attributes a pass swing to collector
-    // pauses (accumulated broadcast/block pressure late in a 177-query
-    // session) vs genuine execution — the r10/r11 q162 bimodality question
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    // per-pass streaming-harness millis (MemoryStream feed collect + stream
-    // start/stop — graft.streaming.HarnessClock): separates an operator
-    // regression in a streaming entry from harness noise without a rerun
-    def once(name: String, fn: (org.apache.spark.sql.SparkSession, String)
-        => org.apache.spark.sql.DataFrame): (Double, Long, Long, Long) = {
-      val scan0 = graft.plans.SampleStore.scanMillis
-      val gc0 = gcMillis()
-      val h0 = graft.streaming.HarnessClock.millis
+
+    // one pass: materialize every output row (a bare .count() lets Catalyst
+    // prune the projections of map-only entries) and re-plan from the scans
+    def once(name: String): Double = {
       val t0 = System.nanoTime()
-      // materialize every output row (a bare .count() lets Catalyst prune the
-      // projections of map-only queries, timing just scan+count); failures are
-      // surfaced on stderr and flagged as -1, never silently "fast"
-      try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
-        ((System.nanoTime() - t0) / 1e9,
-          graft.plans.SampleStore.scanMillis - scan0, gcMillis() - gc0,
-          graft.streaming.HarnessClock.millis - h0) }
-      catch { case e: Throwable =>
-        System.err.println(s"BENCH FAILURE $name: $e")
-        (-1.0, graft.plans.SampleStore.scanMillis - scan0, gcMillis() - gc0,
-          graft.streaming.HarnessClock.millis - h0) }
-    }
-    // process-CPU seconds: with loadavg, the second self-diagnosis axis — a
-    // contended host shows wall ≫ cpu/32 AND high loadavg; a genuinely slow
-    // engine burns the CPU itself (r10's 242 s driver capture vs three
-    // independent 73-88 s runs needed a judge rerun to adjudicate because the
-    // JSON line carried neither)
-    def procCpuSec(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean =>
-          os.getProcessCpuTime / 1e9
-        case _ => -1.0
-      }
-    val sfName = new java.io.File(sfDir).getName // basename: robust to trailing '/'
-    // the session's parallelism, not the machine's core count: a scaling
-    // run (SPARK_GRAFT_CPUS below nproc) tags its artifacts `_c<N>` so they
-    // never read as a normal round's capture
-    val cpus = spark.sparkContext.defaultParallelism
-    val cpuTag =
-      if (cpus != Runtime.getRuntime.availableProcessors) s"_c$cpus" else ""
-    // never overwrite an existing artifact (an r10 run silently clobbered
-    // a committed CSV): the first of name(""), name("b") …
-    // name("z") that does not exist yet
-    def firstFree(name: String => String): java.nio.file.Path = {
-      val cands = ("" +: ('b' to 'z').map(_.toString))
-        .map(c => java.nio.file.Paths.get(name(c)))
-      cands.find(!java.nio.file.Files.exists(_)).getOrElse(cands.last)
-    }
-
-    // Round number = 1 + the highest BENCH_r<N>.json already in the repo
-    // (this run's own artifact is written by the driver afterwards).
-    def repoRound(): Int = {
-      val here = new java.io.File(".").getAbsoluteFile.getParentFile
-      val rounds = Option(here.listFiles).getOrElse(Array.empty[java.io.File])
-        .map(_.getName).collect {
-          case s if s.matches("BENCH_r\\d+\\.json") =>
-            s.stripPrefix("BENCH_r").stripSuffix(".json").toInt
-        }
-      if (rounds.isEmpty) 1 else rounds.max + 1
-    }
-
-    /** One full sweep over the registry: timings, stderr breakdown, and
-      * the per-pass CSV artifact (each attempt lands its own suffixed
-      * file — attempts are history, never clobbered). */
-    def runAttempt(attempt: Int): Attempt = {
-      val startLoad = loadavg()
-      val startCpu = procCpuSec()
-      val (startSteal, startTotal) = stealSample()
-      // per-ATTEMPT SampleStore deltas: the counters are JVM-cumulative,
-      // and a retry attempt must not report attempt 1's scans as its own
-      val scan0 = graft.plans.SampleStore.scanCount
-      val hit0 = graft.plans.SampleStore.hitCount
-      val disk0 = graft.plans.SampleStore.diskHitCount
-      System.err.println(s"BENCH ENV start attempt=$attempt loadavg=[$startLoad] " +
-        s"cpus=$cpus " +
-        s"heapMax=${Runtime.getRuntime.maxMemory() >> 20}M")
-      val timed = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        graft.plans.WcojJoinRule.clearStats()
-        val (t1, sm1, gc1, hm1) = once(name, fn)
-        // WCOJ route telemetry from pass1 (plan caches make pass2's a replay):
-        // a silently-declined route (fell back to binary joins) shows up as
-        // fired=0 in the per-pass CSV and explains a perf cliff without a rerun
-        val route = graft.plans.WcojJoinRule.lastRoute
-        // a failed SECOND pass must not clobber a successful first (the gate
-        // queries assert runtime behavior that can legitimately differ on a
-        // warm re-execution); the failure is already on stderr
-        val (t2, sm2, gc2, hm2, best) =
-          if (t1 < 0) (Double.NaN, 0L, 0L, 0L, t1) else {
-            val (p2, s2, g2, h2) = once(name, fn)
-            (p2, s2, g2, h2, if (p2 < 0) t1 else math.min(t1, p2))
-          }
-        (name, t1, t2, best, sm1, sm2, gc1, gc2, hm1, hm2, route)
-      }
-      val endLoad = loadavg()
-      val cpuSec = procCpuSec() - startCpu
-      val stealPct = {
-        val (endSteal, endTotal) = stealSample()
-        if (startSteal < 0 || endSteal < 0 || endTotal <= startTotal) -1.0
-        else 100.0 * (endSteal - startSteal) / (endTotal - startTotal)
-      }
-      System.err.println(f"BENCH ENV stealPct=$stealPct%.1f")
-      System.err.println(s"BENCH ENV end loadavg=[$endLoad] " +
-        f"procCpuSec=$cpuSec%.1f " +
-        s"samples=[scans=${graft.plans.SampleStore.scanCount - scan0} " +
-        s"hits=${graft.plans.SampleStore.hitCount - hit0} " +
-        s"diskHits=${graft.plans.SampleStore.diskHitCount - disk0} " +
-        s"keys=${graft.plans.SampleStore.keyCount}]")
-      timed.foreach { case (k, t1, t2, v, sm1, sm2, gc1, gc2, hm1, hm2, _) =>
-        System.err.println(f"BENCH $k%-28s $v%8.3f s  pass1=$t1%.3f pass2=$t2%.3f" +
-          f"  sampleMs=$sm1/$sm2 gcMs=$gc1/$gc2 harnessMs=$hm1/$hm2") }
-      val results = timed.map { case (name, _, _, best, _, _, _, _, _, _, _) =>
-        name -> best }
-      val wallSec = results.map(_._2).sum
-      // adjudicate BEFORE the CSV write so the verdict lands in its header
-      val contaminated = contaminatedCapture(cpuSec, results.size, sfName,
-        load1(startLoad), load1(endLoad), stealPct, wallSec)
-      var csvPath = ""
-      // persist the per-pass telemetry as a committed artifact: the driver's
-      // tail capture keeps only the JSON line, so without this file a
-      // contention-window adjudication (both passes inflated + loadavg high ⇒
-      // environment, pass1≫pass2 ⇒ one-shot hiccup) needs a judge rerun.
       try {
-        val round = repoRound()
-        val sb = new StringBuilder(
-          s"# sf=$sfDir attempt=$attempt start_loadavg=[$startLoad] " +
-            s"end_loadavg=[$endLoad] " +
-            f"procCpuSec=$cpuSec%.1f stealPct=$stealPct%.1f " +
-            f"wallSec=$wallSec%.1f contaminated=$contaminated " +
-            s"cpus=$cpus " +
-            s"sampleScans=${graft.plans.SampleStore.scanCount - scan0} " +
-            s"sampleDiskHits=${graft.plans.SampleStore.diskHitCount - disk0} " +
-            s"sampleKeys=${graft.plans.SampleStore.keyCount}\n" +
-            "Query,Pass1Sec,Pass2Sec,BestSec,Pass1SampleMs,Pass2SampleMs," +
-            "Pass1GcMs,Pass2GcMs,Pass1HarnessMs,Pass2HarnessMs," +
-            "WcojFired,WcojCells,WcojPayload,WcojPinned,WcojGrownByProbe\n")
-        timed.foreach { case (k, t1, t2, v, sm1, sm2, gc1, gc2, hm1, hm2,
-            route) =>
-          val w = route.map(r => s"1,${r.cells},${r.payloadLeaves}," +
-            s"${r.pinnedVars.mkString("[", " ", "]")},${if (r.grownByProbe) 1 else 0}")
-            .getOrElse("0,,,,")
-          sb.append(
-            f"$k,$t1%.3f,$t2%.3f,$v%.3f,$sm1,$sm2,$gc1,$gc2,$hm1,$hm2,$w\n") }
-        // Only the driver's per-round sf0.1 run owns the repo artifact;
-        // local smoke runs at other SFs park their telemetry in /tmp so they
-        // can't clobber the capture PERF.md cites.
-        val out =
-          if (sfName == "sf0.1")
-            firstFree(c => f"docs/bench_passes_r$round%02d$c$cpuTag.csv")
-          else java.nio.file.Paths.get("/tmp/graft_bench_passes.csv")
-        if (java.nio.file.Files.isDirectory(out.getParent)) {
-          java.nio.file.Files.writeString(out, sb.toString)
-          csvPath = out.toString
-          System.err.println(s"BENCH passes CSV written to $out")
-        } else System.err.println(s"BENCH passes CSV skipped: no ${out.getParent}")
-      } catch { case e: Exception =>
-        System.err.println(s"BENCH passes CSV failed: $e") }
-      if (contaminated)
-        System.err.println(f"BENCH CONTAMINATED attempt=$attempt: cpu/query " +
-          f"${cpuSec / math.max(1, results.size)}%.1f s (quiet ceiling " +
-          f"$quietCpuPerQueryCeiling) / load1 [$startLoad | $endLoad] " +
-          f"(quiet ceiling $quietLoad1Ceiling) / steal $stealPct%.1f%% " +
-          f"(quiet ceiling $quietStealPctCeiling) / wall/query " +
-          f"${wallSec / math.max(1, results.size)}%.3f s (quiet ceiling " +
-          f"$quietWallPerQueryCeiling)")
-      Attempt(results, startLoad, endLoad, cpuSec, stealPct, wallSec,
-        contaminated, csvPath)
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"BENCH FAILURE $name: $e"); -1.0 }
     }
-
-    // the retry loop: a contaminated sf0.1 attempt settles and reruns, up
-    // to maxAttempts sweeps; every attempt's CSV is kept
-    var attempts = Vector(runAttempt(1))
-    while (attempts.last.contaminated && attempts.size < maxAttempts &&
-        sfName == "sf0.1") {
-      System.err.println(s"BENCH RETRY: attempt ${attempts.size} contaminated, " +
-        "settling before rerun")
-      settle(maxWaitSec = 300)
-      attempts :+= runAttempt(attempts.size + 1)
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val results = names.map { name =>
+      // a failed second pass keeps the first: the gates assert runtime
+      // behaviour that can legitimately differ on a warm re-execution
+      val t1 = once(name)
+      val best = if (t1 < 0) t1 else {
+        val t2 = once(name)
+        if (t2 < 0) t1 else math.min(t1, t2)
+      }
+      System.err.println(f"BENCH $name%-28s $best%8.3f")
+      name -> best
     }
-    val chosen = attempts(cleanestIndex(attempts.map(_.contaminated),
-      attempts.map(a => a.cpuSec / math.max(1, a.results.size)),
-      attempts.map(a => a.wallSec / math.max(1, a.results.size))))
-    val contaminated = chosen.contaminated
-    val results = chosen.results
-
-    def fmt(v: Double, dec: Int): String =
-      s"%.${dec}f".formatLocal(java.util.Locale.ROOT, v)
-    // short key = the unique qNN prefix of the registry name
-    require(results.map(_._1.takeWhile(_ != '_')).distinct.size == results.size,
-      "qNN prefixes must be unique for the compact bench keys")
-    val total = results.map(_._2).sum
-    // self-diagnosing fields: start/end 1-min loadavg, this process's
-    // CPU-seconds, steal%, the sweeps the retry loop spent and the verdict,
-    // so a contaminated capture is adjudicable from the line alone
-    val envFields =
-      s""","load":[${fmt(load1(chosen.startLoad), 1)},${fmt(load1(chosen.endLoad), 1)}],"cpu":${fmt(chosen.cpuSec, 1)},"steal":${fmt(chosen.stealPct, 1)},"attempts":${attempts.size},"contaminated":$contaminated"""
-    def jsonLine(qs: String) =
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$qs,"sf":"$sfName"$envFields}"""
-    // the capture keeps only the last ~2000 chars of output, and sbt appends
-    // its own ~65-char "[success] Total time" epilogue after our line, so
-    // lines ≤ ~1930 survive intact (r7–r9's BENCH_r*.json came back
-    // parsed:null from a 1985-char line). A full per-query map does not fit
-    // above ~200 entries, so the line keeps 1-decimal entries for the slow
-    // queries only — an absent key reads "faster than the floor" — and the
-    // full map lives in the sidecar below.
-    def qsSlow(floor: Double) = results.filter(_._2 >= floor)
-      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v, 1) }
-      .mkString("{", ",", "}")
-    val line = Seq(jsonLine(qsSlow(0.45)), jsonLine(qsSlow(0.95)), jsonLine("{}"))
-      .find(_.length < 1930).get
-    // the LOSSLESS sidecar: the full-name, full-precision map — plus the
-    // chosen attempt's CSV path and md5 — in its own committed file, with
-    // the same no-clobber suffixes as the CSVs.
-    try {
-      val fullQs = results
-        .map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
-        .mkString("{", ",", "}")
-      val csvMd5 =
-        if (chosen.csvPath.nonEmpty) {
-          val md = java.security.MessageDigest.getInstance("MD5")
-          md.digest(java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(chosen.csvPath)))
-            .map("%02x".format(_)).mkString
-        } else ""
-      val full =
-        s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","sf":"$sfName"$envFields,"csv":"${chosen.csvPath}","csvMd5":"$csvMd5","queries":$fullQs}"""
-      val out =
-        if (sfName == "sf0.1") {
-          val round = repoRound()
-          firstFree(c => f"BENCH_r$round%02d${cpuTag}_full" +
-            (if (c.isEmpty) "" else "_" + c) + ".json")
-        } else java.nio.file.Paths.get("/tmp/graft_bench_full.json")
-      java.nio.file.Files.writeString(out, full + "\n")
-      System.err.println(s"BENCH full sidecar written to $out")
-    } catch { case e: Exception =>
-      System.err.println(s"BENCH full sidecar failed: $e") }
     spark.stop()
-    // write the line to the REAL stdout fd: under sbt, System.out is wrapped
-    // by the logger and every println gains an "[info] " prefix that breaks
-    // the driver's per-line JSON parse (observed in BENCH_r03's capture)
+
+    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val perEntry = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    val sfName = new java.io.File(sfDir).getName
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
+      s""""sf":"$sfName","queries":$perEntry}"""
+    // the real stdout fd: under sbt, System.out gains an "[info] " prefix
     val raw = new java.io.FileOutputStream(java.io.FileDescriptor.out)
     raw.write((line + "\n").getBytes("UTF-8"))
     raw.flush()

@@ -158,8 +158,9 @@ object Robust {
       .select(g ++ Seq(col("lo_cut"), col("hi_cut")): _*)
     // NO forced broadcast hint: the cut side is an aggregate behind a
     // shuffle boundary, so AQE broadcasts it from its MEASURED size when
-    // small (the gate-scale plan stays a BroadcastHashJoin — DebugGovPlan
-    // audits it) and degrades to a shuffle join past the threshold —
+    // small (the gate-scale plan stays a BroadcastHashJoin —
+    // `tools/run.sh graft.Explain <entry>` shows it) and degrades to a
+    // shuffle join past the threshold —
     // whereas a pinned hint on a high-cardinality group key (user id)
     // would OOM the driver — the discipline Features.targetEncodeLoo's
     // join-back follows too.

@@ -96,10 +96,9 @@ object SampleStore {
 
   /** Plan-time sampling telemetry (driver-side, test/bench attribution): how
     * many cache hits vs actual sample SCANS (each scan = one bounded Spark
-    * job) and the wall time spent inside them. Bench threads scanMillis
-    * deltas through each timed pass (Pass{1,2}SampleMs in the per-pass CSV)
-    * so a slow pass splits into plan-time-sampling vs execution without a
-    * judge rerun — the ambiguity behind the r9 q82–q86/q165/q55 rows. */
+    * job) and the wall time spent inside them. perfbench reports the
+    * scanMillis delta of a run as `samplestore.scan_ms`, so a slow run
+    * splits into plan-time sampling vs execution without a rerun. */
   private val scanCountA = new java.util.concurrent.atomic.AtomicLong
   private val hitCountA = new java.util.concurrent.atomic.AtomicLong
   private val diskHitCountA = new java.util.concurrent.atomic.AtomicLong

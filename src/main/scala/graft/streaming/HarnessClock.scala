@@ -2,10 +2,10 @@ package graft.streaming
 
 /** Wall-clock accumulator for the STREAMING GATES' harness overhead — the
   * MemoryStream feed collect plus stream start/stop around each gate's
-  * micro-batches. `graft.Bench` captures the per-pass delta into
-  * Pass{1,2}HarnessMs CSV columns, so an operator regression inside a
-  * streaming entry is separable from harness noise (feed materialization,
-  * query start/teardown) without a judge rerun. The
+  * micro-batches. perfbench reports its per-run delta as
+  * `stream.harness_ms`, so an operator regression inside a streaming entry
+  * is separable from harness noise (feed materialization, query
+  * start/teardown) without a rerun. The
   * addData/processAllAvailable loop is deliberately NOT counted — the
   * micro-batch execution IS the operator under measurement.
   */

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Documentation-consistency gate: every registry-size claim in the docs
   * must equal the ACTUAL `SparkEntry.registry.size` — the class of drift
   * (docs say N, registry has N+1) that recurred in rounds 4 and 5 now
-  * fails the build instead of a judge pass. */
+  * fails the build instead of a judge pass — and every main the docs say
+  * to run must exist. */
 class DocsSpec extends AnyFunSuite {
 
   private val claimRe =
@@ -62,9 +63,28 @@ class DocsSpec extends AnyFunSuite {
   test("registry names are unique and every query has oracle coverage recorded") {
     val names = SparkEntry.registry.map(_.name)
     assert(names.distinct.size == names.size, "duplicate registry query names")
-    // every name must be a qNN_ prefix and the bench short-key must be unique
+    // every name must be a qNN_ prefix, and the qNN prefix alone names an entry
     val prefixes = names.map(_.takeWhile(_ != '_'))
-    assert(prefixes.distinct.size == prefixes.size,
-      "bench short-keys (qNN prefixes) must be unique")
+    assert(prefixes.distinct.size == prefixes.size, "qNN prefixes must be unique")
+  }
+
+  test("every main the docs say to run loads as an object with a main method") {
+    val launch = """(?:tools/run\.sh|runMain)\s+(graft(?:\.\w+)+)""".r
+    val docs = Seq("README.md", "tools/run.sh", ".claude/skills/verify/SKILL.md")
+    val named = docs.flatMap { doc =>
+      val text = java.nio.file.Files.readString(java.nio.file.Paths.get(doc))
+      launch.findAllMatchIn(text).map(m => doc -> m.group(1)).toSeq
+    }.distinct
+    assert(named.nonEmpty, s"no `tools/run.sh graft.X` or `runMain graft.X` in $docs")
+    val broken = named.filterNot { case (_, main) =>
+      try {
+        // load without initializing: no object body runs
+        def load(n: String) = Class.forName(n, false, getClass.getClassLoader)
+        load(main + "$").getField("MODULE$")
+        val m = load(main).getMethod("main", classOf[Array[String]])
+        java.lang.reflect.Modifier.isStatic(m.getModifiers)
+      } catch { case _: ReflectiveOperationException => false }
+    }
+    assert(broken.isEmpty, s"docs name mains that do not load: $broken")
   }
 }

@@ -18,12 +18,18 @@ import org.apache.spark.sql.functions._
   * construction.
   */
 object DebugScale {
-  /** /proc/stat (steal ticks, total ticks) — the shared-physical-host
-    * contention reading (see Bench.quietStealPctCeiling): a decade row
-    * taken in a stolen window measures the hypervisor, not the
-    * operator, so every SCALE line carries its own steal%. One shared
-    * sampler with the bench (fields 1..8 denominator). */
-  private def stealSample(): (Long, Long) = Bench.stealSample()
+  /** /proc/stat (steal ticks, total ticks) from one read — the
+    * shared-physical-host contention reading: a decade row taken in a
+    * stolen window measures the hypervisor, not the operator, so every
+    * SCALE line carries its own steal%. The total sums fields 1..8
+    * (user..steal) only: guest/guest_nice are already folded into
+    * user/nice. */
+  private def stealSample(): (Long, Long) =
+    try {
+      val f = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get("/proc/stat")).get(0).trim.split("\\s+")
+      (f(8).toLong, f.slice(1, 9).map(_.toLong).sum)
+    } catch { case _: Exception => (-1L, -1L) }
 
   /** Two timed runs of `f` (the SCALE protocol every decade table uses);
     * returns the min so one-time planning/JIT cost never lands in a row. */
@@ -1245,7 +1251,7 @@ object DebugScale {
 
   /** Old (localCheckpoint-pinned) vs new (sampled-boundary) two-phase
     * rank, back to back in ONE window so the comparison is
-    * contamination-fair — the r15 de-checkpoint evidence (VERDICT r14
+    * noise-fair — the r15 de-checkpoint evidence (VERDICT r14
     * #2). The old implementation is inlined verbatim from the r14
     * operators/Rank.scala. Run:
     * `tools/run.sh graft.DebugScale /root/testdata/sf0.1 rankcmp`. */

@@ -1,7 +1,9 @@
 #!/bin/bash
 # Launch a graft main class directly (without sbt), e.g.:
-#   tools/run.sh graft.Bench                      # env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS
-#   tools/run.sh graft.Verify <sfDir> <outDir>
+#   tools/run.sh graft.Bench [entry...]           # env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS;
+#                                                 # one JSON line on stdout, no files
+#   tools/run.sh graft.Verify <sfDir> <outDir> [entry...]
+#   tools/run.sh graft.Explain <entry> [sfDir]
 # Dev harness mains (graft.DebugScale etc.) live in src/test — build with
 # `sbt Test/compile` first; test-classes ride the classpath below.
 set -e
