@@ -39,13 +39,9 @@ object Bench {
     db.nation.groupBy("n_regionkey")
       .pivot("n_regionkey", Seq(0, 1)).agg(count(lit(1))).collect()
     locally {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       import spark.implicits._
-      val warm = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
-      val wq = warm.toDF().groupBy("value").count()
-        .writeStream.format("noop").outputMode("complete").start()
-      warm.addData(1, 2, 3)
-      wq.processAllAvailable(); wq.stop()
+      streaming.MicroBatchGate.run(spark, "warmup", Seq(Seq(1, 2, 3)), "complete")(
+        _.toDF().groupBy("value").count()).collect()
     }
     // one-time fixture setup (synthesized IMDB schema, augmented TPC-H
     // views, gate tables), so entries time the query, not a parquet write

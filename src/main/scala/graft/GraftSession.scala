@@ -51,6 +51,24 @@ object GraftSession {
     spark
   }
 
+  /** Run `body` with the session conf keys set to the given values, then
+    * put each key back: its earlier value if it had been set, unset if it
+    * had not. Whether a key was set is read from `conf.getAll`, because
+    * `conf.getOption` reports a registered key's default as if it were set,
+    * and restoring that would leave the key set. The session conf is
+    * shared, so a concurrent query on the same session sees these values
+    * while `body` runs. */
+  def withConf[T](s: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val set = s.conf.getAll
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** Register one parquet-backed relation under a name (the reference's
     * `registerTable` catalog surface). */
   def registerTable(spark: SparkSession, name: String, path: String): Unit =

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.Db
-import graft.streaming.HarnessClock
 import graft.streaming.HarnessClock.FeedOps
+import graft.streaming.MicroBatchGate
 import graft.operators.{Audit, Hll, Incremental, Privacy, Profile, Robust,
   Stats, Temporal}
 import org.apache.spark.sql.functions._
@@ -373,33 +373,17 @@ object GovernanceOps {
       ORDER BY rule_no"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val live = Db(s, dir).lineitem.where(col("l_orderkey") % 3 === 0)
           .select(col("l_quantity"), col("l_discount"), col("l_returnflag"))
           .as[(Double, Double, String)].collectFeed()
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Double, Double, String)]
-        val name = s"graft_q276_run_${runCounter.incrementAndGet()}"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = HarnessClock.timed(
-          try Audit.expectations(
-              input.toDS().toDF("l_quantity", "l_discount", "l_returnflag"),
+        MicroBatchGate.run(s, "q276", MicroBatchGate.split(live, 3), "complete")(
+            input => Audit.expectations(
+              input.toDF("l_quantity", "l_discount", "l_returnflag"),
               Seq(
                 ("qty_positive", col("l_quantity") > 0),
                 ("discount_le_8pct", col("l_discount") <= 0.08),
-                ("flag_domain", col("l_returnflag").isin("A", "N", "R"))))
-            .writeStream.format("memory").queryName(name)
-            .outputMode("complete").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts))
-        try {
-          val (b1, rest) = live.splitAt(live.size / 3)
-          val (b2, b3) = rest.splitAt(rest.size / 2)
-          for (b <- Seq(b1, b2, b3) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
-        s.table(name).orderBy("rule_no")
+                ("flag_domain", col("l_returnflag").isin("A", "N", "R")))))
+          .orderBy("rule_no")
       }),
 
     // --- q282: sample-ratio-mismatch audit (Stats.srmChi2) — is the
@@ -485,6 +469,4 @@ object GovernanceOps {
           .orderBy("event_type", "q_permille")
       })
   )
-
-  private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 }

@@ -3,11 +3,11 @@ package graft.queries
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.Db
-import graft.streaming.HarnessClock
+import graft.GraftSession.withConf
 import graft.streaming.HarnessClock.FeedOps
 import graft.Db.{dec, moneySum}
 import graft.operators.SkewJoin
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, MicroBatchGate}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -67,6 +67,13 @@ object OperatorGates {
   def ensureFixtures(s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     ensureJson(s, dir); ensureCsv(s, dir)
   }
+
+  /** The runtime-switch gates' session: planning-time UCT off and
+    * broadcasts off, so every join shuffles and the order the switch
+    * starts from is the authored one. */
+  private val switchGateConf = Seq(
+    "spark.graft.uct.enabled" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   val all: Seq[Q] = Seq(
     // --- q88: JSONL source roundtrip — write the documents as
@@ -165,7 +172,7 @@ object OperatorGates {
 
     // --- q79: stream-stream interval join (clicks ⋈ purchases of the same
     //     user within 1 hour), batch twin as the oracle; the incremental
-    //     MemoryStream form is asserted equal in StreamingSpec
+    //     micro-batch form is asserted equal in StreamingSpec
     Q("q79_stream_interval_join", Some("""
       SELECT c.user_id AS user_id, c.ts AS click_ts, p.ts AS purchase_ts,
              CAST(floor(p.value * 100) AS BIGINT) AS purchase_cents
@@ -185,7 +192,7 @@ object OperatorGates {
       }),
 
     // --- q77: mapGroupsWithState running totals, run INCREMENTALLY through a
-    //     MemoryStream in three batches; the final state per user must equal
+    //     MicroBatchGate in three batches; the final state per user must equal
     //     the batch aggregate (integer cents: exact, order-independent)
     Q("q77_stream_running_totals", Some("""
       SELECT user_id, count(*) AS n_events,
@@ -193,7 +200,6 @@ object OperatorGates {
       FROM events WHERE event_id < 20000 GROUP BY 1 ORDER BY 1"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         // deterministic bounded slice: the gate exercises incremental state,
         // not bulk throughput, so don't stream the whole fact at high SF
         val rows = Db(s, dir).events
@@ -201,31 +207,10 @@ object OperatorGates {
           .select(col("user_id"),
             floor(col("value") * 100).cast("long").as("cents"))
           .as[(Long, Long)].collectFeed()
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Long)]
-        val name = s"graft_q77_run_${counter.incrementAndGet()}"
-        // the stateful shuffle spawns one state-store instance per shuffle
-        // partition PER micro-batch; at 32 partitions × 3 batches that is
-        // pure fixed overhead for this bounded gate. Streaming queries pin
-        // confs at start, so narrow the partition count just for the start
-        // call and restore it for the rest of the session.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = HarnessClock.timed(
-          try EventStreams.runningUserCents(input.toDS())
-            .writeStream.format("memory").queryName(name)
-            .outputMode("update").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts))
-        try {
-          val (b1, rest) = rows.splitAt(rows.size / 3)
-          val (b2, b3) = rest.splitAt(rest.size / 2)
-          for (b <- Seq(b1, b2, b3) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
         // update-mode sink keeps every state revision; the final state per
         // user is the one with the highest event count
-        s.table(name)
+        MicroBatchGate.run(s, "q77", MicroBatchGate.split(rows, 3), "update")(
+            EventStreams.runningUserCents(_).toDF())
           .groupBy("user_id")
           .agg(max(struct(col("n_events"), col("total_cents"))).as("m"))
           .select(col("user_id"), col("m.n_events").as("n_events"),
@@ -294,25 +279,16 @@ object OperatorGates {
         val l2 = d.lineitem.select(col("l_partkey").as("l_partkey2"))
         val p = d.part.filter(col("p_size") === 1)
           .select(col("p_partkey"), col("p_brand"))
-        val prevBroadcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        val prevUct = s.conf.get("spark.graft.uct.enabled", "true")
-        s.conf.set("spark.graft.uct.enabled", "false")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         graft.plans.RuntimeOrderSwitchRule.clearLog()
-        // execute INSIDE the conf sandwich (localCheckpoint is eager): AQE
-        // reads the conf at execution, and the result frame the driver
-        // writes must not replan under restored settings
-        val result =
-          try {
-            l1.join(l2, col("l_partkey") === col("l_partkey2"))
-              .join(p, col("l_partkey") === col("p_partkey"))
-              .groupBy("p_brand").agg(count(lit(1)).as("n"))
-              .orderBy("p_brand")
-              .localCheckpoint(true)
-          } finally {
-            s.conf.set("spark.graft.uct.enabled", prevUct)
-            s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-          }
+        // execute INSIDE withConf (localCheckpoint is eager): AQE reads the
+        // conf at execution, and the result frame the driver writes must
+        // not replan under restored settings
+        val result = withConf(s, switchGateConf: _*)(
+          l1.join(l2, col("l_partkey") === col("l_partkey2"))
+            .join(p, col("l_partkey") === col("p_partkey"))
+            .groupBy("p_brand").agg(count(lit(1)).as("n"))
+            .orderBy("p_brand")
+            .localCheckpoint(true))
         require(graft.plans.RuntimeOrderSwitchRule.recentSwitches.nonEmpty,
           "runtime order switch did not fire on the misordered self-join")
         result
@@ -346,10 +322,6 @@ object OperatorGates {
         val sn = pfx(d.nation, "sn_")
         val cr = pfx(d.region, "cr_")
         val sr = pfx(d.region, "sr_")
-        val prevBroadcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        val prevUct = s.conf.get("spark.graft.uct.enabled", "true")
-        s.conf.set("spark.graft.uct.enabled", "false")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         def attempt() = {
           graft.plans.RuntimeOrderSwitchRule.clearLog()
           d.lineitem
@@ -384,7 +356,7 @@ object OperatorGates {
         // stress executions, zero re-executions). The retry loop is kept
         // at a 2-attempt bound as a belt against an unforeseen
         // environmental loss — it no longer papers over a known race.
-        try {
+        withConf(s, switchGateConf: _*) {
           var result: org.apache.spark.sql.DataFrame = null
           var tries = 0
           while ({
@@ -410,9 +382,6 @@ object OperatorGates {
             !ok
           }) ()
           result
-        } finally {
-          s.conf.set("spark.graft.uct.enabled", prevUct)
-          s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
         }
       }),
 
@@ -537,7 +506,7 @@ object OperatorGates {
     //     the oracle, q79-style: the same transformation over the same
     //     timestamped edge set, where the 1-hour join window genuinely
     //     prunes (edge times spread over 3 hours by portable arithmetic);
-    //     the incremental MemoryStream form — triangles closing across
+    //     the incremental micro-batch form — triangles closing across
     //     micro-batches — is asserted in StreamingSpec.
     Q("q166_stream_triangles", Some("""
       WITH e AS (

@@ -309,7 +309,7 @@ object Pipeline {
     //     arriving docs' shingle hashes against the static benchmark set,
     //     emitted ids deduped by quarantine-list state. Here the operator
     //     runs on the batch frame (the plan degrades to exactly
-    //     TextDedup.contaminated); the incremental MemoryStream form —
+    //     TextDedup.contaminated); the incremental micro-batch form —
     //     docs arriving across micro-batches, same final set — is asserted
     //     in StreamingSpec.
     Q("q176_stream_decontamination", Some("""
@@ -341,7 +341,7 @@ object Pipeline {
     //     verbatim span in tokens) from a sorted-positions fold — no
     //     per-pair window, state bounded by contamination mass. Batch
     //     frame here (the plan degrades to the batch sweep the oracle
-    //     replays); the incremental MemoryStream form is asserted in
+    //     replays); the incremental micro-batch form is asserted in
     //     StreamingSpec.
     Q("q287_stream_span_decontamination", Some("""
       WITH tk AS (SELECT doc_id, source, string_split(text, ' ') AS w

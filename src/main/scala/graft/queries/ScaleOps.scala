@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.Db
-import graft.streaming.HarnessClock
 import graft.streaming.HarnessClock.FeedOps
+import graft.streaming.MicroBatchGate
 import graft.operators.{Bloom, Cms}
 import org.apache.spark.sql.functions._
 
@@ -223,7 +223,7 @@ object ScaleOps {
     // --- q195: STREAMING gap-based sessionization (session_window +
     //     watermark, append mode — each session emitted exactly once when
     //     the watermark passes its end; state = open sessions only). The
-    //     bounded event slice streams through a MemoryStream in three
+    //     bounded event slice streams through MicroBatchGate in three
     //     ts-ordered micro-batches plus a far-future sentinel that closes
     //     every real session. Boundary semantics pinned by
     //     SessionWindowSpec: an event exactly `gap` after the previous one
@@ -245,7 +245,6 @@ object ScaleOps {
       FROM s GROUP BY user_id, sid ORDER BY user_id, session_start"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val rows = Db(s, dir).events
           .filter(col("event_id") < 20000)
           .select(col("user_id"),
@@ -265,10 +264,6 @@ object ScaleOps {
         // replaces the eviction-only no-data batches — its own user -1
         // sessions are filtered from the result exactly like sentinel 1's
         val sentinel2 = (-1L, sentinel._2 + 86400L * 1000000, 0L)
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Long, Long)]
-        val name = s"graft_q195_run_${runCounter.incrementAndGet()}"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
         // no-data micro-batches OFF (r16, guide §1/§5): append-mode
         // session_window emits a closed session in the first batch whose
         // START watermark passes session_end + nothing here evicts early,
@@ -277,36 +272,20 @@ object ScaleOps {
         // above carries the final emissions in a DATA batch instead —
         // same sink table (oracle-verified), ~3 fewer micro-batches. The
         // 3 real-data batches that demonstrate incrementality are kept.
-        val prevNoData =
-          s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        val q = HarnessClock.timed(
-          try graft.streaming.EventStreams.userSessions(
-              input.toDS().toDF("user_id", "us", "cents")
-                // watermark insists on TIMESTAMP (not NTZ) in streaming;
-                // the session timezone is pinned UTC, so the wall-clock
-                // values match the NTZ oracle exactly
-                .select(col("user_id"),
-                  timestamp_micros(col("us")).as("ts"), col("cents")))
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").start()
-          finally {
-            s.conf.set("spark.sql.shuffle.partitions", prevParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              prevNoData)
-          })
-        try {
-          val (b1, rest) = rows.splitAt(rows.size / 3)
-          val (b2, b3) = rest.splitAt(rest.size / 2)
-          // sentinel 1 rides the last real batch (same rows, same final
-          // table — the watermark advance it carries takes effect after
-          // the batch either way); the flush batch then emits everything
-          for (b <- Seq(b1, b2, b3 :+ sentinel, Seq(sentinel2)) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
-        s.table(name).where(col("user_id") =!= -1L)
+        // Sentinel 1 rides the last real batch (same rows, same final
+        // table — the watermark advance it carries takes effect after the
+        // batch either way); the flush batch then emits everything.
+        val Seq(b1, b2, b3) = MicroBatchGate.split(rows, 3)
+        MicroBatchGate.run(s, "q195", Seq(b1, b2, b3 :+ sentinel, Seq(sentinel2)),
+            "append", noDataBatches = false)(input =>
+          graft.streaming.EventStreams.userSessions(
+            input.toDF("user_id", "us", "cents")
+              // watermark insists on TIMESTAMP (not NTZ) in streaming;
+              // the session timezone is pinned UTC, so the wall-clock
+              // values match the NTZ oracle exactly
+              .select(col("user_id"),
+                timestamp_micros(col("us")).as("ts"), col("cents"))))
+          .where(col("user_id") =!= -1L)
           .orderBy("user_id", "session_start")
       }),
 
@@ -530,31 +509,15 @@ object ScaleOps {
       FROM h, perm GROUP BY 1, 2 ORDER BY 1, 2"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val toks = Db(s, dir).documents.where(col("doc_id") < 2000)
           .select(explode(split(col("text"), " ")).as("t"))
           .as[String].collectFeed()
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[String]
-        val name = s"graft_q205_run_${runCounter.incrementAndGet()}"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = HarnessClock.timed(
-          try graft.streaming.CorpusStreams.cmsCounters(
-              input.toDS().toDF("t"), col("t"), depth = 4, width = 256)
-            .writeStream.format("memory").queryName(name)
-            .outputMode("complete").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts))
-        try {
-          val (b1, rest) = toks.splitAt(toks.size / 3)
-          val (b2, b3) = rest.splitAt(rest.size / 2)
-          for (b <- Seq(b1, b2, b3) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
         // complete mode truncates the memory sink per batch: the table IS
         // the final (bounded, <= depth*width rows) sketch
-        s.table(name).orderBy("row", "col")
+        MicroBatchGate.run(s, "q205", MicroBatchGate.split(toks, 3), "complete")(
+            input => graft.streaming.CorpusStreams.cmsCounters(
+              input.toDF("t"), col("t"), depth = 4, width = 256))
+          .orderBy("row", "col")
       }),
 
     // --- q204: sketch-algebra join-size estimation — the AMS/CMS inner
@@ -629,30 +592,14 @@ object ScaleOps {
       FROM b GROUP BY 1, 2 ORDER BY 1, 2"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val rows = Db(s, dir).events
           .select(col("event_type"), col("user_id"))
           .as[(String, Long)].collectFeed()
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(String, Long)]
-        val name = s"graft_q214_run_${runCounter.incrementAndGet()}"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = HarnessClock.timed(
-          try graft.streaming.EventStreams.hllRegisters(
-              input.toDS().toDF("event_type", "user_id"),
-              Seq("event_type"), col("user_id"), m = 64)
-            .writeStream.format("memory").queryName(name)
-            .outputMode("complete").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts))
-        try {
-          val (b1, rest) = rows.splitAt(rows.size / 3)
-          val (b2, b3) = rest.splitAt(rest.size / 2)
-          for (b <- Seq(b1, b2, b3) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
-        s.table(name).orderBy("event_type", "bucket")
+        MicroBatchGate.run(s, "q214", MicroBatchGate.split(rows, 3), "complete")(
+            input => graft.streaming.EventStreams.hllRegisters(
+              input.toDF("event_type", "user_id"),
+              Seq("event_type"), col("user_id"), m = 64))
+          .orderBy("event_type", "bucket")
       }),
 
     // --- q224: STREAMING exact dedup at ingest — Spark's
@@ -667,48 +614,25 @@ object ScaleOps {
       SELECT DISTINCT user_id, event_type FROM events ORDER BY 1, 2"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val rows = Db(s, dir).events
           .select(col("user_id"), col("event_type"),
             unix_micros(col("ts").cast("timestamp")).as("us"))
           .as[(Long, String, Long)].collectFeed()
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, String, Long)]
-        val name = s"graft_q224_run_${runCounter.incrementAndGet()}"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
         // no-data micro-batches OFF for this query (r16, guide §1/§5):
         // they exist to advance the watermark so eviction/emission can
         // happen without new data, but dedup EMITS each first arrival in
         // its data batch and nothing evicts under the 40-day horizon —
         // the probe showed 3 eviction-only batches at ~220 ms each (a
         // third of the gate's wall) producing zero rows. The sink table
-        // is bit-identical with them off; the conf is restored after
-        // start() (MicroBatchExecution captures it at construction).
-        val prevNoData =
-          s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        val q = HarnessClock.timed(
-          try input.toDS().toDF("user_id", "event_type", "us")
+        // is bit-identical with them off.
+        MicroBatchGate.run(s, "q224", MicroBatchGate.split(rows, 3), "append",
+            noDataBatches = false)(input =>
+          input.toDF("user_id", "event_type", "us")
             .withColumn("ts", timestamp_micros(col("us")))
             .withWatermark("ts", "40 days")
             .dropDuplicatesWithinWatermark("user_id", "event_type")
-            .select("user_id", "event_type")
-            .writeStream.format("memory").queryName(name)
-            .outputMode("append").start()
-          finally {
-            s.conf.set("spark.sql.shuffle.partitions", prevParts)
-            s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-              prevNoData)
-          })
-        try {
-          val (b1, rest) = rows.splitAt(rows.size / 3)
-          val (b2, b3) = rest.splitAt(rest.size / 2)
-          for (b <- Seq(b1, b2, b3) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
-        s.table(name).orderBy("user_id", "event_type")
+            .select("user_id", "event_type"))
+          .orderBy("user_id", "event_type")
       }),
 
     // --- q229: STREAMING CDC-latest materialization — q194's delete-aware
@@ -729,7 +653,6 @@ object ScaleOps {
       ORDER BY user_id"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val rows = Db(s, dir).events
           .select(col("user_id"),
             unix_micros(col("ts").cast("timestamp")).as("us"),
@@ -737,28 +660,13 @@ object ScaleOps {
             Db.dec(col("value")).cast("double").as("value"),
             when(col("event_type") === "purchase", "D").otherwise("U").as("op"))
           .as[(Long, Long, Long, Double, String)].collectFeed()
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Long, Long, Double, String)]
-        val name = s"graft_q229_run_${runCounter.incrementAndGet()}"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = HarnessClock.timed(
-          try graft.streaming.EventStreams.cdcLatest(
-              input.toDS().toDF("user_id", "us", "tie", "value", "op")
+        MicroBatchGate.run(s, "q229", MicroBatchGate.split(rows, 3), "complete")(
+            input => graft.streaming.EventStreams.cdcLatest(
+              input.toDF("user_id", "us", "tie", "value", "op")
                 .withColumn("ts", timestamp_micros(col("us"))
                   .cast("timestamp_ntz")),
-              Seq("user_id"))
-            .writeStream.format("memory").queryName(name)
-            .outputMode("complete").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts))
-        try {
-          val (b1, rest) = rows.splitAt(rows.size / 3)
-          val (b2, b3) = rest.splitAt(rest.size / 2)
-          for (b <- Seq(b1, b2, b3) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
-        s.table(name).orderBy("user_id")
+              Seq("user_id")))
+          .orderBy("user_id")
       }),
 
     // --- q230: STREAMING top-k leaderboard — complete-mode token counts
@@ -773,29 +681,12 @@ object ScaleOps {
       GROUP BY 1 ORDER BY n DESC, t LIMIT 20"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val toks = Db(s, dir).documents.where(col("doc_id") < 2000)
           .select(explode(split(col("text"), " ")).as("t"))
           .as[String].collectFeed()
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[String]
-        val name = s"graft_q230_run_${runCounter.incrementAndGet()}"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = HarnessClock.timed(
-          try graft.streaming.EventStreams.topK(
-              input.toDS().toDF("t"), "t", k = 20)
-            .writeStream.format("memory").queryName(name)
-            .outputMode("complete").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts))
-        try {
-          val (b1, rest) = toks.splitAt(toks.size / 3)
-          val (b2, b3) = rest.splitAt(rest.size / 2)
-          for (b <- Seq(b1, b2, b3) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
-        s.table(name).orderBy(col("n").desc, col("t"))
+        MicroBatchGate.run(s, "q230", MicroBatchGate.split(toks, 3), "complete")(
+            input => graft.streaming.EventStreams.topK(input.toDF("t"), "t", k = 20))
+          .orderBy(col("n").desc, col("t"))
       }),
 
     // --- q247: STREAMING histogram maintenance — the distribution member
@@ -814,32 +705,13 @@ object ScaleOps {
       FROM c GROUP BY 1 ORDER BY 1"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val live = Db(s, dir).orders
           .where(col("o_orderkey") % 2 === 1 && col("o_totalprice").isNotNull)
           .select(col("o_totalprice")).as[Double].collectFeed()
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[Double]
-        val name = s"graft_q247_run_${runCounter.incrementAndGet()}"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = HarnessClock.timed(
-          try graft.operators.Histogram.bins(
-              input.toDS().toDF("price"), col("price"),
-              loCents = 0L, hiCents = 60000000L, nBins = 1024)
-            .writeStream.format("memory").queryName(name)
-            .outputMode("complete").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts))
-        try {
-          val (b1, rest) = live.splitAt(live.size / 3)
-          val (b2, b3) = rest.splitAt(rest.size / 2)
-          for (b <- Seq(b1, b2, b3) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
-        s.table(name).orderBy("bucket")
+        MicroBatchGate.run(s, "q247", MicroBatchGate.split(live, 3), "complete")(
+            input => graft.operators.Histogram.bins(input.toDF("price"), col("price"),
+              loCents = 0L, hiCents = 60000000L, nBins = 1024))
+          .orderBy("bucket")
       })
   )
-
-  private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 }

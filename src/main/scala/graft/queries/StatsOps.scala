@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.Db
-import graft.streaming.HarnessClock
 import graft.streaming.HarnessClock.FeedOps
+import graft.streaming.MicroBatchGate
 import graft.operators.{Corpus, Graph, Hll, Regress, Stats, Temporal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -512,7 +512,6 @@ object StatsOps {
       GROUP BY 1 ORDER BY 1"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val d38 = "decimal(38,0)"
         val ev = Db(s, dir).events.select(col("event_type"), col("ts"),
           (Db.dec(col("value")) * 100).cast("long").as("cents"))
@@ -529,24 +528,10 @@ object StatsOps {
         val live = ev.where(col("ts") >= cut)
           .select(col("event_type"), col("cents"))
           .as[(String, Long)].collectFeed()
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(String, Long)]
-        val name = s"graft_q235_run_${runCounter.incrementAndGet()}"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = HarnessClock.timed(
-          try graft.streaming.EventStreams.anomalyCounts(
-              input.toDS().toDF("event_type", "cents"), stats)
-            .writeStream.format("memory").queryName(name)
-            .outputMode("complete").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts))
-        try {
-          val (b1, b2) = live.splitAt(live.size / 2)
-          for (b <- Seq(b1, b2) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
-        s.table(name).orderBy("event_type")
+        MicroBatchGate.run(s, "q235", MicroBatchGate.split(live, 2), "complete")(
+            input => graft.streaming.EventStreams.anomalyCounts(
+              input.toDF("event_type", "cents"), stats))
+          .orderBy("event_type")
       }),
 
     // --- q236: token-budget mixture sampling (Corpus.tokenBudgetMix) —
@@ -1397,8 +1382,6 @@ object StatsOps {
           .orderBy("lang")
       })
   )
-
-  private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The 2-round label-propagation oracle chain shared by q237 and q249
     * (expects an `e` CTE with (a, b) edges in scope) — ONE definition so

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.Db
-import graft.streaming.HarnessClock
 import graft.streaming.HarnessClock.FeedOps
+import graft.streaming.MicroBatchGate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -306,7 +306,6 @@ object VectorOps {
       GROUP BY 1 ORDER BY 1"""),
       (s, dir) => {
         import s.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val emb = Db(s, dir).embeddings
         // train batch-side; collect the k·d-bounded quantized model
         val cent = graft.operators.KMeans.lloydModel(
@@ -318,30 +317,14 @@ object VectorOps {
         val live = emb
           .select(col("vec_id"), col("embedding").cast("array<double>"))
           .as[(Long, Seq[Double])].collectFeed()
-        val input = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, Seq[Double])]
-        val name = s"graft_q246_run_${runCounter.incrementAndGet()}"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = HarnessClock.timed(
-          try input.toDS().toDF("vec_id", "embedding")
-            .select(graft.operators.KMeans.nearestCentroid(
-              col("embedding"), cent).as("cluster"))
-            .groupBy("cluster").agg(count(lit(1)).as("n"))
-            .writeStream.format("memory").queryName(name)
-            .outputMode("complete").start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts))
-        try {
-          val (b1, b2) = live.splitAt(live.size / 2)
-          for (b <- Seq(b1, b2) if b.nonEmpty) {
-            input.addData(b); q.processAllAvailable()
-          }
-        } finally HarnessClock.timed(q.stop())
-        s.table(name).orderBy("cluster")
+        MicroBatchGate.run(s, "q246", MicroBatchGate.split(live, 2), "complete")(
+            input => input.toDF("vec_id", "embedding")
+              .select(graft.operators.KMeans.nearestCentroid(
+                col("embedding"), cent).as("cluster"))
+              .groupBy("cluster").agg(count(lit(1)).as("n")))
+          .orderBy("cluster")
       })
   )
-
-  private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The 2-iteration exact-integer Lloyd oracle chain shared by q177 and
     * q246 — ONE definition so a seed/tie-break fix can never leave one

@@ -171,13 +171,6 @@ object EventStreams {
         col("c.ts").as("click_ts"), col("p.ts").as("purchase_ts"),
         col("p.value").as("purchase_value"))
 
-  /** Start an incremental query writing to an in-memory sink (used by tests
-    * and as the readStream→writeStream reference wiring).
-    */
-  def startToMemory(stream: DataFrame, name: String,
-                    mode: OutputMode = OutputMode.Complete()) =
-    stream.writeStream.format("memory").queryName(name).outputMode(mode).start()
-
   final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp)
   final case class SessionAcc(start: Long, end: Long, n: Long) // epoch millis
   final case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,

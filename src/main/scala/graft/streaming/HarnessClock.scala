@@ -1,7 +1,8 @@
 package graft.streaming
 
 /** Wall-clock accumulator for the STREAMING GATES' harness overhead — the
-  * MemoryStream feed collect plus stream start/stop around each gate's
+  * MemoryStream feed collect (`collectFeed`, in each gate) plus the stream
+  * start and stop that [[MicroBatchGate.run]] times around each gate's
   * micro-batches. perfbench reports its per-run delta as
   * `stream.harness_ms`, so an operator regression inside a streaming entry
   * is separable from harness noise (feed materialization, query

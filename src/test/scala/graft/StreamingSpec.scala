@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, MicroBatchGate}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 
@@ -30,19 +30,11 @@ class StreamingSpec extends SparkSpec {
     val expected = EventStreams.hourlyByType(batchDf)
       .collect().map(_.toString).sorted.toSeq
 
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, Timestamp, String, Double)]
-    val stream = EventStreams.hourlyByType(
-      input.toDF().toDF("event_id", "ts", "event_type", "value"))
-    val q = EventStreams.startToMemory(stream, "hourly_test")
-    try {
-      input.addData(sample.take(3))
-      q.processAllAvailable()
-      input.addData(sample.drop(3))
-      q.processAllAvailable()
-      val got = spark.table("hourly_test").collect().map(_.toString).sorted.toSeq
-      assert(got == expected)
-    } finally q.stop()
+    val got = MicroBatchGate.run(spark, "hourly_test",
+        Seq(sample.take(3), sample.drop(3)), "complete")(input =>
+      EventStreams.hourlyByType(input.toDF("event_id", "ts", "event_type", "value")))
+      .collect().map(_.toString).sorted.toSeq
+    assert(got == expected)
   }
 
   test("a restarted query resumes from its checkpoint files with Spark's checksums") {
